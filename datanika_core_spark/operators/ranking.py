@@ -27,7 +27,7 @@ leading key with ties co-located, so for a total ordering key
 exactly ``rows in earlier buckets + local rank`` for ANY boundary
 placement — results are bit-identical to the single-partition form;
 only the plan changes. The machine pin in tests/test_plan_quality.py
-(tools/plan_signals_all.py ``gw`` signal) keeps every registry
+(tools/plan_audit.py ``global_window`` detector) keeps every registry
 workload on this path.
 
 Quantile (not equal-width) boundaries keep the buckets balanced

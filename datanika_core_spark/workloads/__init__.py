@@ -61,174 +61,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-#: The driver's correctness gate checks the first 50 registry entries
-#: per round. Rotation is AUTOMATIC (see load_all): workloads with a
-#: recorded CORRECTNESS_r*.json row sink below unrecorded ones, so
-#: every query accumulates a green row across rounds with no manual
-#: bookkeeping. This list only breaks ties WITHIN each group —
-#: newest additions first.
-CHECK_FIRST = [
-    # new in round 7 (session 3)
-    "link_prediction_adamic_adar", "graph_local_clustering",
-    "eval_decile_lift", "lm_kneser_ney_bigram",
-    "classifier_naive_bayes_source", "embedding_binary_sign_hamming",
-    "record_linkage_fellegi_sunter", "abtest_permutation_test",
-    "stats_equidepth_histogram", "gbdt_histogram_split",
-    "table_fingerprint_xor", "dedup_marginal_rate_by_batch",
-    "privacy_randomized_response", "events_out_of_order_depth",
-    "search_prf_rocchio", "shard_rebalance_hrw",
-    "feature_woe_iv_binning", "events_user_lifecycle",
-    "anomaly_histogram_density", "regression_ols_normal_eq",
-    "eval_brier_decomposition", "triplet_mining_semihard",
-    "quantile_confidence_interval", "fit_exponential_interarrival",
-    "multimodal_scene_segmentation", "trajectory_similarity_topk",
-    "text_sentiment_lexicon", "linkage_reciprocal_best",
-    "compaction_plan_advisor", "dedup_bcubed_cluster_eval",
-    "cluster_davies_bouldin", "lm_greedy_bigram_decode",
-    "uplift_qini_by_decile", "graph_harmonic_centrality",
-    "fit_zero_inflated_poisson", "timeseries_cross_correlation",
-    "corpus_heaps_law",
-    # new in round 7
-    "pca_top2_deflation", "calibration_isotonic_pav",
-    "bootstrap_ci_poisson", "abtest_cuped_readout",
-    "events_binseg_changepoint", "market_hhi_concentration",
-    "feature_target_encoding_oof", "multiple_testing_bh",
-    "attribution_shapley_coalitions", "markov_conversion_horizon",
-    "abtest_did_readout", "graph_eigenvector_centrality",
-    "forecast_pinball_eval", "privacy_dp_laplace_release",
-    "perplexity_bigram_interpolated", "join_order_advisor",
-    "coreset_kcenter_greedy", "select_max_coverage_greedy",
-    "events_stl_decomposition", "dist_wasserstein_1d_pairs",
-    "mixture_doremi_step", "causal_stratified_att",
-    "events_dispersion_index", "graph_degree_assortativity",
-    "ssl_label_propagation",
-    "zorder_skip_rate_sampled", "pca_top_component",
-    "heavy_hitters_misra_gries", "abtest_mann_whitney_u",
-    "source_divergence_jsd", "collocation_pmi_bigrams",
-    "drift_ks_two_period", "token_typo_pairs_fastss",
-    "privacy_t_closeness", "theil_sen_daily_trend",
-    "interval_overlap_supplier_transit", "keyword_textrank",
-    "events_twap_daily", "weighted_median_price_brand",
-    # new in round 6 (ex-rows-only iterative ops with fresh
-    # recursive-CTE oracles, + the round-6 additions)
-    "bpe_learned_merges", "unigram_lm_vocab",
-    "pq_reconstruction_error", "ann_ivfpq_adc_topk",
-    "hll_distinct_users_by_type", "dq_constraint_report",
-    "bpe_tokenize_corpus", "weighted_sample_aes_docs",
-    "privacy_l_diversity", "dq_profile_orders",
-    "pack_length_bucketed_batches", "eval_mrr_map_ranking",
-    "mi_lang_source", "join_size_estimate_cms", "shuffle_skew_advisor",
-    "survival_kaplan_meier", "audience_overlap_kmv",
-    "text_readability_lix", "mmr_diversified_topk", "graph_khop_reach",
-    "conformal_interval_events", "abtest_sprt_sequential",
-    "sample_neyman_allocation", "feature_infogain_label",
-    "dq_benford_first_digit",
-    # older additions (first recorded r3; re-sampled since)
-    "eval_auc_quality_model", "eval_calibration_quality_model",
-    "eval_centroid_confusion", "eval_centroid_class_metrics",
-    "rfm_segment_transitions", "attribution_time_decay",
-    "ngram_novelty_rate", "events_funnel_strict_windowed",
-    "eval_auc_histogram", "phrase_search_kway",
-    "corr_spearman_length_stopwords", "chi2_lang_source_independence",
-    "psi_event_value_drift", "hybrid_search_rrf",
-    "ann_truncated_dim_recall", "zipf_slope_terms",
-    "eval_ndcg_truncated_ranking", "cohort_ltv_orders",
-    "abc_part_classification", "window_function_battery",
-    "lateral_topk_per_group", "multimodal_shard_budget",
-    "events_concurrent_sessions", "privacy_k_anonymity",
-    "events_ewma_daily", "events_seasonal_naive_backtest",
-    "events_cusum_changepoint", "events_seasonality_strength",
-    "dedup_lsh_threshold_sweep", "events_holt_linear",
-    "ann_ivf_cell_purity", "corr_spearman_histogram",
-    "setops_all_variants",
-    # new in round 3 (second half)
-    "semdedup_embedding_prune", "bloom_dedup_incoming_batch",
-    "quality_classifier_hashed", "sample_weighted_priority",
-    "corpus_source_stats", "tfidf_topk_terms",
-    "perplexity_unigram_score", "token_entropy_filter",
-    "events_zscore_anomaly", "pagerank_event_transitions",
-    "multimodal_audio_features", "split_leakage_safe",
-    "contrastive_pairs_mined", "dedup_containment_fragments",
-    "entity_fuzzy_match", "table_diff_keyed",
-    "events_rolling_window_features", "corpus_data_card",
-    "pit_join_scd2_dim", "dedup_lsh_recall_eval",
-    "salted_join_revenue", "export_shard_manifest",
-    "ann_ivf_recall_eval", "events_resample_dense_hourly",
-    "events_mad_outliers", "events_conversion_latency",
-    "markov_next_event", "text_langid_confidence",
-    # still lacking a recorded CORRECTNESS row after r01+r02
-    "q14_promo_effect", "q15_top_supplier", "q16_part_supplier_counts",
-    "q17_small_qty_revenue", "q18_large_orders", "q19_disjunctive_revenue",
-    "q20_excess_stock_suppliers", "q21_sole_late_suppliers",
-    "q22_idle_customers", "knn_cosine_topk_vectorized",
-    "ann_ivf_cosine_nprobe", "embedding_quantize_int8",
-    # new in round 4
-    "pack_sequences_concat_chunk", "doc_chunk_sliding", "bm25_topk_docs",
-    "kmeans_lloyd_embeddings",
-    # round-3 additions whose r03 rows may not have landed
-    "q2_min_cost_supplier", "q4_order_priority", "q7_volume_shipping",
-    "q8_market_share", "q9_product_profit", "q11_important_parts",
-    "q12_delay_priority", "q13_customer_distribution",
-    "asof_join_click_purchase", "asof_join_tolerance_session",
-    "range_join_purchase_context", "knn_cosine_topk", "ann_ivf_cosine",
-    "embedding_near_dup_srp",
-    # new in round 5 (oracle-paired first; the rows-only iterative ops
-    # — bpe_learned_merges, pq_reconstruction_error, ann_ivfpq_adc_topk
-    # — are deliberately unlisted so oracle-backed rows land earlier)
-    "crawl_frontier_quota", "boilerplate_passage_removal",
-    "dedup_repeated_span_fraction", "length_percentile_filter",
-    "winsorize_event_values", "mixture_resample_uniform",
-    "bigram_lm_topk", "embedding_random_projection",
-    "kfold_assignment_balanced", "events_first_seen_users",
-    "session_path_trigrams", "unpivot_event_metrics",
-    "attribution_last_touch", "attribution_linear_multitouch",
-    "rfm_segments", "assoc_rules_session_pairs",
-    "cdc_final_state_orders", "events_value_histogram",
-    "cms_heavy_hitters_eval", "source_unigram_kl",
-    "phrase_search_positional", "quota_two_dim_prefilter",
-    "embedding_outlier_centroid_dist", "basket_part_pairs_orders",
-    "order_lead_time_profile", "events_day_over_day_change",
-    "corpus_gini_concentration", "multimodal_keyframe_select",
-    "phrase_search_threeway", "quota_greedy_per_source",
-    "quality_classifier_trained",
-    # new in round 7 (session 3) — LAST on purpose: the recorded-
-    # evidence backlog drains before net-new additions take window
-    # slots
-    "graph_triangle_doulion_multi_p", "quantile_tdigest_export",
-    "dedup_winnowing_df_capped", "zorder_file_skipping",
-    "eval_cohens_kappa_raters", "eval_rbo_rankings",
-    # new in round 8 — kept BELOW the recorded-evidence backlog so
-    # the 27 pending entries drain first (27 + these ≤ 50 window)
-    "stats_cramers_v", "stats_ljung_box", "abtest_group_sequential",
-    "bandit_ucb1_daily_choice", "eval_pass_at_k",
-    "interval_union_coverage", "quality_gopher_wordlevel",
-    "ccnet_perplexity_buckets", "curation_dsir_importance",
-    "text_keyphrase_rake", "pack_ffd_compaction",
-    "graph_kcore_bounded",
-    # round-8 session 2 — also below the backlog; 39 pending + these
-    # 10 = 49, inside the driver's 50-slot window with 1 slot spare
-    "stats_runs_test", "stats_hodges_lehmann", "survival_nelson_aalen",
-    "cohort_retention_triangle", "timeseries_hurst_exponent",
-    "drift_page_hinkley", "text_mattr_diversity",
-    "curation_dsir_kl_diagnostics", "stats_mann_kendall",
-    "sample_pps_ht_estimate",
-    # round 9 — unrecorded-first puts these at the head of the
-    # window; the remaining slots re-verify the stalest entries
-    "graph_coreness_ladder", "skyline_price_size_parts",
-    "events_value_lorenz_gini",
-    # round 11 — unrecorded-first already puts these at the head of
-    # the window; listed for deterministic tie-break order
-    "ivm_minmax_delete_repair", "linkage_sn_multipass",
-    "survival_logrank_ab", "attribution_markov_removal",
-    "preference_bradley_terry", "dedup_allpairs_cosine",
-    "hilbert_vs_zorder_skipping", "linkage_blocking_quality",
-    "linkage_sorted_neighborhood",
-    "graph_clique_ladder_sampled", "dedup_exact_substring_incremental",
-    "skyline4d_parts_price_size_popularity_suppliers",
-    "graph_ktruss_bounded",
-]
-
-
 def _recorded_names() -> dict[str, int]:
     """Workload names with a PASSING driver CORRECTNESS row (any
     round), mapped to the MOST RECENT round whose row passed. A row
@@ -307,14 +139,12 @@ def load_all() -> dict[str, Workload]:
     # Within the recorded group, STALEST EVIDENCE FIRST: entries whose
     # most recent passing row is oldest float to the top, so the
     # 50-slot window re-verifies the whole registry on a rolling
-    # ~|registry|/50-round cycle even when nothing is new. The manual
-    # CHECK_FIRST list breaks remaining ties (newest additions first);
-    # within each group the ordering is stable.
+    # ~|registry|/50-round cycle even when nothing is new. The sort is
+    # stable, so equal evidence keeps REGISTRY registration order.
     recorded = _recorded_names()
-    pri = {n: i for i, n in enumerate(CHECK_FIRST)}
 
     def sort_key(item):
         n = item[0]
-        return (n in recorded, recorded.get(n, 0), pri.get(n, len(pri)))
+        return (n in recorded, recorded.get(n, 0))
 
     return dict(sorted(REGISTRY.items(), key=sort_key))

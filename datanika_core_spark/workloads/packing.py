@@ -129,10 +129,10 @@ def doc_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioner samples its child plan, so tokenize + explode ran
     # TWICE. Sort the narrow (doc_id, text) frame first; the split,
     # explode and chunk arithmetic all sit ABOVE the Sort. Output
-    # order is preserved: Generate/Project are partition-local and
-    # row-order-preserving, the explode emits chunk_idx ascending per
-    # doc (sequence is ordered), and the input is range-sorted by
-    # doc_id — so rows still stream out in (doc_id, chunk_idx) order.
+    # order is cosmetic: rows usually come out in (doc_id, chunk_idx)
+    # order, but Spark does not promise that Generate/Project keep
+    # it. Correctness relies only on the order-insensitive oracle
+    # compare.
     docs = (
         t(spark, sf_dir, "documents")
         .select("doc_id", "text")

@@ -2,22 +2,13 @@
 joins — the 100 TB strategy for repeated fact-fact joins (README
 scale notes; SURVEY.md §4 partitioning)."""
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
 from datanika_core_spark.operators.writers import drop_table
 from datanika_core_spark.workloads import t
+from tools.plan_audit import plan_text
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain()
-    return buf.getvalue()
 
 
 def test_bucketed_join_is_shuffle_free(spark):
@@ -34,12 +25,10 @@ def test_bucketed_join_is_shuffle_free(spark):
      .saveAsTable("wl_bkt.lineitem_b"))
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         # force the sort-merge path so bucketing (not broadcast) is
-        # what eliminates the shuffle; AQE off for a stable plan dump
+        # what eliminates the shuffle
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
         joined = (
             spark.table("wl_bkt.orders_b").alias("o")
             .join(spark.table("wl_bkt.lineitem_b").alias("l"),
@@ -47,7 +36,8 @@ def test_bucketed_join_is_shuffle_free(spark):
             .groupBy("o.o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        plan = _plan(joined)
+        # the operator tree, before the per-node detail blocks
+        plan = plan_text(joined).split("\n\n")[0]
         # the join itself must read bucketed outputs directly: the
         # only Exchange allowed is the one for the final groupBy
         join_part = plan.split("HashAggregate")[-1]
@@ -65,4 +55,3 @@ def test_bucketed_join_is_shuffle_free(spark):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)

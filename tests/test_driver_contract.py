@@ -60,20 +60,6 @@ def test_entry_then_queries_no_cross_sf_leakage(spark):
         assert got_map[nation] == n_orders
 
 
-def test_check_first_names_all_exist_and_are_unique():
-    """A typo'd name in CHECK_FIRST silently vanishes from the
-    driver's 50-query check window (the ordering comprehension skips
-    unknown names) — pin every entry to a registered workload."""
-    from datanika_core_spark.workloads import CHECK_FIRST, load_all
-
-    reg = load_all()
-    missing = [n for n in CHECK_FIRST if n not in reg]
-    assert missing == []
-    assert len(CHECK_FIRST) == len(set(CHECK_FIRST))
-    # every workload in the priority window carries an oracle
-    assert all(reg[n].oracle for n in CHECK_FIRST)
-
-
 #: deliberately rows-only (none since round 6: the last four
 #: iterative workloads — BPE, unigram-LM, and the two PQ ops —
 #: gained DuckDB recursive-CTE oracles; their non-SQL reference
@@ -131,24 +117,20 @@ def test_auto_rotation_sinks_recorded_workloads(monkeypatch):
     assert set(first_unrecorded_block) == pool - {target}
 
 
-def test_auto_rotation_everything_recorded_uses_check_first(monkeypatch):
+def test_auto_rotation_equal_evidence_keeps_registration_order(
+    monkeypatch,
+):
     """When the evidence backlog is empty (all workloads recorded —
     the real repo state since round 6) and all evidence is equally
-    fresh, rotation degrades to pure CHECK_FIRST priority order:
-    newest additions lead the window."""
+    fresh, rotation is a no-op: the window follows REGISTRY
+    registration order (the sort is stable)."""
     import datanika_core_spark.workloads as w
 
     all_names = set(w.load_all())
     monkeypatch.setattr(
         w, "_recorded_names", lambda: {n: 1 for n in all_names}
     )
-    order = list(w.load_all())
-    pri = {n: i for i, n in enumerate(w.CHECK_FIRST)}
-    ranks = [pri.get(n, len(pri)) for n in order]
-    assert ranks == sorted(ranks)
-    # the head of the window is exactly the head of CHECK_FIRST
-    in_registry = [n for n in w.CHECK_FIRST if n in all_names]
-    assert order[: len(in_registry)] == in_registry
+    assert list(w.load_all()) == list(w.REGISTRY)
 
 
 def test_auto_rotation_stalest_evidence_first(monkeypatch):

@@ -198,13 +198,11 @@ def test_ivfpq_probe_partition_pruned(spark, vecs):
     """The probe's cid IN-list must reach the posting-list scan as a
     partition filter — unprobed lists are never read (the same
     plan assertion IVFIndexStore carries)."""
-    import contextlib
-    import io
-
     from pyspark.sql import functions as F
 
     from datanika_core_spark.operators.pq import IVFPQIndexStore
     from datanika_core_spark.operators.writers import drop_table
+    from tools.plan_audit import plan_text
 
     table = "t_ivfpq_prune"
     names = [table, f"{table}__pq_codebook", f"{table}__coarse",
@@ -220,10 +218,7 @@ def test_ivfpq_probe_partition_pruned(spark, vecs):
             for r in vecs.filter(F.col("vec_id") >= 198).collect()
         ]
         df = store.probe(q, topk=3, nprobe=1, shortlist=5)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        text = buf.getvalue()
+        text = plan_text(df)
         assert "PartitionFilters" in text
         # the partition filter must mention cid (the partition col)
         import re

@@ -115,7 +115,7 @@ def test_skewed_keys_stay_exact(spark):
 
 
 def test_primitives_pass_the_global_window_detector(spark, docs):
-    from tools.plan_signals_all import unbounded_global_windows
+    from tools.plan_audit import unbounded_global_windows
 
     for frame in (
         global_row_number(docs, ["n_chars", "doc_id"], "r"),

@@ -105,7 +105,7 @@ def test_plan_is_equi_join_only(spark):
     plan = sky._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    from tools.plan_signals_all import unbounded_global_windows
+    from tools.plan_audit import unbounded_global_windows
 
     assert unbounded_global_windows(sky) == 0
 

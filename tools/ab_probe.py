@@ -8,14 +8,12 @@ Usage:
 
 Timing uses the noop sink (guide §1.4) so the computation is timed,
 not the output write; jobs are labelled (guide §1.5). Plans are
-dumped with AQE off, matching tools/explain_audit.py (the static plan
-— runtime AQE can only improve on it).
+tools/plan_audit.py's plan_text: the AQE-off static plan (runtime AQE
+can only improve on it).
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 import time
@@ -51,6 +49,7 @@ def main() -> None:
     from datanika_core_spark.blocks import release_blocks
     from datanika_core_spark.session import build_spark
     from datanika_core_spark.workloads import load_all
+    from tools.plan_audit import aqe_off, plan_text
 
     spark = build_spark(app_name="ab_probe")
     registry = load_all()
@@ -61,16 +60,12 @@ def main() -> None:
     if plans_dir:
         out = Path(plans_dir)
         out.mkdir(parents=True, exist_ok=True)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
         for n in names:
-            df = registry[n].fn(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            (out / f"{n}_{suffix}.txt").write_text(buf.getvalue())
+            with aqe_off(spark):
+                text = plan_text(registry[n].fn(spark, sf_dir))
+            (out / f"{n}_{suffix}.txt").write_text(text)
             release_blocks(spark)
             print(f"wrote {out / f'{n}_{suffix}.txt'}")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     if reps:
         # warmup (JVM/codegen/Arrow spin-up, untimed)

@@ -9,6 +9,8 @@ Runs, in order:
 3. tools/check_correctness.py  (DuckDB-oracle sweep @ sf0.01)
 4. tools/check_types.py        (Arrow-level output-type parity)
 5. tools/verify_driver_contract.py (vanilla-session driver gate)
+6. tools/plan_audit.py         (registry plan sweep: fails on any
+                               cartesian or unbounded global window)
 
 BENCH RUNS FIRST — measured before anything heats the machine. The
 r9 battery ran bench last and recorded contention residue as
@@ -58,7 +60,7 @@ def main() -> int:
         ("type parity", [py, "tools/check_types.py"]),
         ("driver contract", [py, "tools/verify_driver_contract.py",
                              "/root/testdata/sf0.01"]),
-        ("plan signals", [py, "tools/plan_signals_all.py",
+        ("plan signals", [py, "tools/plan_audit.py",
                           "/root/testdata/sf0.01"]),
     ]
     results = [run(label, cmd) for label, cmd in stages]
