@@ -24,3 +24,9 @@ class UnsupportedOperation(EngineError):
 class DependencyNotSatisfied(EngineError):
     """An upstream dependency has no fresh SUCCESS run within its
     check window (reference: datanika/tasks/dependency_check.py:23-82)."""
+
+
+class DriverCollectTooLarge(EngineError):
+    """A driver-side collect met more rows than its declared bound
+    (``session.bounded_collect``): the frame is not the small readout
+    the code assumed, and collecting it would risk a driver OOM."""

@@ -174,6 +174,7 @@ class IVFIndexStore:
         lists = self.spark.table(self.table).filter(
             F.col("cid").isin(probe_cids)
         )
+        # bound: |queries| x nprobe rows, driver-built
         probed = lists.join(F.broadcast(qdf), "cid")
         sim = F.expr(_s_cos("qv", "v"))
         w = Window.partitionBy("query_id").orderBy(

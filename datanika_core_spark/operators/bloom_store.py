@@ -94,6 +94,7 @@ class BloomFilterStore:
             F.expr("shiftleft(1L, int(pmod(pos, 64)))").alias("bit"),
         )
         return (
+            # bound: m/64 bitset words, fixed by the filter size
             probes.join(F.broadcast(words), "word")
             .filter((F.col("bits").bitwiseAND(F.col("bit"))) == F.col("bit"))
             .groupBy(*keep_cols)

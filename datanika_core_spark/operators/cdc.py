@@ -93,6 +93,7 @@ def apply_cdc(
     n_del = deleted_keys.count()
     if n_del:
         remaining = spark.table(table).join(
+            # bound: delete keys of one change batch
             F.broadcast(deleted_keys), key, "left_anti"
         )
         # `remaining` READS the table it replaces — a direct

@@ -56,7 +56,7 @@ def batch_sketch(toks: DataFrame) -> DataFrame:
         F.col("id").cast("int").alias("d")
     )
     return (
-        toks.crossJoin(F.broadcast(depths))
+        toks.crossJoin(F.broadcast(depths))  # bound: _CMS_D rows
         .select("tok", "d")
         .withColumn("bucket", _bucket())
         .groupBy("d", "bucket")
@@ -133,6 +133,7 @@ class CMSSketchStore:
         )
         sketch = self.spark.table(self.table)
         return (
+            # bound: <= d x w counters, fixed by the sketch shape
             probes.join(F.broadcast(sketch), ["d", "bucket"], "left")
             .groupBy("tok")
             .agg(

@@ -75,7 +75,7 @@ def with_global_offset(
     )
     local_excl = F.coalesce(F.sum(value_col).over(w_local), F.lit(0))
     return (
-        part.join(F.broadcast(offsets), _PID)
+        part.join(F.broadcast(offsets), _PID)  # bound: <= n range partitions
         .withColumn(out_col, (F.col("__off") + local_excl).cast("bigint"))
         .drop(_PID, "__off")
     )

@@ -364,6 +364,7 @@ class IVFPQIndexStore:
             f" (x, c) -> (x - c) * (x - c)), 0d, (a, x) -> a + x)),"
             f" 0d, (a, x) -> a + x)"
         )
+        # bound: |queries| x nprobe rows, driver-built
         hits = lists.join(F.broadcast(qdf), "cid").select(
             "query_id", "qv", "vec_id", F.expr(adc).alias("adc_dist")
         )

@@ -186,7 +186,7 @@ def global_row_number(
     )
     offs = _count_offsets(local).drop(_CNT)
     return (
-        local.join(F.broadcast(offs), _PID)
+        local.join(F.broadcast(offs), _PID)  # bound: <= n_parts bucket rows
         .withColumn(alias, (F.col(_OFF) + F.col(_LRN)).cast("bigint"))
         .drop(_PID, _KEY, _LRN, _OFF)
     )
@@ -222,8 +222,9 @@ def global_ntile(
         + 1
     )
     return (
+        # bound: <= n_parts bucket rows
         local.join(F.broadcast(offs.drop(_CNT)), _PID)
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .withColumn(alias, tile.cast("int"))
         .drop(_PID, _KEY, _LRN, _OFF, _TOT)
     )
@@ -260,7 +261,7 @@ def global_prefix_sum(
         .otherwise(F.col(_OFF) + F.col(_RUN))
     )
     return (
-        local.join(F.broadcast(offs), _PID)
+        local.join(F.broadcast(offs), _PID)  # bound: <= n_parts bucket rows
         .withColumn(alias, combined)
         .drop(_PID, _KEY, _RUN, _OFF)
     )
@@ -308,7 +309,7 @@ def global_rank_prefix_sum(
         .otherwise(F.col("_gr_voff") + F.col(_RUN))
     )
     return (
-        local.join(F.broadcast(offs), _PID)
+        local.join(F.broadcast(offs), _PID)  # bound: <= n_parts bucket rows
         .withColumn(
             rank_alias, (F.col(_OFF) + F.col(_LRN)).cast("bigint")
         )
@@ -347,7 +348,7 @@ def global_prefix_min(
         .otherwise(F.least(F.col(_OFF), F.col(_RUN)))
     )
     return (
-        local.join(F.broadcast(offs), _PID)
+        local.join(F.broadcast(offs), _PID)  # bound: <= n_parts bucket rows
         .withColumn(alias, combined)
         .drop(_PID, _KEY, _RUN, _OFF)
     )
@@ -373,7 +374,7 @@ def global_prefix_max(
     )
     offs = totals.select(_PID, F.max(_CNT).over(woff).alias(_OFF))
     return (
-        local.join(F.broadcast(offs), _PID)
+        local.join(F.broadcast(offs), _PID)  # bound: <= n_parts bucket rows
         .withColumn(
             alias,
             F.when(F.col(_OFF).isNull(), F.col(_RUN))

@@ -147,6 +147,7 @@ def skyline_grid(
     live_df = spark.createDataFrame(
         [(c1, c2) for (c1, c2) in by_cell], f"{_C1} int, {_C2} int"
     )
+    # bound: <= G^2 live grid cells, driver-built
     cells = cells.join(F.broadcast(live_df), [_C1, _C2], "left_semi")
 
     def dom(ap: str, bp: str) -> Column:
@@ -183,6 +184,7 @@ def skyline_grid(
         ).select("ac1", "ac2", *[f"_b_{d}" for d in dims])
         # step 5: cross-cell merge — equi-join on the target cell id
         local = local.alias("ska").join(
+            # bound: skyline rows x cell pairs; plan changes without it
             F.broadcast(threats),
             (F.col(f"ska.{_C1}") == F.col("ac1"))
             & (F.col(f"ska.{_C2}") == F.col("ac2"))

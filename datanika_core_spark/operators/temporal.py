@@ -68,14 +68,15 @@ def asof_join(
     left's distinct keys — when the left is key-selective (a filtered
     cohort against a firehose history table) this keeps the dominant
     right side from riding through the union shuffle at all. The
-    distinct-key set is typically tiny → broadcast semi join, and
-    with AQE it stays map-side.
+    distinct-key set is typically small, so the planner broadcasts
+    the semi join while its estimate is under the threshold; it is
+    not hinted, because it grows with the left side's key domain.
     """
     on = list(on)
     right_cols = list(right_cols)
     if prune_right:
         right = right.join(
-            F.broadcast(left.select(*on).distinct()), on, "left_semi"
+            left.select(*on).distinct(), on, "left_semi"
         )
 
     payload = F.struct(

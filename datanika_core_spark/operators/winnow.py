@@ -123,6 +123,7 @@ class WinnowingFingerprintStore:
         if self.spark.catalog.tableExists(self.table):
             stored = self.spark.table(self.table)
             pairs = (
+                # bound: one micro-batch's fingerprints
                 F.broadcast(bfp).alias("n")
                 .join(stored.alias("o"), F.col("n.f") == F.col("o.f"))
                 .filter(F.col("n.doc_id") != F.col("o.doc_id"))
@@ -187,6 +188,7 @@ class WinnowingFingerprintStore:
         # the returned kept frame reads it)
         unpersist_rdd_ids(self.spark, ids_probe)
         rejected = sorted(r.doc_id for r in flagged.collect())
+        # bound: <= one micro-batch's doc ids
         kept = batch.join(F.broadcast(flagged), "doc_id", "left_anti")
         self.update(kept, text_col)
         return kept, rejected

@@ -23,6 +23,7 @@ from typing import Iterable, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datanika_core_spark.errors import DriverCollectTooLarge
 from datanika_core_spark.naming import to_snake_case, validate_identifier
 
 #: Tables every driver test-dataset directory contains (TESTDATA.md).
@@ -135,6 +136,20 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
             F.expr(f"cast(timestamp_micros({col} div 1000) as timestamp_ntz)"),
         )
     return df
+
+
+def bounded_collect(df: DataFrame, max_rows: int, what: str) -> list:
+    """``df.collect()`` for a frame the caller bounds by ``max_rows``
+    (a readout grid, a vocabulary). Collects ``limit(max_rows + 1)``,
+    so a frame past its bound costs at most ``max_rows + 1`` rows on
+    the driver and raises :class:`DriverCollectTooLarge` instead of
+    an OOM."""
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise DriverCollectTooLarge(
+            f"{what}: more than {max_rows} rows reached a driver collect"
+        )
+    return rows
 
 
 class EngineSession:

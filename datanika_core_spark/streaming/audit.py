@@ -141,7 +141,7 @@ class StreamBenfordMonitor:
         for d, p in _BENFORD.items():
             benford = F.when(F.col("digit") == d, F.lit(p)).otherwise(benford)
         return (
-            obs.crossJoin(F.broadcast(tot))
+            obs.crossJoin(F.broadcast(tot))  # bound: one row
             .select(
                 "digit",
                 "n_obs",
@@ -292,6 +292,7 @@ class StreamSPRTMonitor:
             .orderBy("ts", "event_id")
             .rowsBetween(_W.unboundedPreceding, _W.currentRow)
         )
+        # bound: two variant rows, driver-built
         walk = trials.join(F.broadcast(offs), "variant", "left").select(
             "variant",
             (F.coalesce(F.col("n0"), F.lit(0)) + F.row_number().over(
@@ -549,6 +550,7 @@ class StreamKSDriftMonitor:
             F.sum("nb").cast("bigint").alias("nbt"),
         )
         ks = (
+            # bound: <= |event_type| rows
             cum.join(F.broadcast(tot), "event_type")
             .groupBy("event_type")
             .agg(

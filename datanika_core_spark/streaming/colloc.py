@@ -155,7 +155,7 @@ class StreamCollocationMonitor:
             .withColumn("ty", F.split(F.col("bg"), " ").getItem(1))
             .join(ux, "tx")
             .join(uy, "ty")
-            .crossJoin(F.broadcast(tots))
+            .crossJoin(F.broadcast(tots))  # bound: one row
             .withColumn(
                 "ratio",
                 F.expr(

@@ -86,6 +86,7 @@ def _candidate_old_shingles(old_texts: DataFrame,
         F.col("doc_old").alias("doc_id")
     ).distinct()
     pruned = old_texts.join(
+        # bound: band-collision candidates of one micro-batch
         F.broadcast(cand_old_ids), "doc_id", "left_semi"
     )
     return with_shingles(pruned).select(
@@ -149,6 +150,7 @@ def stream_curate(
                 spark.table(store.table), store.b, store.r
             )
             cand = (
+                # bound: one micro-batch's band keys
                 F.broadcast(batch_bands).alias("n")
                 .join(
                     store_bands.alias("o"),
@@ -222,6 +224,7 @@ def stream_curate(
         stats.rejected_ids.extend(rejected)
 
         kept = clean.join(
+            # bound: <= one micro-batch's doc ids
             F.broadcast(rejected_df.withColumnRenamed("doc_new", "doc_id")),
             "doc_id",
             "left_anti",

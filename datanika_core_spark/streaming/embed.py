@@ -83,6 +83,7 @@ def stream_embed_ingest(
         if spark.catalog.tableExists(store.table):
             lists = spark.table(store.table)
             dup_sets.append(
+                # bound: one micro-batch
                 lists.join(F.broadcast(new_side), "cid")
                 # a replayed file re-delivers vec_ids already in the
                 # store; they'd match THEMSELVES at cosine 1.0 —
@@ -114,6 +115,7 @@ def stream_embed_ingest(
         stats.rejected_ids.extend(rejected)
 
         survivors = assigned.select("vec_id", "v").join(
+            # bound: <= one micro-batch's vec ids
             F.broadcast(dups_df.withColumnRenamed("new_id", "vec_id")),
             "vec_id",
             "left_anti",

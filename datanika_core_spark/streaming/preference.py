@@ -89,7 +89,7 @@ class StreamPreferenceStore:
             return  # redelivered batch — grid already folded
         delta = (
             batch.join(
-                F.broadcast(self.part_dim),
+                self.part_dim,
                 F.col("p_partkey") == F.col("l_partkey"),
             )
             .groupBy(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datanika_core_spark.session import bounded_collect
 from datanika_core_spark.workloads import t, workload
 
 # --------------------------------------------------------------------------
@@ -283,8 +284,9 @@ def assoc_rules_session_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("consequent"), F.col("cnt").alias("c_cnt")
     )
     return (
+        # bound: <= |event_type| rows
         pair_counts.join(F.broadcast(ia), "antecedent")
-        .join(F.broadcast(ic), "consequent")
+        .join(F.broadcast(ic), "consequent")  # bound: <= |event_type| rows
         .select(
             "antecedent",
             "consequent",
@@ -1039,7 +1041,12 @@ def attribution_markov_removal(
     edges = raw_edges.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("bigint").alias("w")
     )
-    rows = edges.collect()  # |states|² grid — sketch-sized
+    # the same event-type state grid bound as the graph workloads
+    # (imported here: a module-level import would register graph's
+    # workloads first and reorder the registry)
+    from datanika_core_spark.workloads.graph import GRID_MAX_EDGES
+
+    rows = bounded_collect(edges, GRID_MAX_EDGES, "attribution state grid")
     wmap: dict[str, dict[str, int]] = {}
     states: set[str] = set()
     for r in rows:

@@ -96,9 +96,11 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc (self-matches excluded), with hit counts and the lowest
     matching benchmark id.
 
-    Plan shape: benchmark shingle hashes (distinct, tiny) broadcast;
-    the exploded corpus shingles hash-join against them map-side; the
-    only shuffle is the final groupBy over collision rows."""
+    Plan shape: benchmark shingle hashes (distinct, small) broadcast
+    while under the planner's threshold — a 1-in-40 doc sample, so
+    unhinted; the exploded corpus shingles hash-join against them
+    map-side; the only shuffle is the final groupBy over collision
+    rows."""
     docs = _norm_docs(spark, sf_dir).select("doc_id", "text")
     toks = F.split("text", r"\s+")
     leaks = docs.filter(F.col("doc_id") % _BENCH_MOD == 0).select(
@@ -126,7 +128,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     corpus_sh = shingle_hashes(corpus)
-    hits = corpus_sh.join(F.broadcast(bench_sh), "sh").filter(
+    hits = corpus_sh.join(bench_sh, "sh").filter(
         F.col("doc_id") != F.col("bench_id")
     )
     return (

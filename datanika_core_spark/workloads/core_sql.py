@@ -88,8 +88,9 @@ LIMIT 10
 """,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """customer⋈orders⋈lineitem with top-k. customer is broadcast
-    (dim); orders⋈lineitem shuffles on orderkey; top-10 is a global
+    """customer⋈orders⋈lineitem with top-k. customer (dim) broadcasts
+    while under the planner's threshold; orders⋈lineitem shuffles on
+    orderkey; top-10 is a global
     TakeOrdered, no full sort."""
     cust = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = t(spark, sf_dir, "orders").filter(
@@ -100,7 +101,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
             F.round(
@@ -138,8 +139,9 @@ ORDER BY revenue DESC, n_name
 """,
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star join: every dimension (supplier/nation/region/customer)
-    broadcast against the lineitem⋈orders fact join."""
+    """Star join: the dimensions (supplier/nation/region/customer)
+    join the lineitem⋈orders fact join; the planner broadcasts each
+    while its size estimate is under the broadcast threshold."""
     cust = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -151,14 +153,14 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .join(
-            F.broadcast(supp),
+            supp,
             (li.l_suppkey == supp.s_suppkey)
             & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(
             F.round(
@@ -239,8 +241,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = t(spark, sf_dir, "nation")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
             F.round(
@@ -1265,7 +1267,7 @@ def shuffle_skew_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = c.orderBy(F.col("cnt").desc(), "event_type").limit(5)
     return (
-        top.crossJoin(F.broadcast(g))
+        top.crossJoin(g)
         .select(
             "event_type",
             "cnt",

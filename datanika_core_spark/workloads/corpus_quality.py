@@ -883,8 +883,8 @@ def source_divergence_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand = glob.agg(F.sum("g").cast("bigint").alias("n"))
     terms = (
         cnts.join(glob, "tok")
-        .join(F.broadcast(tots), "source")
-        .crossJoin(F.broadcast(grand))
+        .join(F.broadcast(tots), "source")  # bound: <= |source| rows
+        .crossJoin(grand)
         .select(
             "source",
             (F.col("c") * 1.0 / F.col("tot")).alias("p"),
@@ -905,7 +905,7 @@ def source_divergence_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math as _m
 
     return (
-        per_source.join(F.broadcast(tots), "source")
+        per_source.join(F.broadcast(tots), "source")  # bound: <= |source| rows
         .select(
             "source",
             F.col("tot").alias("n_tokens"),
@@ -1032,7 +1032,7 @@ def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ty", F.split(F.col("bg"), " ").getItem(1))
         .join(ux, "tx")
         .join(uy, "ty")
-        .crossJoin(F.broadcast(tots))
+        .crossJoin(tots)
         .withColumn(
             "ratio",
             F.expr(
@@ -1180,7 +1180,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     classes = cls.select("event_type", "day").distinct()
     grid = (
-        classes.crossJoin(F.broadcast(levels))
+        classes.crossJoin(levels)
         .join(cls, ["event_type", "day", "lvl"], "left")
         .select(
             "event_type", "day", "lvl",
@@ -1194,7 +1194,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("lvl")
         .rowsBetween(_W.unboundedPreceding, _W.currentRow)
     )
-    pre = grid.join(F.broadcast(glob), "lvl").select(
+    pre = grid.join(F.broadcast(glob), "lvl").select(  # bound: <= |lvl| rows
         "event_type", "day",
         F.sum("n").over(w).cast("bigint").alias("cum_c"),
         F.sum("g").over(w).cast("bigint").alias("cum_g"),
@@ -1204,7 +1204,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emd = (
         pre.join(nc, ["event_type", "day"])
-        .crossJoin(F.broadcast(big_n))
+        .crossJoin(big_n)
         .groupBy("event_type", "day")
         .agg(
             F.max("n_c").alias("n_c"),
@@ -1216,7 +1216,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("emd_num"),
         )
     )
-    flagged = emd.crossJoin(F.broadcast(big_n)).select(
+    flagged = emd.crossJoin(big_n).select(
         "n_c",
         (
             F.col("emd_num") * _TC_T_DEN
@@ -1567,7 +1567,7 @@ def corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_docs"),
     )
     vg = (
-        F.broadcast(pts)
+        pts
         .join(firstr, F.col("first_r") <= F.col("n_docs"))
         .groupBy("decile", "n_docs")
         .agg(F.count(F.lit(1)).cast("bigint").alias("vocab"))
@@ -1591,7 +1591,7 @@ def corpus_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .replace("sx * sx", "sx div 10000 * (sx div 10000)")
     )
     return (
-        lg.crossJoin(F.broadcast(mom))
+        lg.crossJoin(mom)
         .select(
             "decile", "n_docs", "vocab",
             F.round(beta, 6).alias("heaps_beta"),
@@ -1710,7 +1710,7 @@ def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("term").cast("bigint").alias("n_types")
     )
     return (
-        per_doc.join(F.broadcast(lang_types), "lang")
+        per_doc.join(F.broadcast(lang_types), "lang")  # bound: <= |lang| rows
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -208,23 +208,16 @@ FROM (
               '\\s+', ' ', 'g')) AS clean
   FROM documents
 )
-ORDER BY doc_id
 """,
 )
 def text_normalize_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization pass for training text: lowercase, scrub URLs
     and control characters, collapse whitespace — regexp expressions
     only (codegen, no UDF, no shuffle). Returns length deltas and a
-    40-char head as the cleaning audit."""
-    # SORT-FIRST (r12, the r11 rule): the final orderBy's range
-    # partitioner samples its child plan, so the 3-stage regexp scrub
-    # below the sort ran TWICE per row. Sort the narrow (doc_id,
-    # text) frame first; all regexp work is projected ABOVE the Sort
-    # (Project over Sort preserves order — same argument as
-    # quality_classifier_hashed).
-    docs = t(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    ).orderBy("doc_id")
+    40-char head as the cleaning audit. Unordered: there is no
+    LIMIT, and a global sort would shuffle the whole text column
+    (plus a range-sampling pass) for an order nothing consumes."""
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     clean = F.trim(
         F.regexp_replace(
             F.regexp_replace(
@@ -298,6 +291,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components(pairs)
     corpus = _corpus_neardup(spark, sf_dir).select("doc_id")
     assigned = (
+        # bound: near-dup cluster members; plan changes without it
         corpus.join(F.broadcast(cc), "doc_id", "left")
         .withColumn("canonical_id",
                     F.coalesce(F.col("canonical_id"), F.col("doc_id")))
@@ -388,7 +382,7 @@ def contrastive_pairs_mined(spark: SparkSession, sf_dir: str) -> DataFrame:
     js = spark.range(_NEG_K).select(F.col("id").alias("j"))
     cand = (
         pairs.selectExpr("doc_a AS anchor", "doc_b AS positive")
-        .join(F.broadcast(js))
+        .join(js)
         .withColumn(
             "neg_pos",
             F.expr(_spark_hash(
@@ -402,7 +396,9 @@ def contrastive_pairs_mined(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.join(idx, cand.neg_pos == idx.pos)
         .withColumnRenamed("doc_id", "negative")
+        # bound: near-dup cluster members; plan changes without it
         .join(F.broadcast(ka), "anchor", "left")
+        # bound: near-dup cluster members; plan changes without it
         .join(F.broadcast(kn), "negative", "left")
         .filter(
             F.coalesce(F.col("n_canon"), F.col("negative"))
@@ -464,7 +460,7 @@ def kfold_assignment_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_label")
     )
     return (
-        folds.join(F.broadcast(per_label), "label")
+        folds.join(F.broadcast(per_label), "label")  # bound: <= |label| rows
         .groupBy("label", "fold")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -719,7 +715,7 @@ def sample_systematic_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = w.agg(F.sum("weight").cast("bigint").alias("total"))
     cum = global_prefix_sum(w, ["doc_id"], "weight", "c").crossJoin(
-        F.broadcast(tot)
+        tot
     )
     # `div` is true integral division — a double `/` then cast can
     # flip the floor by a half-ulp once c*n nears 2^53 and silently
@@ -890,7 +886,7 @@ def feature_target_encoding_oof(
     nat = t(spark, sf_dir, "nation")
     base = (
         ords.join(cust, ords.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
+        .join(nat, cust.c_nationkey == nat.n_nationkey)
         .select(
             F.col("n_name").alias("nation"),
             (
@@ -1049,6 +1045,7 @@ def select_max_coverage_greedy(
             )
         else:
             gains = (
+                # bound: shingles of <= _MCG_K picked docs
                 ds.join(F.broadcast(covered), "sh", "left_anti")
                 .groupBy("doc_id")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("gain"))
@@ -1434,7 +1431,7 @@ def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     docw = (
-        tok.join(F.broadcast(lr), "b")
+        tok.join(F.broadcast(lr), "b")  # bound: <= _DSIR_B bucket rows
         .groupBy("doc_id", "lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tok"),
@@ -1574,12 +1571,13 @@ def curation_dsir_kl_diagnostics(
         F.count(F.lit(1)).cast("bigint").alias("cs")
     )
     grid = srcs.crossJoin(
-        F.broadcast(spark.range(B).select(F.col("id").alias("b")))
+        spark.range(B).select(F.col("id").alias("b"))
     )
     cell = (
+        # bound: <= |source| x _DSIR_B rows
         grid.join(F.broadcast(sb), ["source", "b"], "left")
-        .join(F.broadcast(tgt), "b", "left")
-        .crossJoin(F.broadcast(nt))
+        .join(F.broadcast(tgt), "b", "left")  # bound: <= _DSIR_B bucket rows
+        .crossJoin(nt)
         .select(
             "source", "ns",
             (
@@ -1709,7 +1707,7 @@ def sample_pps_ht_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tot = w.agg(F.sum("weight").cast("bigint").alias("total"))
     cum = global_prefix_sum(w, ["doc_id"], "weight", "c").crossJoin(
-        F.broadcast(tot)
+        tot
     )
     hi = F.expr(f"(c * {_PPS_N}) div total")
     lo = F.expr(f"((c - weight) * {_PPS_N}) div total")
@@ -1739,7 +1737,7 @@ def sample_pps_ht_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("tok_u").alias("tok_us"),
         F.sum("doc_u").alias("doc_us"),
     )
-    return est.crossJoin(F.broadcast(truth)).select(
+    return est.crossJoin(truth).select(
         "n_sample",
         "true_tokens",
         F.round(F.col("tok_us") / u, 2).alias("ht_tokens"),

@@ -351,7 +351,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d, p in _BENFORD.items():
         benford = F.when(F.col("digit") == d, F.lit(p)).otherwise(benford)
     return (
-        obs.crossJoin(F.broadcast(tot))
+        obs.crossJoin(tot)
         .select(
             "digit",
             "n_obs",

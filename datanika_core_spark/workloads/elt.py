@@ -427,7 +427,7 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def leg(a: DataFrame, b: DataFrame) -> DataFrame:
         return (
-            a.join(F.broadcast(b), F.col("o_custkey") == F.col("c_custkey"))
+            a.join(b, F.col("o_custkey") == F.col("c_custkey"))
             .groupBy(F.col("c_nationkey").alias("nationkey"))
             .agg(F.count(F.lit(1)).alias("n"), cents)
         )
@@ -555,6 +555,7 @@ def ivm_minmax_delete_repair(
     # rows (left-semi prune before the scan-side aggregate)
     rescanned = agg(
         survivors.join(
+            # bound: <= |event_type| x |days| groups
             F.broadcast(needs_rescan.select("event_type", "day")),
             ["event_type", "day"],
             "left_semi",

@@ -376,10 +376,11 @@ def eval_centroid_class_metrics(
     )
     m = (
         per_true.join(
-            F.broadcast(per_pred),
+            F.broadcast(per_pred),  # bound: <= |label| rows
             per_true.label == per_pred.plbl,
             "left",
         )
+        # bound: <= |label| rows
         .join(F.broadcast(tp.withColumnRenamed("label", "tlbl")),
               per_true.label == F.col("tlbl"), "left")
         .select(
@@ -753,7 +754,7 @@ def drift_ks_two_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     span = ev.agg(
         F.expr("(min(d) + max(d) + 1) div 2").alias("mid")
     )
-    tagged = ev.crossJoin(F.broadcast(span)).select(
+    tagged = ev.crossJoin(span).select(
         "event_type", "c",
         F.when(F.col("d") < F.col("mid"), 0).otherwise(1).alias("p"),
     )
@@ -778,7 +779,7 @@ def drift_ks_two_period(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nb").cast("bigint").alias("nbt"),
     )
     ks = (
-        cum.join(F.broadcast(tot), "event_type")
+        cum.join(F.broadcast(tot), "event_type")  # bound: <= |event_type| rows
         .groupBy("event_type")
         .agg(
             F.max(
@@ -1036,7 +1037,7 @@ def eval_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         _W.unboundedPreceding, _W.currentRow
     )
     return (
-        per.crossJoin(F.broadcast(tot))
+        per.crossJoin(tot)
         .select(
             "decile", "n", "n_pos",
             F.round(F.col("n_pos") * 1.0 / F.col("n"), 6)
@@ -1175,15 +1176,11 @@ def eval_brier_decomposition(
             F.sum("sy").cast("bigint").alias("syt"),
         )
         .crossJoin(
-            F.broadcast(
-                perdoc.agg(
-                    F.sum("sq_units").cast("bigint").alias("sqt")
-                )
-            )
+            perdoc.agg(F.sum("sq_units").cast("bigint").alias("sqt"))
         )
     )
     terms = (
-        bins.crossJoin(F.broadcast(glob))
+        bins.crossJoin(glob)
         .agg(
             F.sum(F.expr(_BRIER_REL)).cast("bigint").alias("rel_u"),
             F.sum(F.expr(_BRIER_RES)).cast("bigint").alias("res_u"),
@@ -1194,7 +1191,7 @@ def eval_brier_decomposition(
     rel = F.col("rel_u") * 1.0 / F.col("nt") / _BRIER_UNIT
     res = F.col("res_u") * 1.0 / F.col("nt") / _BRIER_UNIT
     unc = base * (1.0 - base)
-    return glob.crossJoin(F.broadcast(terms)).select(
+    return glob.crossJoin(terms).select(
         F.col("nt").alias("n_docs"),
         F.round(brier, 6).alias("brier"),
         F.round(rel, 6).alias("reliability"),
@@ -1434,10 +1431,10 @@ def bt_strengths(spark: SparkSession, bq: DataFrame) -> DataFrame:
     for _ in range(_BT_ITERS):
         raw = (
             nij.join(
-                F.broadcast(p.select("i", "p")), "i"
+                F.broadcast(p.select("i", "p")), "i"  # bound: <= |brand| rows
             )
             .join(
-                F.broadcast(
+                F.broadcast(  # bound: <= |brand| rows
                     p.select(F.col("i").alias("j"),
                              F.col("p").alias("pj"))
                 ),
@@ -1449,12 +1446,12 @@ def bt_strengths(spark: SparkSession, bq: DataFrame) -> DataFrame:
                  / F.sum(F.col("n") / (F.col("p") + F.col("pj"))))
                 .alias("inv_s")
             )
-            .join(F.broadcast(wins), "i")
+            .join(wins, "i")
             .select("i", (F.col("w") * F.col("inv_s")).alias("p"))
         )
         raw = roll(raw)
         tot = raw.agg(F.sum("p").alias("tot"))
-        p = raw.crossJoin(F.broadcast(tot)).select(
+        p = raw.crossJoin(tot).select(
             "i", (F.col("p") / F.col("tot")).alias("p")
         )
     comps = nij.groupBy("i").agg(F.sum("n").alias("comparisons"))

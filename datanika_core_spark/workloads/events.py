@@ -313,6 +313,7 @@ def events_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s2") * F.lit(1.0) / F.col("days") - mean * mean
     )
     return (
+        # bound: <= |event_type| rows
         daily.join(F.broadcast(stats), "event_type")
         .filter(F.abs(z) > 2.0)
         .select("event_type", "day", "n", F.round(z, 6).alias("z"))
@@ -409,7 +410,7 @@ def events_resample_dense_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     types = ev.select("event_type").distinct()
     grid = (
-        types.join(F.broadcast(bounds))
+        types.join(bounds)
         .select(
             "event_type",
             F.explode(
@@ -483,14 +484,16 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(n, 0.5)").alias("median_n")
     )
     mad = (
+        # bound: <= |event_type| rows
         daily.join(F.broadcast(med), "event_type")
         .groupBy("event_type")
         .agg(F.expr("percentile(abs(n - median_n), 0.5)").alias("mad_n"))
     )
     rz = F.abs(F.col("n") - F.col("median_n")) / (1.4826 * F.col("mad_n"))
     return (
+        # bound: <= |event_type| rows
         daily.join(F.broadcast(med), "event_type")
-        .join(F.broadcast(mad), "event_type")
+        .join(F.broadcast(mad), "event_type")  # bound: <= |event_type| rows
         .filter(rz > 2.0)
         .select("event_type", "day", "n", F.round(rz, 6).alias("robust_z"))
         .orderBy("event_type", "day")
@@ -756,6 +759,7 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_HIST_BINS - 1),
     )
     return (
+        # bound: <= |event_type| rows
         ev.join(F.broadcast(bounds), "event_type")
         .select(
             "event_type",
@@ -1216,7 +1220,7 @@ def events_concurrency_time_weighted(
     wpick = Window.partitionBy("pct").orderBy("level")
     pick = (
         cdf.join(
-            F.broadcast(pcts),
+            F.broadcast(pcts),  # bound: 3 literal rows
             F.col("cum") * 100 >= F.col("pct") * F.col("total"),
         )
         .withColumn("rn", F.row_number().over(wpick))
@@ -1248,7 +1252,7 @@ def _censored_risk_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ts").cast("date").alias("last_d"),
     )
     wend = ev.agg(F.max("ts").cast("date").alias("wend"))
-    life = span.crossJoin(F.broadcast(wend)).select(
+    life = span.crossJoin(wend).select(
         F.datediff("last_d", "first_d").cast("bigint").alias("t"),
         F.when(
             F.datediff("wend", "last_d") < _KM_CENSOR_DAYS, 1
@@ -1580,7 +1584,7 @@ def events_out_of_order_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         _W.unboundedPreceding, _W.currentRow
     )
     return (
-        hist.crossJoin(F.broadcast(tot))
+        hist.crossJoin(tot)
         .select(
             "bucket_min", "n_events",
             F.round(F.col("n_events") * 1.0 / F.col("n"), 6).alias("share"),
@@ -1699,7 +1703,7 @@ def events_user_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("n_resurrected"),
     )
     churn = (
-        lagged.crossJoin(F.broadcast(minmax.select("mw")))
+        lagged.crossJoin(minmax.select("mw"))
         .filter(
             (F.col("nxt").isNull() | (F.col("nxt") > F.col("week") + 1))
             & (F.col("week") + 1 <= F.col("mw"))
@@ -1709,7 +1713,7 @@ def events_user_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         acts.join(churn, "week", "left")
-        .crossJoin(F.broadcast(minmax.select("w0")))
+        .crossJoin(minmax.select("w0"))
         .select(
             (F.col("week") - F.col("w0")).cast("bigint").alias("week_idx"),
             "n_new", "n_retained", "n_resurrected",
@@ -1890,7 +1894,7 @@ def cohort_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `div` is true integral division (docs/NEXT.md cast rule: never
     # round-trip a result-path integer through a double)
     dd = (
-        ev.crossJoin(F.broadcast(origin))
+        ev.crossJoin(origin)
         .select(
             "user_id",
             F.datediff(F.col("ts").cast("date"), F.col("d0"))
@@ -1918,7 +1922,7 @@ def cohort_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
              .alias("active_users"))
     )
     return (
-        tri.join(F.broadcast(sizes), "cohort_week")
+        tri.join(F.broadcast(sizes), "cohort_week")  # bound: <= |weeks| rows
         .select(
             "cohort_week", "age_week", "cohort_users", "active_users",
             F.round(
@@ -2014,7 +2018,7 @@ def events_value_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("r").cast("decimal(38,0)") * F.col("c"))
             .alias("w")
         )
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             (
                 (
@@ -2028,7 +2032,7 @@ def events_value_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries = (
         spark.range(1, 11)
         .select(F.col("id").cast("bigint").alias("decile"))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "decile",
             F.greatest(
@@ -2039,10 +2043,10 @@ def events_value_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cum.join(
-            F.broadcast(boundaries),
+            boundaries,
             cum["r"] == boundaries["boundary_rank"],
         )
-        .crossJoin(F.broadcast(gini))
+        .crossJoin(gini)
         .select(
             "decile",
             "boundary_rank",
@@ -2159,7 +2163,7 @@ def survival_logrank_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("ts").cast("date").alias("last_d"),
     )
     wend = ev.agg(F.max("ts").cast("date").alias("wend"))
-    life = span.crossJoin(F.broadcast(wend)).select(
+    life = span.crossJoin(wend).select(
         F.expr(
             "pmod("
             + spark_hash_expr("concat('lr-', cast(user_id as string))")
@@ -2174,7 +2178,7 @@ def survival_logrank_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = life.select("t").distinct()
     sides = spark.range(2).select(F.col("id").cast("bigint").alias("grp"))
     cnt = (
-        grid.crossJoin(F.broadcast(sides))
+        grid.crossJoin(sides)
         .join(life, ["t", "grp"], "left")
         .groupBy("t", "grp")
         .agg(
@@ -2191,6 +2195,7 @@ def survival_logrank_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("grp").orderBy("t")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    # bound: 2 rows (pmod 2 groups)
     risk = cnt.join(F.broadcast(totals), "grp").select(
         "t", "grp", "d", "c",
         (

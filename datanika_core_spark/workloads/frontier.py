@@ -356,7 +356,7 @@ def length_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(n_toks, 0.95)").alias("p95"),
     )
     return (
-        lens.join(F.broadcast(bands), "lang")
+        lens.join(F.broadcast(bands), "lang")  # bound: <= |lang| rows
         .groupBy("lang", "p05", "p95")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -433,6 +433,7 @@ def winsorize_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value") < F.col("p01")) | (F.col("value") > F.col("p99"))
     ).cast("int")
     return (
+        # bound: <= |event_type| rows
         events.join(F.broadcast(bands), "event_type")
         .groupBy("event_type")
         .agg(
@@ -494,7 +495,7 @@ def mixture_resample_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation (a full corpus scan each time); cached, the
     # sources×1-row table is computed once. Tiny (one row per
     # source), so this holds at 100 TB.
-    rates = counts.crossJoin(F.broadcast(floor_n)).select(
+    rates = counts.crossJoin(floor_n).select(
         "source",
         "n",
         (F.col("floor_n") * F.lit(1000000.0) / F.col("n"))
@@ -503,7 +504,7 @@ def mixture_resample_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("floor_n") * F.lit(1.0) / F.col("n")).alias("keep_rate"),
     ).cache()
     kept = (
-        docs.join(F.broadcast(rates), "source")
+        docs.join(F.broadcast(rates), "source")  # bound: <= |source| rows
         .filter(
             F.expr(_spark_hash("concat('mix-', cast(doc_id as string))"))
             % 1000000
@@ -513,6 +514,7 @@ def mixture_resample_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_kept"))
     )
     return (
+        # bound: <= |source| rows
         rates.join(F.broadcast(kept), "source", "left")
         .select(
             "source",
@@ -1132,7 +1134,7 @@ def mixture_resample_temperature(
         F.expr("CAST(sum(n) div 2 AS BIGINT)").alias("budget"),
     )
     quota = (
-        w.crossJoin(F.broadcast(tot))
+        w.crossJoin(tot)
         .select(
             "source", "n", "wi",
             F.least(
@@ -1146,7 +1148,7 @@ def mixture_resample_temperature(
         .cache()  # feeds the keep-filter join AND the final report
     )
     kept = (
-        docs.join(F.broadcast(quota), "source")
+        docs.join(F.broadcast(quota), "source")  # bound: <= |source| rows
         .filter(
             F.expr(_spark_hash("concat('mixT-', cast(doc_id as string))"))
             % 1000000
@@ -1156,6 +1158,7 @@ def mixture_resample_temperature(
         .agg(F.count(F.lit(1)).alias("n_kept"))
     )
     return (
+        # bound: <= |source| rows
         quota.join(F.broadcast(kept), "source", "left")
         .select(
             "source",
@@ -1310,17 +1313,19 @@ def keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     roll = RollingCheckpoint(spark)
     for it in range(_TR_PR_ITERS):
         dang = (
-            pr.join(F.broadcast(no_out), "node", "left_semi")
+            pr.join(no_out, "node", "left_semi")
             .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dmass"))
         )
         contrib = (
+            # bound: token vocabulary; plan changes without it
             ew.join(F.broadcast(pr), ew.src == pr.node)
             .groupBy("dst")
             .agg(F.sum(F.col("pr") * F.col("w") / F.col("total_w"))
                  .alias("c"))
         )
         pr = (
-            nodes.join(F.broadcast(dang))
+            nodes.join(dang)
+            # bound: token vocabulary; plan changes without it
             .join(F.broadcast(contrib), nodes.node == contrib.dst, "left")
             .select(
                 "node",
@@ -1481,7 +1486,7 @@ def perplexity_bigram_interpolated(
         te_bg.join(tr_bg, ["x", "y"], "left")
         .join(ux, "x", "left")
         .join(uy, "y", "left")
-        .crossJoin(F.broadcast(tr_tot))
+        .crossJoin(tr_tot)
         .select(
             "lang",
             F.col("c1y").isNull().alias("oov"),
@@ -1607,7 +1612,7 @@ def mixture_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cnt.agg(F.sum("c").cast("bigint").alias("n"))
     per_src = (
         tok.join(cnt, "term")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tok"),
@@ -1619,7 +1624,7 @@ def mixture_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     allt = per_src.agg(F.sum("n_tok").alias("ntot"))
-    scored = per_src.crossJoin(F.broadcast(allt)).select(
+    scored = per_src.crossJoin(allt).select(
         "source", "n_tok",
         (
             -(F.col("lp_units") * 1.0 / _DRM_UNIT) / F.col("n_tok")
@@ -1636,7 +1641,7 @@ def mixture_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     norm = stepped.agg(F.sum("wu").cast("bigint").alias("z"))
     return (
-        stepped.crossJoin(F.broadcast(norm))
+        stepped.crossJoin(norm)
         .select(
             "source",
             F.col("n_tok").alias("n_tokens"),
@@ -1795,7 +1800,7 @@ def lm_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         te_bg.join(tr_bg, ["x", "y"], "left")
         .join(ctx, "x", "left")
         .join(cont, "y", "left")
-        .crossJoin(F.broadcast(btot))
+        .crossJoin(btot)
         .select(
             "lang",
             F.col("n1y").isNull().alias("oov"),

@@ -32,11 +32,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datanika_core_spark.blocks import RollingCheckpoint
+from datanika_core_spark.session import bounded_collect
 from datanika_core_spark.workloads import t, workload
 
 _PR_D = 0.85     # damping
 _PR_ITERS = 3
 _PR_GAP_MIN = 30
+#: driver-collect bounds of the event-type state grids (PageRank,
+#: conversion horizon, removal attribution): states are the
+#: event-type vocabulary, edges at most its square
+GRID_MAX_STATES = 1_000
+GRID_MAX_EDGES = GRID_MAX_STATES ** 2
 
 
 def _o_pr_iter(prev: str, idx: int) -> str:
@@ -156,11 +162,14 @@ def pagerank_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same scan shape; both collects are |types|-bounded readouts.
     node_list = sorted(
         r["node"]
-        for r in ev.select(F.col("event_type").alias("node"))
-        .distinct().collect()
+        for r in bounded_collect(
+            ev.select(F.col("event_type").alias("node")).distinct(),
+            GRID_MAX_STATES, "pagerank node list",
+        )
     )
     edge_rows = sorted(
-        ((r["src"], r["dst"], r["w"]) for r in edges.collect()),
+        (r["src"], r["dst"], r["w"])
+        for r in bounded_collect(edges, GRID_MAX_EDGES, "pagerank edge grid")
     )
     n = len(node_list)
     if n == 0:
@@ -256,7 +265,7 @@ def markov_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wr = Window.partitionBy("src").orderBy(F.col("w").desc(), "dst")
     return (
-        edges.join(F.broadcast(outw), "src")
+        edges.join(F.broadcast(outw), "src")  # bound: <= |event_type| rows
         .select(
             "src", "dst", "w",
             F.round(F.col("w") * 1.0 / F.col("total_w"), 6).alias("p"),
@@ -515,7 +524,7 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pair.join(iu, F.col("u") == F.col("pu"))
         .join(iv, F.col("v") == F.col("pv"))
-        .crossJoin(F.broadcast(n_tot))
+        .crossJoin(n_tot)
         .select(
             F.col("u").alias("part_a"),
             F.col("v").alias("part_b"),
@@ -710,6 +719,8 @@ def graph_triangle_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the knob you lower as m grows (DOULION's whole point) — at
     # a fixed ~10^6-edge sample budget the broadcast stays ~16 MB.
     tri_rows = wedges.join(
+        # bound: p*|E| sample; without it the eager sample job
+        # sort-merge joins
         F.broadcast(sampled),
         (F.col("a") == F.col("u")) & (F.col("b") == F.col("v")),
     ).select("src", "a", "b").localCheckpoint(eager=True)
@@ -940,6 +951,8 @@ def graph_triangle_doulion_multi_p(
     )
     tri_rows = (
         wedges.join(
+            # bound: p*|E| sample; without it the eager sample job
+            # sort-merge joins
             F.broadcast(sampled),
             (F.col("a") == F.col("u")) & (F.col("b") == F.col("v")),
         )
@@ -1099,10 +1112,14 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     roll = RollingCheckpoint(spark)
     for hop in range(1, _BFS_MAX_HOP + 1):
         nxt = (
+            # bound: nodes within _BFS_MAX_HOP of the seeds; sort-merge
+            # join without it
             F.broadcast(frontier)
             .join(und, F.col("node") == F.col("u"))
             .select(F.col("v").alias("node"))
             .distinct()
+            # bound: nodes within _BFS_MAX_HOP of the seeds; plan
+            # changes without it
             .join(F.broadcast(visited.select("node")), "node", "left_anti")
             .withColumn("lvl", F.lit(hop))
         )
@@ -1242,7 +1259,7 @@ def markov_conversion_horizon(
                  F.col("event_type").alias("dst"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
-    rows = edges.collect()  # |states|² grid — sketch-sized
+    rows = bounded_collect(edges, GRID_MAX_EDGES, "markov state grid")
     wmap: dict[str, dict[str, int]] = {}
     states = set()
     for r in rows:
@@ -1398,12 +1415,13 @@ def graph_eigenvector_centrality(
     roll = RollingCheckpoint(spark)
     for _ in range(_EC_ITERS):
         raw = (
+            # bound: one row per graph node; plan changes without it
             sym.join(F.broadcast(x), sym.u == x.node)
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum(F.col("w") * F.col("x")).alias("r"))
         )
         nrm = raw.agg(F.sqrt(F.sum(F.col("r") * F.col("r"))).alias("z"))
-        x = raw.crossJoin(F.broadcast(nrm)).select(
+        x = raw.crossJoin(nrm).select(
             "node", (F.col("r") / F.col("z")).alias("x")
         )
         x = roll(x)
@@ -1515,6 +1533,7 @@ def graph_degree_assortativity(
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("dx"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dy"))
+    # bound: one row per graph node; sort-merge join without it
     ed = sym.join(F.broadcast(du), "u").join(F.broadcast(dv), "v")
     mom = ed.agg(
         F.count(F.lit(1)).cast("bigint").alias("m"),
@@ -1788,7 +1807,7 @@ def link_prediction_adamic_adar(
     )
     deg = nbrs.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     qset = deg.select(F.col("node").alias("q")).orderBy("q").limit(_AA_NQ)
-    hop1 = F.broadcast(qset).join(
+    hop1 = qset.join(
         nbrs, F.col("node") == F.col("q")
     ).select("q", F.col("nbr").alias("z"))
     # hop1 is |Q|·deg(q) rows (~1.2k) — ALWAYS the broadcast side.
@@ -1796,6 +1815,7 @@ def link_prediction_adamic_adar(
     # broadcast the 2·|E|-row adjacency list instead, whose
     # HashedRelation build blew the driver at sf0.1.
     wedge = (
+        # bound: |Q| x deg(q) rows; sort-merge join without it
         F.broadcast(hop1)
         .join(
             nbrs.select(F.col("node").alias("z"), F.col("nbr").alias("y")),
@@ -1803,6 +1823,7 @@ def link_prediction_adamic_adar(
         )
         .filter(F.col("y") != F.col("q"))
         .join(
+            # bound: one row per graph node; plan changes without it
             F.broadcast(
                 deg.filter(F.col("d") <= _AA_DEG_CAP)
                 .select(F.col("node").alias("z"), "d")

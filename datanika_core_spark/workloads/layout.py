@@ -213,7 +213,7 @@ def _skip_rate_frame(
         F.min("x").alias("xlo"), F.max("x").alias("xhi"),
         F.min("y").alias("ylo"), F.max("y").alias("yhi"),
     )
-    quant = pts.crossJoin(F.broadcast(lims)).select(
+    quant = pts.crossJoin(lims).select(
         "x", "y", "ok", "ln",
         F.expr("((x - xlo) * 65535) div greatest(xhi - xlo, 1)").alias("xq"),
         F.expr("((y - ylo) * 65535) div greatest(yhi - ylo, 1)").alias("yq"),
@@ -256,7 +256,7 @@ def _skip_rate_frame(
         (F.max("y") - F.min("y") + 1).alias("ry"),
     )
     per_dim = (
-        spans.crossJoin(F.broadcast(g))
+        spans.crossJoin(g)
         .groupBy("layout")
         .agg(
             F.avg(F.least(F.col("span_x") * F.col("corr"), F.col("rx"))
@@ -438,6 +438,7 @@ def compaction_plan_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bytes").desc(), "doc_id"
     )
     assigned = (
+        # bound: <= |source| rows
         files.join(F.broadcast(per_src.select("source", "n_bins")), "source")
         .select(
             "source", "bytes", "n_bins",
@@ -448,7 +449,7 @@ def compaction_plan_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bytes").cast("bigint").alias("bin_bytes")
     )
     return (
-        loads.join(F.broadcast(per_src), "source")
+        loads.join(F.broadcast(per_src), "source")  # bound: <= |source| rows
         .groupBy("source", "n_files", "total_bytes", "n_bins")
         .agg(
             F.max("bin_bytes").cast("bigint").alias("max_bin_bytes"),
@@ -761,7 +762,7 @@ def hilbert_vs_zorder_skipping(
         F.min("x").alias("xlo"), F.max("x").alias("xhi"),
         F.min("y").alias("ylo"), F.max("y").alias("yhi"),
     )
-    quant = pts.crossJoin(F.broadcast(lims)).selectExpr(
+    quant = pts.crossJoin(lims).selectExpr(
         "x", "y", "ok", "ln",
         _HB_QX.format(div="div"), _HB_QY.format(div="div"),
     )
@@ -789,7 +790,7 @@ def hilbert_vs_zorder_skipping(
     )
     per_dim = (
         spans_h.unionAll(spans_z)
-        .crossJoin(F.broadcast(g))
+        .crossJoin(g)
         .groupBy("layout")
         .agg(
             F.avg(F.least("span_x", "rx") / F.col("rx")).alias("sx"),

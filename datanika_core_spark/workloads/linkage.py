@@ -355,7 +355,7 @@ def record_linkage_fellegi_sunter(
             .cast("bigint").alias(f"f_{f}")
         )
     stats = cand.agg(*aggs)
-    scored = cand.crossJoin(F.broadcast(stats)).select(
+    scored = cand.crossJoin(stats).select(
         "is_true",
         F.expr(_FS_SCORE).alias("score_units"),
         F.expr(_FS_BAND).alias("band"),
@@ -492,8 +492,8 @@ def linkage_reciprocal_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_mutual"),
             correct.cast("bigint").alias("n_correct"),
         )
-        .crossJoin(F.broadcast(n_dirty))
-        .crossJoin(F.broadcast(n_oneway))
+        .crossJoin(n_dirty)
+        .crossJoin(n_oneway)
         .select(
             "n_dirty", "n_one_way", "n_mutual", "n_correct",
             F.round(F.col("n_correct") * 1.0 / F.col("n_mutual"), 6)
@@ -576,7 +576,7 @@ def linkage_sorted_neighborhood(
     approxQuantile directly). The window join is a BAND join, not a
     range scan: each dirty record probes exactly 3 rank tiles of
     width {w} (its own ± 1), so the join is EQUI on the tile id with
-    the (every-10th-part) dirty side broadcast — candidates per dirty
+    the (every-10th-part) dirty side — candidates per dirty
     record are <= 2·{w}+1 regardless of corpus size. The oracle says
     BETWEEN (DuckDB IEJoins it); the engine never does.
 
@@ -652,7 +652,7 @@ def linkage_sorted_neighborhood(
         ).alias("g"),
     )
     cand = (
-        F.broadcast(dirtyr)
+        dirtyr
         .join(cleanr, "g")
         .filter(F.abs(F.col("rd") - F.col("rc")) <= _SN_W)
         .withColumn("dist", F.levenshtein("dname", "cname"))
@@ -772,9 +772,9 @@ def linkage_blocking_quality(
     Scale: NO pair set is materialized for RR — prefix2 candidates
     are Σ_block |dirty_b| x |clean_b| from two grouped counts, and
     the SN window count probes 3 rank tiles per dirty record exactly
-    like linkage_sorted_neighborhood (broadcast dirty side, EQUI on
-    tile id). PC joins the truth set only (bounded by name-duplicate
-    fan-out, not corpus²). The SN ranking reuses
+    like linkage_sorted_neighborhood (EQUI on tile id). PC joins the
+    truth set only (bounded by name-duplicate fan-out, not corpus²).
+    The SN ranking reuses
     operators/ranking.global_row_number with both join sides built
     from independent plans + one shared boundary scan (the SCALE.md
     rule-7 discipline)."""
@@ -870,7 +870,7 @@ def linkage_blocking_quality(
         ).alias("g"),
     )
     sn_cand = (
-        F.broadcast(dirtyr)
+        dirtyr
         .join(cleanr, "g")
         .filter(F.abs(F.col("rd") - F.col("rc")) <= _SN_W)
         .count()
@@ -984,7 +984,7 @@ def linkage_sn_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each pass is the linkage_sorted_neighborhood shape —
     global rank via frozen-quantile ranking (monotone base-128
     prefix code of the pass's sort key), window join EQUI on rank
-    tiles with the dirty side broadcast; all four ranked frames
+    tiles; all four ranked frames
     build from independent plans (rule-7), one boundary scan per
     pass. Candidates stay <= 2 passes x (2·{w}+1) per dirty record
     regardless of corpus size."""
@@ -1055,7 +1055,7 @@ def linkage_sn_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("g"),
         )
         return (
-            F.broadcast(dirtyr)
+            dirtyr
             .join(cleanr, "g")
             .filter(F.abs(F.col("rd") - F.col("rc")) <= _SN_W)
             .select("duid", "cuid", F.lit(pass_id).alias("pass"))

@@ -200,7 +200,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     contaminated = (
         shingle_hashes(corpus.filter(~is_bench))
-        .join(F.broadcast(bench_sh), "sh")
+        .join(bench_sh, "sh")
         .select("doc_id")
         .distinct()
         .withColumn("is_contaminated", F.lit(True))

@@ -105,7 +105,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(len(_BM25_TERMS))
         ],
     )
-    scored = tf.join(F.broadcast(stats)).filter(
+    scored = tf.join(stats).filter(
         sum(F.col(f"tf_{i}") for i in range(len(_BM25_TERMS))) > 0
     )
     return (
@@ -166,7 +166,7 @@ def tfidf_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = docs.agg(F.count(F.lit(1)).cast("bigint").alias("nn"))
     scored = (
         tf.join(df_, "term")
-        .join(F.broadcast(stats))
+        .join(stats)
         .withColumn(
             "tfidf",
             F.col("tf") * F.log((1.0 + F.col("nn")) / (1.0 + F.col("df"))),
@@ -291,7 +291,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     lex = (
-        tf.join(F.broadcast(stats))
+        tf.join(stats)
         .filter(
             sum(F.col(f"tf_{i}") for i in range(len(_BM25_TERMS))) > 0
         )
@@ -486,7 +486,7 @@ def eval_rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     lex = (
-        tf.join(F.broadcast(stats))
+        tf.join(stats)
         .filter(
             sum(F.col(f"tf_{i}") for i in range(len(_BM25_TERMS))) > 0
         )
@@ -499,7 +499,7 @@ def eval_rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_lex") <= _RBO_D)
     )
     alt = (
-        tf.join(F.broadcast(stats))
+        tf.join(stats)
         .filter(
             sum(F.col(f"tf_{i}") for i in range(len(_BM25_TERMS))) > 0
         )
@@ -679,10 +679,11 @@ def search_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _score(qterms: DataFrame) -> DataFrame:
         return (
+            # bound: |_BM25_TERMS| + _PRF_EXPAND term rows
             tf_all.join(F.broadcast(qterms), "term")
             .join(dfs, "term")
             .join(dls, "doc_id")
-            .crossJoin(F.broadcast(corpus))
+            .crossJoin(corpus)
             .select("doc_id", F.expr(_PRF_CONTRIB).alias("c"))
             .groupBy("doc_id")
             .agg(F.sum("c").cast("bigint").alias("units"))
@@ -704,7 +705,7 @@ def search_prf_rocchio(spark: SparkSession, sf_dir: str) -> DataFrame:
             & ~F.col("term").isin(*_BM25_TERMS)
         )
         .join(dfs, "term")
-        .crossJoin(F.broadcast(corpus))
+        .crossJoin(corpus)
         .select("term", F.expr(_PRF_TFIDF).alias("ev_u"))
         .groupBy("term")
         .agg(F.sum("ev_u").cast("bigint").alias("ev"))

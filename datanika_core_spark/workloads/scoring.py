@@ -226,7 +226,7 @@ def perplexity_unigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = ucnt.agg(F.sum("cnt").cast("bigint").alias("total"))
     m = (
-        ucnt.join(F.broadcast(tot))
+        ucnt.join(tot)
         .agg(F.map_from_entries(
             F.collect_list(F.struct(
                 F.col("term"),
@@ -248,7 +248,7 @@ def perplexity_unigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computed result is unchanged; only the cosmetic display order
     # is dropped.
     return (
-        tok.join(F.broadcast(m))
+        tok.join(m)
         .select(
             "doc_id",
             F.size("toks").cast("bigint").alias("dl"),
@@ -446,14 +446,14 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus_n = vocab.agg(F.sum("c_corpus").alias("n")).collect()[0]["n"]
     src = (
-        toks.join(F.broadcast(vocab.select("tok")), "tok")
+        toks.join(vocab.select("tok"), "tok")
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("c_src"))
     )
     src_n = src.groupBy("source").agg(F.sum("c_src").alias("n_src"))
     terms = (
-        src.join(F.broadcast(src_n), "source")
-        .join(F.broadcast(vocab), "tok")
+        src.join(F.broadcast(src_n), "source")  # bound: <= |source| rows
+        .join(vocab, "tok")
         .select(
             "source",
             ((F.col("c_src") + 1.0) / (F.col("n_src") + _KL_VOCAB)).alias(
@@ -783,8 +783,8 @@ def classifier_naive_bayes_source(
     tot = cls.agg(F.sum("nd").cast("bigint").alias("tot"))
     voc = tr.agg(F.countDistinct("term").cast("bigint").alias("v"))
     clst = (
-        cls.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(voc))
+        cls.crossJoin(tot)
+        .crossJoin(voc)
         .select(
             "source", "cs", "v",
             F.expr(_NB_PRIOR_UNITS).alias("prior_units"),
@@ -803,7 +803,7 @@ def classifier_naive_bayes_source(
         F.col("source").alias("k_source"), "term", "cst"
     )
     scored = (
-        tet.crossJoin(F.broadcast(k))
+        tet.crossJoin(F.broadcast(k))  # bound: <= |source| rows
         .join(ctk, ["k_source", "term"], "left")
         .select(
             "doc_id", "true_source",
@@ -959,7 +959,7 @@ def gbdt_histogram_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("v").alias("lo"), F.max("v").alias("hi")
     )
     hist = (
-        stacked.join(F.broadcast(rng), "feature")
+        stacked.join(F.broadcast(rng), "feature")  # bound: <= |features| rows
         .select("feature", F.expr(_GS_BIN).alias("bin"), "y")
         .groupBy("feature", "bin")
         .agg(
@@ -997,7 +997,7 @@ def gbdt_histogram_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") == 1)
     )
     return (
-        best.join(F.broadcast(rng), "feature")
+        best.join(F.broadcast(rng), "feature")  # bound: <= |features| rows
         .select(
             "feature",
             F.col("bin").alias("split_bin"),
@@ -1131,7 +1131,7 @@ def feature_woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("v").alias("lo"), F.max("v").alias("hi")
     )
     hist = (
-        stacked.join(F.broadcast(rng), "feature")
+        stacked.join(F.broadcast(rng), "feature")  # bound: <= |features| rows
         .select("feature", F.expr(_WOE_BIN).alias("bin"), "y")
         .groupBy("feature", "bin")
         .agg(
@@ -1143,6 +1143,7 @@ def feature_woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").cast("bigint").alias("pt"),
         F.sum("neg").cast("bigint").alias("nt"),
     )
+    # bound: <= |features| rows
     woed = hist.join(F.broadcast(tot), "feature").withColumn(
         "woe_units", F.expr(_WOE_EXPR)
     )
@@ -1259,6 +1260,7 @@ def anomaly_histogram_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     rng = stacked.groupBy("feature").agg(
         F.min("v").alias("lo"), F.max("v").alias("hi")
     )
+    # bound: <= |features| rows
     binned = stacked.join(F.broadcast(rng), "feature").select(
         "doc_id", "feature", F.expr(_AD_BIN).alias("bin")
     )
@@ -1267,8 +1269,9 @@ def anomaly_histogram_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = feats.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     scored = (
+        # bound: <= |features| x 16 bins
         binned.join(F.broadcast(hist), ["feature", "bin"])
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select("doc_id", F.expr(_AD_NLL).alias("u"))
         .groupBy("doc_id")
         .agg(F.sum("u").cast("bigint").alias("units"))
@@ -1601,7 +1604,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         tok.join(lm, ["lang", "term"])
-        .join(F.broadcast(norm), "lang")
+        .join(F.broadcast(norm), "lang")  # bound: <= |lang| rows
         .groupBy("doc_id", "lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tok"),

@@ -99,7 +99,7 @@ def phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("positions").alias("pos_b"),
     )
     matches = (
-        F.broadcast(phrases)
+        F.broadcast(phrases)  # bound: literal phrase list, driver-built
         .join(pa, "a")
         .join(pb, ["b", "doc_id"])
         .withColumn(
@@ -217,7 +217,7 @@ def phrase_search_threeway(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("positions").alias("pos_c"),
     )
     matches = (
-        F.broadcast(phrases)
+        F.broadcast(phrases)  # bound: literal phrase list, driver-built
         .join(pa, "a")
         .join(pb, ["b", "doc_id"])
         .join(pc, ["c", "doc_id"])
@@ -337,6 +337,7 @@ def phrase_search_kway(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrases = spark.createDataFrame(
         _PHRASES4, ", ".join(f"{c} string" for c in _T4_COLS)
     )
+    # bound: literal phrase list, driver-built
     out = F.broadcast(phrases).join(
         postings.select(
             F.col("tok").alias("t0"), "doc_id",

@@ -108,7 +108,7 @@ def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     scored = (
-        F.broadcast(q)
+        F.broadcast(q)  # bound: _KNN_NQ query rows
         .join(vecs.alias("c"), F.col("c.vec_id") != F.col("query_id"))
         .select(
             "query_id", F.col("c.vec_id").alias("neighbor_id"),
@@ -270,6 +270,7 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_s_cos("v", "cv")).desc(), F.col("cid")
     )
     assigned = (
+        # bound: _IVF_NCENT seed rows; cartesian without it at scale
         vecs.crossJoin(F.broadcast(cent))
         .withColumn("rn", F.row_number().over(rn))
         .filter(F.col("rn") == 1)
@@ -282,7 +283,7 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cid").alias("qcid"),
     )
     hits = (
-        F.broadcast(q)
+        F.broadcast(q)  # bound: _KNN_NQ query rows
         .join(assigned.alias("c"),
               (F.col("c.cid") == F.col("qcid"))
               & (F.col("c.vec_id") != F.col("query_id")))
@@ -520,6 +521,7 @@ def ann_ivf_cosine_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_s_cos("v", "cv")).desc(), F.col("cid")
     )
     ranked = (
+        # bound: _IVF_NCENT seed rows; cartesian without it at scale
         vecs.crossJoin(F.broadcast(cent))
         .withColumn("rn", F.row_number().over(rn))
     )
@@ -535,7 +537,7 @@ def ann_ivf_cosine_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     hits = (
-        F.broadcast(qprobe)
+        F.broadcast(qprobe)  # bound: _KNN_NQ x nprobe rows
         .join(assigned.alias("c"),
               (F.col("c.cid") == F.col("pcid"))
               & (F.col("c.vec_id") != F.col("query_id")))
@@ -745,6 +747,7 @@ def ann_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_s_cos("v", "cv")).desc(), F.col("cid")
     )
     assigned = (
+        # bound: _IVF_NCENT seed rows; cartesian without it at scale
         vecs.crossJoin(F.broadcast(cent))
         .withColumn("rn", F.row_number().over(rn))
         .filter(F.col("rn") == 1)
@@ -773,10 +776,11 @@ def ann_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     exact = topk(
+        # bound: _KNN_NQ query rows
         F.broadcast(q).join(vecs, vecs.vec_id != q.query_id)
     )
     ivf = topk(
-        F.broadcast(q).join(
+        F.broadcast(q).join(  # bound: _KNN_NQ query rows
             assigned,
             (assigned.cid == q.qcid) & (assigned.vec_id != q.query_id),
         )
@@ -1178,6 +1182,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_s_cos("v", "cv")).desc(), F.col("cid")
     )
     assigned = (
+        # bound: _IVF_NCENT seed rows; cartesian without it at scale
         vecs.crossJoin(F.broadcast(cent))
         .withColumn("rn", F.row_number().over(rn))
         .filter(F.col("rn") == 1)
@@ -1219,7 +1224,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" 0d, (a, x) -> a + x)"
     )
     hits = (
-        F.broadcast(q)
+        F.broadcast(q)  # bound: _KNN_NQ query rows
         .join(
             posting.alias("c"),
             (F.col("c.cid") == F.col("qcid"))
@@ -1251,7 +1256,7 @@ def ann_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SortMergeJoin here: the shortlist's size estimate is opaque
     # after the window)
     exact = (
-        F.broadcast(
+        F.broadcast(  # bound: _KNN_NQ x shortlist rows
             shortlist.join(
                 q.select("query_id", F.col("qsubs").alias("qs")),
                 "query_id",
@@ -1351,6 +1356,7 @@ def embedding_outlier_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFra
     )
     rn = Window.partitionBy("vec_id").orderBy(F.expr(sqd).asc(), F.col("cid"))
     assigned = (
+        # bound: _IVF_NCENT seed rows; cartesian without it at scale
         vecs.crossJoin(F.broadcast(cent))
         .withColumn("rn", F.row_number().over(rn))
         .filter(F.col("rn") == 1)
@@ -1360,7 +1366,7 @@ def embedding_outlier_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFra
         F.expr(f"percentile(dist, {_OUT_PCT})").alias("t")
     )
     return (
-        assigned.crossJoin(F.broadcast(thresh))
+        assigned.crossJoin(thresh)
         .groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
@@ -1446,7 +1452,7 @@ def ann_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = vecs.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    pairs = F.broadcast(q).join(
+    pairs = F.broadcast(q).join(  # bound: _KNN_NQ query rows
         vecs.select(F.col("vec_id").alias("neighbor_id"), "v"),
         F.col("neighbor_id") != F.col("query_id"),
     )
@@ -1554,7 +1560,7 @@ def eval_ndcg_truncated_ranking(
     q = vecs.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    pairs = F.broadcast(q).join(
+    pairs = F.broadcast(q).join(  # bound: _KNN_NQ query rows
         vecs.select(F.col("vec_id").alias("neighbor_id"), "v"),
         F.col("neighbor_id") != F.col("query_id"),
     )
@@ -1679,7 +1685,7 @@ def eval_mrr_map_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = vecs.filter(F.col("vec_id") < _KNN_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    pairs = F.broadcast(q).join(
+    pairs = F.broadcast(q).join(  # bound: _KNN_NQ query rows
         vecs.select(F.col("vec_id").alias("neighbor_id"), "v"),
         F.col("neighbor_id") != F.col("query_id"),
     )
@@ -1810,6 +1816,7 @@ def ann_ivf_cell_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_s_cos("v", "cv")).desc(), F.col("cid")
     )
     assigned = (
+        # bound: _IVF_NCENT seed rows; cartesian without it at scale
         vecs.crossJoin(F.broadcast(cent))
         .withColumn("rn", F.row_number().over(rn))
         .filter(F.col("rn") == 1)
@@ -1921,10 +1928,11 @@ def ann_ivf_retrain_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_id = vecs.agg(F.max("vec_id").alias("max_id"))
     assigned = (
+        # bound: _IVF_NCENT seed rows; cartesian without it at scale
         vecs.crossJoin(F.broadcast(cent))
         .withColumn("rn", F.row_number().over(rn))
         .filter(F.col("rn") == 1)
-        .crossJoin(F.broadcast(max_id))
+        .crossJoin(max_id)
         .select(
             "vec_id", "label", "cid",
             F.when(
@@ -2079,7 +2087,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window as _W
 
-    scored = F.broadcast(q).join(
+    scored = F.broadcast(q).join(  # bound: _KNN_NQ query rows
         vecs.select(F.col("vec_id").alias("cand"), F.col("v").alias("cv")),
         F.col("cand") != F.col("query_id"),
     ).select(
@@ -2242,9 +2250,9 @@ def feature_infogain_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = cells.groupBy("d").agg(F.sum("n").cast("bigint").alias("nt"))
     mi = (
-        cells.join(F.broadcast(bm), ["d", "b"])
-        .join(F.broadcast(lm), ["d", "label"])
-        .join(F.broadcast(tot), ["d"])
+        cells.join(F.broadcast(bm), ["d", "b"])  # bound: <= _DIM x 2 rows
+        .join(F.broadcast(lm), ["d", "label"])  # bound: <= _DIM x |label| rows
+        .join(F.broadcast(tot), ["d"])  # bound: <= _DIM rows
         .select(
             "d",
             F.round(
@@ -2865,7 +2873,7 @@ def ssl_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = e.select(F.col("vec_id").alias("src"), F.col("q").alias("qa"))
     b = e.select(F.col("vec_id").alias("dst"), F.col("q").alias("qb"))
     pairs = (
-        a.join(F.broadcast(b), F.col("src") != F.col("dst"))
+        a.join(b, F.col("src") != F.col("dst"))
         .select(
             "src", "dst",
             F.expr(
@@ -2897,6 +2905,8 @@ def ssl_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_LP_ROUNDS):
         votes = (
             knn.join(
+                # bound: seed labels (1/5 of the vectors); sort-merge
+                # join without it
                 F.broadcast(lab.filter(F.col("lab").isNotNull())),
                 knn.dst == F.col("v"),
             )
@@ -3059,7 +3069,7 @@ def embedding_binary_sign_hamming(
         F.col("b_lo").alias("q_lo"), F.col("b_hi").alias("q_hi"),
     )
     ham = (
-        F.broadcast(q)
+        F.broadcast(q)  # bound: _KNN_NQ query rows
         .join(packed.alias("c"), F.col("c.vec_id") != F.col("query_id"))
         .select(
             "query_id", F.col("c.vec_id").alias("neighbor_id"),
@@ -3085,7 +3095,7 @@ def embedding_binary_sign_hamming(
         .select("query_id", "neighbor_id")
     )
     exact_scored = (
-        F.broadcast(q.select("query_id", "qv"))
+        F.broadcast(q.select("query_id", "qv"))  # bound: _KNN_NQ query rows
         .join(vecs.alias("c"), F.col("c.vec_id") != F.col("query_id"))
         .select(
             "query_id", F.col("c.vec_id").alias("neighbor_id"),
@@ -3205,7 +3215,7 @@ def triplet_mining_semihard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("av"),
     )
     sims = (
-        F.broadcast(a)
+        F.broadcast(a)  # bound: _TRIP_NQ anchor rows
         .join(vecs.alias("c"), F.col("c.vec_id") != F.col("anchor_id"))
         .select(
             "anchor_id", "a_label",
@@ -3229,6 +3239,7 @@ def triplet_mining_semihard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     semihard = (
         sims.filter(F.col("label") != F.col("a_label"))
+        # bound: one row per anchor (_TRIP_NQ)
         .join(F.broadcast(pos), "anchor_id")
         .filter(
             (F.col("sim") < F.col("pos_sim"))
@@ -3362,8 +3373,8 @@ def trajectory_similarity_topk(
     )
     scored = (
         inter.join(
-            F.broadcast(sizes.select(F.col("user_id").alias("qid"),
-                                     F.col("sz").alias("q_sz"))),
+            sizes.select(F.col("user_id").alias("qid"),
+                         F.col("sz").alias("q_sz")),
             "qid",
         )
         .join(
@@ -3488,7 +3499,8 @@ def cluster_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = cents_df.select(F.col("cid").alias("i"), F.col("cvec").alias("va"))
     b = cents_df.select(F.col("cid").alias("j"), F.col("cvec").alias("vb"))
     cpair = (
-        F.broadcast(a)
+        F.broadcast(a)  # bound: k centroid rows, driver-built
+        # bound: k centroid rows, driver-built
         .join(F.broadcast(b), F.col("i") != F.col("j"))
         .select(
             "i", "j",
@@ -3504,8 +3516,8 @@ def cluster_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("n_j"), F.col("su").alias("su_j"),
     )
     terms = (
-        cpair.join(F.broadcast(si), "i")
-        .join(F.broadcast(sj), "j")
+        cpair.join(F.broadcast(si), "i")  # bound: k cluster rows
+        .join(F.broadcast(sj), "j")  # bound: k cluster rows
         .groupBy("i")
         .agg(F.max(F.expr(_DB_TERM)).alias("r_i"))
     )
@@ -3516,7 +3528,7 @@ def cluster_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         sstats.join(terms, sstats.cid == terms.i)
-        .crossJoin(F.broadcast(dbx))
+        .crossJoin(F.broadcast(dbx))  # bound: one row
         .select(
             F.col("cid").alias("cluster_id"),
             F.col("n").alias("n_vecs"),

@@ -121,7 +121,7 @@ def bloom_dedup_incoming_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("shiftleft(1L, int(pmod(pos, 64)))").alias("bit"),
     )
     candidates = (
-        probes.join(F.broadcast(words), "word")
+        probes.join(F.broadcast(words), "word")  # bound: <= m/64 bitset words
         .filter((F.col("bits").bitwiseAND(F.col("bit"))) == F.col("bit"))
         .groupBy("batch_id", "th")
         .agg(F.count(F.lit(1)).alias("hits"))
@@ -134,6 +134,7 @@ def bloom_dedup_incoming_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side streams through without a shuffle.
     return (
         existing.select(F.col("doc_id").alias("keeper_id"), "th")
+        # bound: post-bloom candidates of one batch
         .join(F.broadcast(candidates), "th")
         .select("batch_id", "keeper_id")
         .orderBy("batch_id", "keeper_id")
@@ -221,7 +222,7 @@ def cms_heavy_hitters_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         % _CMS_W
     )
     cms = (
-        toks.crossJoin(F.broadcast(depths))
+        toks.crossJoin(depths)
         .select("tok", "d")
         .withColumn("bucket", bucket)
         .groupBy("d", "bucket")
@@ -232,6 +233,7 @@ def cms_heavy_hitters_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d", F.explode(F.expr(f"sequence(0, {_CMS_D - 1})"))
     ).withColumn("bucket", bucket)
     return (
+        # bound: <= d x w counters, fixed by the sketch shape
         probes.join(F.broadcast(cms), ["d", "bucket"])
         .groupBy("tok", "exact_cnt")
         .agg(F.min("cnt").alias("cms_est"))
@@ -472,7 +474,7 @@ def rolling_distinct_users_kmv(
     ).cast("bigint")
     return (
         win_est.join(exact, F.col("w") == F.col("x_w"))
-        .crossJoin(F.broadcast(bounds))
+        .crossJoin(bounds)
         .filter(
             (F.col("w") >= F.expr("date_add(mn, 6)"))
             & (F.col("w") <= F.col("mx"))
@@ -692,7 +694,7 @@ def quantile_bottomk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ranks = (
-        ev.crossJoin(F.broadcast(est))
+        ev.crossJoin(est)
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.when(F.col("value") <= F.col("q50_est"), 1)
@@ -822,7 +824,7 @@ def quantile_bottomk_per_group(
         )
     )
     return (
-        ev.join(F.broadcast(est), "event_type")
+        ev.join(F.broadcast(est), "event_type")  # bound: <= |event_type| rows
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1226,7 +1228,7 @@ def join_size_estimate_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         % _CMS_W
     )
     est = (
-        keys.crossJoin(F.broadcast(depths))
+        keys.crossJoin(depths)
         .select("tok", "d")
         .withColumn("bucket", bucket)
         .groupBy("d", "bucket")
@@ -1235,7 +1237,7 @@ def join_size_estimate_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("cnt") * F.col("cnt")).alias("ip"))
         .agg(F.min("ip").cast("bigint").alias("cms_est_rows"))
     )
-    return exact.crossJoin(F.broadcast(est)).select(
+    return exact.crossJoin(est).select(
         "n_rows",
         "n_keys",
         "exact_join_rows",
@@ -1366,8 +1368,8 @@ def audience_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_both") * 1.0 / _KMV_K * F.col("union_est")
     ).cast("bigint")
     return (
-        exact.crossJoin(F.broadcast(n_both))
-        .crossJoin(F.broadcast(uest))
+        exact.crossJoin(n_both)
+        .crossJoin(uest)
         .select(
             F.lit(_KMV_K).cast("bigint").alias("k"),
             "n_a",
@@ -1520,7 +1522,7 @@ def heavy_hitters_misra_gries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     summaries = (
         ranked.filter(F.col("rnk") <= _MG_K)
-        .join(F.broadcast(offsets), "pid")
+        .join(F.broadcast(offsets), "pid")  # bound: <= |partitions| rows
         .select("tok", (F.col("cnt") - F.col("off_p")).alias("resid"))
         .filter(F.col("resid") > 0)
     )
@@ -1541,7 +1543,7 @@ def heavy_hitters_misra_gries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     final = (
         mranked.filter(F.col("rnk") <= _MG_K)
-        .crossJoin(F.broadcast(off2))
+        .crossJoin(off2)
         .withColumn("mg_est", F.col("s") - F.col("o2"))
         .filter(F.col("mg_est") > 0)
     )
@@ -1550,7 +1552,7 @@ def heavy_hitters_misra_gries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         final.join(exact, "tok")
-        .crossJoin(F.broadcast(total_off))
+        .crossJoin(total_off)
         .select(
             "tok",
             F.col("mg_est").cast("bigint").alias("mg_est"),

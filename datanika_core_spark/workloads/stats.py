@@ -156,7 +156,7 @@ def chi2_lang_source_independence(
     n_langs = lt.count()
     n_sources = st.count()
     cells = (
-        lt.crossJoin(F.broadcast(st))
+        lt.crossJoin(F.broadcast(st))  # bound: <= |source| rows
         .join(obs, ["lang", "source"], "left")
         .select(
             F.coalesce("o", F.lit(0)).alias("o"),
@@ -243,8 +243,8 @@ def mi_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("row_tot") * F.col("col_tot"))
     )
     cells = (
-        obs.join(F.broadcast(lt), "lang")
-        .join(F.broadcast(st), "source")
+        obs.join(F.broadcast(lt), "lang")  # bound: <= |lang| rows
+        .join(F.broadcast(st), "source")  # bound: <= |source| rows
         .select(
             "lang",
             "source",
@@ -378,9 +378,9 @@ def psi_event_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = b2.agg(F.sum("c")).first()[0]
     bins = spark.range(0, 10).select(F.col("id").cast("int").alias("bin"))
     terms = (
-        bins.join(F.broadcast(b1), "bin", "left")
+        bins.join(b1, "bin", "left")
         .withColumnRenamed("c", "c1")
-        .join(F.broadcast(b2), "bin", "left")
+        .join(b2, "bin", "left")
         .withColumnRenamed("c", "c2")
         .select(
             ((F.coalesce("c1", F.lit(0)) + 0.5) / F.lit(n1 + 5.0))
@@ -629,8 +629,8 @@ def corr_spearman_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ranked = (
-        binned.join(F.broadcast(xrank), "bx")
-        .join(F.broadcast(yrank), "by")
+        binned.join(F.broadcast(xrank), "bx")  # bound: <= _SPH_B bin rows
+        .join(F.broadcast(yrank), "by")  # bound: <= _SPH_B bin rows
         .select(F.col("rx_mid").alias("rx"), F.col("ry_mid").alias("ry"))
     )
 
@@ -867,6 +867,7 @@ def conformal_interval_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_cal"),
     )
     qhat = (
+        # bound: <= |event_type| rows
         cal.join(F.broadcast(center), "event_type")
         .groupBy("event_type", "mu", "n_cal")
         .agg(
@@ -874,7 +875,7 @@ def conformal_interval_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cov = (
-        ev.join(F.broadcast(qhat), "event_type")
+        ev.join(F.broadcast(qhat), "event_type")  # bound: <= |event_type| rows
         .groupBy("event_type", "mu", "n_cal", "q")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_eval"),
@@ -1126,7 +1127,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_rows").cast("bigint").alias("nt"),
     )
     return (
-        sig.crossJoin(F.broadcast(tot))
+        sig.crossJoin(tot)
         .select(
             "event_type",
             "n_rows",
@@ -1400,6 +1401,7 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("m").cast("bigint").alias("n_pairs"),
         )
     )
+    # bound: <= |event_type| rows
     resid = daily.join(F.broadcast(med), "event_type").select(
         "event_type",
         (F.col("y") - F.col("slope") * F.col("x")).alias("r"),
@@ -1489,7 +1491,7 @@ def weighted_median_price_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison, so there is no interpolation and no float anywhere
     before the display columns.
 
-    Scale: the part join broadcasts the dimension; everything else
+    Scale: the part join is the planner's choice; everything else
     is a combiner groupBy to |brands|x|distinct cents| rows plus a
     per-brand windowed prefix sum over that grid — the same
     collapse-then-walk shape as the KS and t-closeness workloads."""
@@ -1498,9 +1500,7 @@ def weighted_median_price_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (
         t(spark, sf_dir, "lineitem")
         .join(
-            F.broadcast(
-                t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-            ),
+            t(spark, sf_dir, "part").select("p_partkey", "p_brand"),
             F.col("l_partkey") == F.col("p_partkey"),
         )
         .select(
@@ -1926,7 +1926,7 @@ def market_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers — at warehouse scale (Σc)² overflows 64-bit, which is
     exactly why the share-quotient form is the one that survives.
 
-    Scale: one fact-table scan with two broadcast dim joins, a
+    Scale: one fact-table scan with two dim joins, a
     combiner groupBy to |nations|×|suppliers| rows, a grid-sized
     window, and a |nations|-row aggregate. Concentration monitoring
     at 100 TB is a single shuffle on the natural key."""
@@ -1934,8 +1934,8 @@ def market_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = t(spark, sf_dir, "supplier")
     nat = t(spark, sf_dir, "nation")
     rev = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
+        li.join(sup, li.l_suppkey == sup.s_suppkey)
+        .join(nat, sup.s_nationkey == nat.n_nationkey)
         .groupBy(
             F.col("n_name").alias("nation"),
             F.col("l_suppkey").alias("suppkey"),
@@ -2381,7 +2381,7 @@ def dist_wasserstein_1d_pairs(
     tp = a.join(b, F.col("t1") < F.col("t2"))
     pts = (
         tp.join(
-            F.broadcast(grid),
+            F.broadcast(grid),  # bound: |event_type| x value-cent domain
             (F.col("event_type") == F.col("t1"))
             | (F.col("event_type") == F.col("t2")),
         )
@@ -2550,7 +2550,7 @@ def causal_stratified_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == F.expr("(n + 1) div 2"))
         .select(F.col("pre_ne").alias("m"))
     )
-    strat = per_user.crossJoin(F.broadcast(med)).select(
+    strat = per_user.crossJoin(F.broadcast(med)).select(  # bound: one row
         "*",
         F.when(F.col("pre_ne") > F.col("m"), 1).otherwise(0).alias("trt"),
         F.ntile(_ATT_STRATA)
@@ -2571,7 +2571,7 @@ def causal_stratified_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     m1 = F.col("y1") * 1.0 / F.col("n1")
     m0 = F.col("y0") * 1.0 / F.col("n0")
     att = (
-        sup.crossJoin(F.broadcast(t1))
+        sup.crossJoin(t1)
         .agg(
             F.sum(
                 (F.col("n1") * 1.0 / F.col("nt")) * (m1 - m0)
@@ -2579,8 +2579,8 @@ def causal_stratified_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        sup.crossJoin(F.broadcast(t1))
-        .crossJoin(F.broadcast(att))
+        sup.crossJoin(t1)
+        .crossJoin(att)
         .select(
             F.col("s").cast("bigint").alias("stratum"),
             F.col("n1").alias("n_treated"),
@@ -2741,12 +2741,12 @@ def abtest_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .replace("n1", "o_n1").replace("n0", "o_n0")
     )
     summ = (
-        perm.crossJoin(F.broadcast(o))
+        perm.crossJoin(o)
         .filter(F.abs(t_p) >= F.abs(t_o))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_extreme"))
     )
     return (
-        obs.crossJoin(F.broadcast(summ))
+        obs.crossJoin(summ)
         .select(
             (F.col("n0") + F.col("n1")).cast("bigint").alias("n_users"),
             F.round(F.expr(_PERM_T) / 100.0, 4).alias("t_obs"),
@@ -2993,6 +2993,7 @@ def quantile_confidence_interval(
         F.expr(_QCI_LO).alias("klo"),
         F.expr(_QCI_HI).alias("khi"),
     )
+    # bound: <= |event_type| rows
     joined = vals.join(F.broadcast(idx), "event_type").filter(
         (F.col("rk") == F.col("k"))
         | (F.col("rk") == F.col("klo"))
@@ -3121,7 +3122,7 @@ def fit_exponential_interarrival(
             .over(Window.partitionBy("event_type").orderBy("gap_us"))
             .alias("i"),
         )
-        .join(F.broadcast(m), "event_type")
+        .join(F.broadcast(m), "event_type")  # bound: <= |event_type| rows
     )
     d_expr = F.max(
         F.greatest(
@@ -3352,7 +3353,7 @@ def fit_zero_inflated_poisson(
         F.count(F.lit(1)).cast("bigint").alias("k")
     )
     grid = (
-        users.crossJoin(F.broadcast(types))
+        users.crossJoin(F.broadcast(types))  # bound: <= |event_type| rows
         .join(counts, ["user_id", "event_type"], "left")
         .select(
             "event_type",
@@ -3439,7 +3440,7 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = obs.agg(F.sum("o")).first()[0]
     min_dim = min(lt.count(), st.count()) - 1
     cells = (
-        lt.crossJoin(F.broadcast(st))
+        lt.crossJoin(F.broadcast(st))  # bound: <= |source| rows
         .join(obs, ["lang", "source"], "left")
         .select(
             F.coalesce("o", F.lit(0)).alias("o"),
@@ -3545,7 +3546,7 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("s"),
     )
-    dev = daily.crossJoin(F.broadcast(mom)).select(
+    dev = daily.crossJoin(mom).select(
         "day", "n", (F.col("n") * F.col("x") - F.col("s")).alias("d")
     )
     w = Window.orderBy("day")
@@ -3716,7 +3717,7 @@ def abtest_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
     lk = (
-        pe.join(F.broadcast(days), "day")
+        pe.join(F.broadcast(days), "day")  # bound: <= |days| rows
         .groupBy("look", "variant")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3773,7 +3774,7 @@ def abtest_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").alias("stop_look")
     )
     return (
-        flagged.crossJoin(F.broadcast(stop))
+        flagged.crossJoin(F.broadcast(stop))  # bound: one row
         .select(
             F.col("look").cast("bigint").alias("look"),
             F.col("n0").alias("n_control"),
@@ -3878,7 +3879,7 @@ def bandit_ucb1_daily_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").cast("bigint").alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
-    rewarded = ev.crossJoin(F.broadcast(thr)).select(
+    rewarded = ev.crossJoin(thr).select(
         "day", "arm",
         F.when(F.col("cents") * F.col("n") > F.col("s"), 1)
         .otherwise(0).alias("r"),
@@ -3907,7 +3908,7 @@ def bandit_ucb1_daily_choice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         cum.join(tot, "day")
-        .join(F.broadcast(full_days), "day")
+        .join(F.broadcast(full_days), "day")  # bound: <= |days| rows
         .select(
             "day", "arm",
             (

@@ -51,37 +51,54 @@ def _with_toks(df: DataFrame) -> DataFrame:
     return df.withColumn("toks", F.split("text", _TOKS))
 
 
-#: Input-size ceiling for the prefix-index df-table broadcast hint.
-#: Distinct shingle hashes <= shingle instances <= input text bytes,
-#: and a freq row is ~16 B, so 64 MB of (compressed) source parquet
-#: keeps the worst-case build side within the session's broadcast
-#: budget with margin; in practice the distinct ratio makes it far
-#: smaller. Read from file metadata — NO probe job at construction
+#: Input-size ceiling for the prefix-index df-table broadcast hint,
+#: on COMPRESSED on-disk parquet bytes — not decoded text, which is
+#: commonly 5-10x larger. Distinct shingle hashes <= shingle instances
+#: <= decoded text bytes and a freq row is ~16 B, so the worst case
+#: is far past the session's broadcast budget; the ceiling relies on
+#: the distinct ratio, which keeps the df table small in practice.
+#: Read from file metadata — NO probe job at construction
 #: (the eager-probe pattern is the defect class r11 removed from the
 #: triangle count).
 _PREFIX_BROADCAST_INPUT_CEILING = 64 * 1024 * 1024
 
 
 def _input_bytes(df: DataFrame) -> int:
-    """Total size of the distinct source files feeding ``df`` —
-    driver-side metadata only (no Spark job). In-memory sources (no
-    input files — tests build corpora from memory) report 0, keeping
-    the pre-gate hint behavior; a non-local scheme or stat failure
-    reports over-ceiling, i.e. when size is unknowable err on NOT
-    forcing the broadcast."""
+    """Total size of the distinct source files under ``df``'s analyzed
+    plan — driver-side metadata only (no Spark job). The analyzed plan
+    keeps a cached frame's source scans, which ``inputFiles()`` (read
+    from the cache-substituted plan) would miss. When the size is
+    unknowable — no file scans (an in-memory or checkpointed source),
+    a non-local scheme or a stat failure — report over-ceiling, i.e.
+    err on NOT forcing the broadcast."""
     import os
 
-    files = set(df.inputFiles())
+    from py4j.protocol import Py4JError
+
+    over = _PREFIX_BROADCAST_INPUT_CEILING + 1
+    files: set[str] = set()
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "LogicalRelation":
+            try:
+                files.update(node.relation().location().inputFiles())
+            except Py4JError:  # not a file-based relation
+                return over
+        kids = node.children()
+        stack.extend(kids.apply(k) for k in range(kids.size()))
+    if not files:
+        return over
     total = 0
     for p in files:
         if p.startswith("file:"):
             p = p[len("file:"):]
         elif "://" in p or ":" in p.split("/", 1)[0]:
-            return _PREFIX_BROADCAST_INPUT_CEILING + 1
+            return over
         try:
             total += os.path.getsize(p)
         except OSError:
-            return _PREFIX_BROADCAST_INPUT_CEILING + 1
+            return over
     return total
 
 
@@ -1027,11 +1044,13 @@ def dedup_lsh_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ts = spark.createDataFrame([(t,) for t in _SWEEP_TS], "t double")
     truth_per_t = (
+        # bound: |_SWEEP_TS| literal rows; cartesian without it
         F.broadcast(ts).crossJoin(truth_j)
         .groupBy("t")
         .agg(F.sum((F.col("j") >= F.col("t")).cast("int")).alias("n_truth"))
     )
     cand_per_t = (
+        # bound: |_SWEEP_TS| literal rows; cartesian without it
         F.broadcast(ts).crossJoin(cand_j)
         .groupBy("t")
         .agg(
@@ -1184,6 +1203,7 @@ def _prefix_index(sh: DataFrame):
     # estimates are large, so it picks a shuffled join — the right
     # call; the true 100 TB shape is bucketing corpus AND postings by
     # the token hash, the posting-list store design).
+    # bound: gated on input bytes; without it the exploded side builds
     hinted = F.broadcast(freq) if _input_bytes(freq) <= \
         _PREFIX_BROADCAST_INPUT_CEILING else freq
     return (
@@ -2271,7 +2291,7 @@ def dedup_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = (
         sh.join(df_, "term")
-        .join(F.broadcast(nn))
+        .join(nn)
         .select(
             "doc_id", "term",
             F.log((1.0 + F.col("nn")) / (1.0 + F.col("df"))).alias("w"),

@@ -260,6 +260,7 @@ def events_cusum_changepoint(
     )
     cusum = (
         daily.join(
+            # bound: <= |event_type| rows
             F.broadcast(tot), F.col("event_type") == F.col("t_type")
         )
         .withColumn(
@@ -371,6 +372,7 @@ def events_seasonality_strength(
     )
     dev_b = F.col("n") * F.col("s_w") - F.col("n_w") * F.col("s")
     ssb = (
+        # bound: <= |event_type| rows
         wk.join(F.broadcast(tot), F.col("event_type") == F.col("t_type"))
         .select(
             "event_type", "n_weekdays",
@@ -390,6 +392,7 @@ def events_seasonality_strength(
     )
     dev_t = F.col("n") * F.col("cents") - F.col("s")
     sst = (
+        # bound: <= |event_type| rows
         keyed.join(F.broadcast(tot), F.col("event_type") == F.col("t_type"))
         .select(
             "event_type",
@@ -860,6 +863,7 @@ def forecast_pinball_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     evl = (
         daily.filter(~F.col("is_train"))
+        # bound: <= |event_type| x 7 rows
         .join(F.broadcast(fc), ["event_type", "wd"])
     )
 
@@ -1001,6 +1005,7 @@ def events_stl_decomposition(
         ).alias("seasonal"),
     )
     return (
+        # bound: <= |event_type| x 7 rows
         dt_.join(F.broadcast(seac), ["event_type", "wd"])
         .select(
             "event_type", "day", "y",
@@ -1166,7 +1171,7 @@ def timeseries_cross_correlation(
     a = daily.select("day", "x")
     b = daily.select(F.col("day").alias("day_y"), "y")
     paired = (
-        a.crossJoin(F.broadcast(lags))
+        a.crossJoin(lags)
         .join(
             b,
             F.expr("date_add(day, lag)") == F.col("day_y"),
@@ -1374,7 +1379,7 @@ def timeseries_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("h")
     )
     return (
-        pts.crossJoin(F.broadcast(slope))
+        pts.crossJoin(slope)
         .select(
             "block_n", "n_blocks",
             F.round("avg_rs", 6).alias("avg_rs"),

@@ -16,13 +16,15 @@ Subquery-shaped queries run as ONE shared SQL text on both Spark SQL
 and DuckDB — the same passthrough path the engine's model layer uses
 (SURVEY.md §2B: the reference delegates exactly this SQL surface to
 warehouses); Catalyst decorrelates the subqueries. Join/agg-shaped
-queries use the DataFrame API with explicit `broadcast()` on
-dimensions. Corpus conventions apply: identical aliases both sides,
+queries use the DataFrame API and leave the join strategy to the
+planner. Corpus conventions apply: identical aliases both sides,
 rounded double aggregates, total-order sorts on every LIMIT.
 
-Scale notes: every dim join (nation/region/supplier/part/customer)
-broadcasts; fact-fact joins (lineitem⋈orders) shuffle on orderkey
-only; all date/brand filters sit on the parquet scans.
+Scale notes: dimension joins broadcast while the planner's size
+estimate is under the broadcast threshold and shuffle past it (no
+static hint forces a growing dimension — supplier/part/customer —
+into a broadcast); fact-fact joins (lineitem⋈orders) shuffle on
+orderkey only; all date/brand filters sit on the parquet scans.
 """
 
 from __future__ import annotations
@@ -129,8 +131,9 @@ ORDER BY supp_nation, cust_nation, l_year
 """,
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7: bidirectional nation-pair trade volume by year. Both
-    nation copies broadcast; the disjunctive pair filter is applied
+    """TPC-H Q7: bidirectional nation-pair trade volume by year. One
+    nation copy keeps a hint (the plan changes with none); the
+    disjunctive pair filter is applied
     after the joins (it references both sides)."""
     li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -150,9 +153,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), supp.s_nationkey == F.col("n1_key"))
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(n1, supp.s_nationkey == F.col("n1_key"))
+        # bound: one nation; plan changes if all four dims go unhinted
         .join(F.broadcast(n2), cust.c_nationkey == F.col("n2_key"))
         .filter(F.col("supp_nation") != F.col("cust_nation"))
         .select(
@@ -198,7 +202,7 @@ ORDER BY o_year
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: NATION_3's share of STANDARD-part revenue sold into
     AMERICA, by order year — conditional-sum ratio over a 7-table
-    star join (all dims broadcast)."""
+    star join (the planner broadcasts the dims under its threshold)."""
     li = t(spark, sf_dir, "lineitem")
     part = t(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
     supp = t(spark, sf_dir, "supplier")
@@ -217,13 +221,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), cust.c_nationkey == F.col("n1_key"))
-        .join(F.broadcast(region), F.col("n1_region") == region.r_regionkey)
-        .join(F.broadcast(n2), supp.s_nationkey == F.col("n2_key"))
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(n1, cust.c_nationkey == F.col("n1_key"))
+        .join(region, F.col("n1_region") == region.r_regionkey)
+        .join(n2, supp.s_nationkey == F.col("n2_key"))
         .select(
             F.year("o_orderdate").cast("bigint").alias("o_year"),
             vol.alias("volume"),
@@ -280,10 +284,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         - 0.1 * F.col("p_retailprice") * F.col("l_quantity")
     )
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
         .select(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("bigint").alias("o_year"),
@@ -425,15 +429,15 @@ WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
 """,
 )
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14: conditional-sum ratio; part broadcast, one month of
-    lineitem pruned at the scan."""
+    """TPC-H Q14: conditional-sum ratio; part joins by the planner's
+    choice, one month of lineitem pruned at the scan."""
     li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
     part = t(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.join(F.broadcast(part), li.l_partkey == part.p_partkey).agg(
+    return li.join(part, li.l_partkey == part.p_partkey).agg(
         F.round(
             100.0
             * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0)))
@@ -485,7 +489,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 )
 def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct-supplier counts per (brand, type,
-    size) through the lineitem bridge; the NOT IN becomes a broadcast
+    size) through the lineitem bridge; the NOT IN becomes an
     anti-join against negative-balance suppliers."""
     li = t(spark, sf_dir, "lineitem")
     part = t(spark, sf_dir, "part").filter(
@@ -499,8 +503,8 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_suppkey").alias("l_suppkey"))
     )
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(bad_supp), "l_suppkey", "left_anti")
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(bad_supp, "l_suppkey", "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(
@@ -565,7 +569,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(big.withColumnRenamed("l_orderkey", "__bk"),
                 F.col("l_orderkey") == F.col("__bk"), "left_semi")
         .join(orders, F.col("l_orderkey") == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_custkey", "c_name", "o_orderkey", "o_orderdate", "o_totalprice")
         .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -596,7 +600,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     implied single-side filters (brand IN, qty range) for pushdown."""
     li = t(spark, sf_dir, "lineitem")
     part = t(spark, sf_dir, "part")
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    j = li.join(part, li.l_partkey == part.p_partkey)
     c1 = (
         (F.col("p_brand") == "Brand#1")
         & F.col("p_size").between(1, 10)

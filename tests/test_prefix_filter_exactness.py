@@ -106,13 +106,18 @@ def test_winnowing_df_cap_subset_and_planted_recall(spark):
     assert missing == set()
 
 
-def test_prefix_index_broadcast_hint_is_input_size_gated(spark, monkeypatch):
-    """r12 (ADVICE): the df-table broadcast hint in _prefix_index is
-    gated on driver-side input-file metadata — under the ceiling the
-    hint fires (the r11 build-side fix), over it the hint is dropped
-    so a corpus-sized df table can never be force-broadcast into an
-    OOM. The gate must read metadata only: constructing the frame
-    runs no Spark jobs either way (asserted via the job group)."""
+def test_prefix_index_broadcast_hint_is_input_size_gated(
+    spark, monkeypatch, tmp_path
+):
+    """The df-table broadcast hint in _prefix_index is gated on
+    driver-side input-file metadata: a parquet corpus under the
+    ceiling gets the hint (the r11 build-side fix), cached or not —
+    the gate reads the source files behind the cache; over the
+    ceiling, or with no input files to measure (an in-memory corpus),
+    the hint is dropped so a corpus-sized df table can never be
+    force-broadcast into an OOM. The gate reads metadata only:
+    constructing the frame runs no Spark jobs either way (asserted
+    via the job group)."""
     from pyspark.sql import functions as F
 
     from datanika_core_spark.workloads import text_dedup
@@ -123,28 +128,31 @@ def test_prefix_index_broadcast_hint_is_input_size_gated(spark, monkeypatch):
         _with_toks,
     )
 
-    def build():
+    path = str(tmp_path / "corpus.parquet")
+    _corpus_neardup(spark, SF).write.parquet(path)
+    in_memory = spark.createDataFrame(spark.read.parquet(path).collect())
+    cached = spark.read.parquet(path).cache()
+    cached.count()
+
+    def analyzed(corpus):
         sh = (
-            _with_toks(_corpus_neardup(spark, SF))
+            _with_toks(corpus)
             .filter(F.size("toks") >= 3)
             .withColumn("shingles", F.expr(_SHINGLES_EXPR))
             .select("doc_id", "shingles")
         )
-        return _prefix_index(sh)
+        return _prefix_index(sh)._jdf.queryExecution().analyzed().toString()
 
-    # earlier tests cache an identical shingle frame; the CacheManager
-    # would substitute InMemoryRelation into this build, making
-    # inputFiles() empty (the in-memory-source branch of the gate) —
-    # clear it so the file-metadata path is what's under test
-    spark.catalog.clearCache()
     sc = spark.sparkContext
     sc.setJobGroup("prefix-gate-probe", "probe")
     try:
-        hinted = build()._jdf.queryExecution().analyzed().toString()
+        hinted = analyzed(spark.read.parquet(path))
+        hinted_cached = analyzed(cached)
+        no_files = analyzed(in_memory)
         monkeypatch.setattr(
             text_dedup, "_PREFIX_BROADCAST_INPUT_CEILING", 0
         )
-        unhinted = build()._jdf.queryExecution().analyzed().toString()
+        over = analyzed(spark.read.parquet(path))
         ids = [
             j for j in sc.statusTracker().getJobIdsForGroup(
                 "prefix-gate-probe"
@@ -159,6 +167,9 @@ def test_prefix_index_broadcast_hint_is_input_size_gated(spark, monkeypatch):
         ]
     finally:
         sc.setJobGroup(None, None)
+        cached.unpersist()
     assert "Hint" in hinted
-    assert "Hint" not in unhinted
+    assert "Hint" in hinted_cached
+    assert "Hint" not in no_files
+    assert "Hint" not in over
     assert ids == []
