@@ -18,10 +18,15 @@ Scale notes (100 TB target):
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import weakref
+from collections import OrderedDict
 from typing import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 from datanika_core_spark.errors import DriverCollectTooLarge
 from datanika_core_spark.naming import to_snake_case, validate_identifier
@@ -101,21 +106,91 @@ def build_spark(
     return spark
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
+#: schema-cache entries kept per SparkSession; past it the entry
+#: used longest ago is evicted
+_SCHEMA_CACHE_MAX = 1024
+_schema_caches: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_schema_lock = threading.Lock()
+
+
+def _file_version(path: str) -> tuple | None:
+    """``(st_ino, st_mtime_ns, st_size)`` of the file at ``path``, or
+    of each file (with its name) in a flat directory of part files
+    (dot-files are skipped, as Spark skips them); None when the path
+    cannot be stat'ed (a remote URI) or holds subdirectories (a
+    partitioned or half-written layout) — those paths are not cached."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((st.st_ino, st.st_mtime_ns, st.st_size),)
+        files = []
+        with os.scandir(path) as it:
+            for e in it:
+                if e.name.startswith("."):
+                    continue
+                if e.is_dir():
+                    return None
+                s = e.stat()
+                files.append((e.name, s.st_ino, s.st_mtime_ns, s.st_size))
+        return tuple(sorted(files))
+    except (OSError, ValueError):
+        return None
+
+
+def _nanos_timestamp_columns(
+    path: str, schema: StructType
+) -> tuple[str, ...]:
     """Columns stored as parquet timestamp[ns] (illegal for Spark's
-    reader — surfaced as int64 under the nanosAsLong flag)."""
+    reader — surfaced as int64 under the nanosAsLong flag). pyarrow
+    also reports a legacy INT96 column as timestamp[ns], but Spark
+    reads that one as TIMESTAMP, so only columns Spark inferred as
+    LongType count."""
+    longs = {
+        f.name for f in schema.fields if isinstance(f.dataType, LongType)
+    }
+    if not longs:
+        return ()
     try:
         import pyarrow.parquet as pq
 
         if os.path.isdir(path):
-            inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            inner = sorted(
+                f for f in os.listdir(path)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
             if not inner:
-                return []
+                return ()
             path = os.path.join(path, inner[0])
-        schema = pq.read_schema(path)
-        return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+        return tuple(
+            f.name for f in pq.read_schema(path)
+            if str(f.type) == "timestamp[ns]" and f.name in longs
+        )
     except Exception:
-        return []
+        return ()
+
+
+def _read_parquet(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, tuple[str, ...]]:
+    """``spark.read.parquet(path)`` and its nanosecond-timestamp
+    columns, through the session's schema cache (see read_table)."""
+    version = _file_version(path)
+    key = (path, version)
+    with _schema_lock:
+        cache = _schema_caches.setdefault(spark, OrderedDict())
+        entry = cache.get(key) if version is not None else None
+        if entry is not None:
+            cache.move_to_end(key)
+    if entry is not None:
+        return spark.read.schema(entry[0]).parquet(path), entry[1]
+    df = spark.read.parquet(path)
+    nanos = _nanos_timestamp_columns(path, df.schema)
+    if version is not None:
+        with _schema_lock:
+            cache[key] = (df.schema, nanos)
+            if len(cache) > _SCHEMA_CACHE_MAX:
+                cache.popitem(last=False)
+    return df, nanos
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -126,11 +201,23 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     Runtime-sets the two confs it depends on so this works on any
     caller-provided SparkSession (e.g. the verify driver's), not just
     ones built by :func:`build_spark`.
+
+    Schema cache: the first read of a file version infers the footer
+    schema through Spark (one Spark job) and reads the nanosecond
+    columns' footer once through pyarrow; both are cached per
+    SparkSession, since inference depends on session settings. Later
+    reads of the same version pass the cached schema
+    (``spark.read.schema(s).parquet(path)``) and run no Spark job.
+    The key is the path plus ``(st_ino, st_mtime_ns, st_size)`` of
+    each file under it, so a rewritten file, or a directory that gains
+    or loses a part file, is inferred again. A path that cannot be
+    stat'ed (a remote URI) or holds subdirectories is read uncached.
+    At most ``_SCHEMA_CACHE_MAX`` entries are kept per session.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(path)
-    for col in _nanos_timestamp_columns(path):
+    df, nanos = _read_parquet(spark, path)
+    for col in nanos:
         df = df.withColumn(
             col,
             F.expr(f"cast(timestamp_micros({col} div 1000) as timestamp_ntz)"),

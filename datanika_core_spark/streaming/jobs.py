@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datanika_core_spark.operators.writers import TableWriter
-from datanika_core_spark.session import _nanos_timestamp_columns
+from datanika_core_spark.session import _read_parquet
 
 
 def read_event_stream(
@@ -42,12 +42,14 @@ def read_event_stream(
     """``readStream`` over a parquet path with the same
     ns-timestamp normalization as the batch ``read_table``.
 
-    Streaming file sources need an explicit schema — taken from a
-    batch read of the same path (one footer read, no data scan).
+    Streaming file sources need an explicit schema — taken from the
+    session's schema cache for the same path (read_table's entry: one
+    footer inference per file version, none once cached).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(path).schema
+    batch, nanos = _read_parquet(spark, path)
+    schema = batch.schema
     if os.path.isfile(path):
         # The file streaming source monitors a DIRECTORY; expose a
         # single-file input through a symlinked staging dir. The dir
@@ -68,7 +70,7 @@ def read_event_stream(
     sdf = reader.parquet(path)
     # Watermarks require TIMESTAMP (not TIMESTAMP_NTZ); the session
     # timezone is pinned UTC above, so the instant is identical.
-    for col in _nanos_timestamp_columns(path):
+    for col in nanos:
         sdf = sdf.withColumn(
             col, F.timestamp_micros(F.expr(f"{col} div 1000"))
         )

@@ -1306,28 +1306,16 @@ def test_r12_clique_construction_executes_zero_jobs(spark):
     reg = load_all()
 
     def compute_jobs(group: str, build) -> list[int]:
-        """Job ids in `group`, excluding parquet footer/schema
-        inference ("parquet at ..." single-task jobs) — session
-        housekeeping Spark may or may not run on a read, not
-        workload compute."""
+        """Job ids in `group` for a warm build: a first, unmeasured
+        build fills read_table's schema cache, so no footer-inference
+        job is left to exempt and every counted job is compute."""
+        build()
         sc.setJobGroup(group, "probe")
         try:
             build()
-            ids = list(sc.statusTracker().getJobIdsForGroup(group))
+            return list(sc.statusTracker().getJobIdsForGroup(group))
         finally:
             sc.setJobGroup(None, None)
-        st = sc.statusTracker()
-        real = []
-        for j in ids:
-            info = st.getJobInfo(j)
-            names = [
-                (st.getStageInfo(s).name if st.getStageInfo(s) else "")
-                for s in list(info.stageIds)
-            ]
-            if all(nm.startswith("parquet at") for nm in names):
-                continue
-            real.append(j)
-        return real
 
     assert compute_jobs(
         "census-construction-probe",
