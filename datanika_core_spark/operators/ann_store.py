@@ -74,7 +74,7 @@ class IVFIndexStore:
         seeds = (
             vecs.orderBy("vec_id").limit(self.k)
             .select(F.row_number().over(Window.orderBy("vec_id")) - 1, "v")
-            .collect()
+            .collect()  # bound: k seed vectors
         )
         cents = {int(r[0]): list(r[1]) for r in seeds}
         for _ in range(self.iters):
@@ -85,7 +85,7 @@ class IVFIndexStore:
                 assigned.select("cid", F.posexplode("v").alias("pos", "x"))
                 .groupBy("cid", "pos")
                 .agg(F.round(F.avg("x"), 6).alias("m"))
-                .collect()
+                .collect()  # bound: k x dim centroid coordinates
             )
             by_cid: dict[int, dict[int, float]] = {}
             for r in rows:
@@ -114,6 +114,7 @@ class IVFIndexStore:
             )
         return {
             int(r.cid): list(r.cvec)
+            # bound: k centroid rows
             for r in self.spark.table(self.centroids_table).collect()
         }
 

@@ -26,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datanika_core_spark.operators.merge_store import MergeStore
 from datanika_core_spark.workloads.sketches import _BF_K, _BF_M, _s_positions
 
 
@@ -49,39 +50,27 @@ class BloomFilterStore:
     k: int = _BF_K
     m: int = _BF_M
 
+    def __post_init__(self):
+        self.state = MergeStore(
+            self.spark, self.table, "word bigint, bits bigint",
+            keys=["word"], merge={"bits": "bit_or"},
+        )
+
     def update(self, values: DataFrame, value_col: str) -> None:
         """OR-merge a batch into the stored bitset (Bloom union).
         One scan of the batch; the stored table is ≤ m/64 rows."""
-        new_words = (
+        self.state.absorb(
             _word_bits(values, value_col)
             .groupBy("word")
-            .agg(F.expr("bit_or(bit)").alias("bits"))
+            .agg(F.bit_or("bit").alias("bits"))
         )
-        if self.spark.catalog.tableExists(self.table):
-            merged = (
-                self.spark.table(self.table)
-                .unionByName(new_words)
-                .groupBy("word")
-                .agg(F.expr("bit_or(bits)").alias("bits"))
-            )
-        else:
-            merged = new_words
-        # ≤1024 rows: stage through a local collect so the overwrite
-        # doesn't read the table it is replacing.
-        rows = merged.collect()
-        out = self.spark.createDataFrame(rows, "word bigint, bits bigint")
-        out.write.format("parquet").mode("overwrite").saveAsTable(self.table)
-        # the overwrite replaces the table's files; without a refresh
-        # a later probe() in the same session can read the CACHED file
-        # listing and die with FILE_NOT_EXIST
-        self.spark.catalog.refreshTable(self.table)
 
     def probe(self, batch: DataFrame, value_col: str,
               keep_cols: list[str]) -> DataFrame:
         """Rows of ``batch`` whose value MIGHT be in the stored set
         (all k bits set). No false negatives; callers exact-verify
         the survivors."""
-        words = self.spark.table(self.table)
+        words = self.state.rows()
         # distinct first: a duplicated input row would double its
         # exploded positions and fail the hits == k test — a false
         # negative, which a Bloom filter must never produce

@@ -110,7 +110,7 @@ def learn_merges(
             _pair_counts(vocab)
             .orderBy(F.col("pair_cnt").desc(), "a", "b")
             .limit(1)
-            .collect()
+            .collect()  # bound: one row
         )
         if not top:
             break

@@ -35,11 +35,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datanika_core_spark.operators.merge_store import MergeStore
 from datanika_core_spark.workloads.sketches import (
     _CMS_D,
     _CMS_W,
     _cms_spark_hash,
 )
+
 
 def _bucket():
     # built lazily: F.expr needs an active SparkContext
@@ -71,20 +73,16 @@ class CMSSketchStore:
     spark: SparkSession
     table: str
 
-    def last_batch_id(self) -> int | None:
-        """The highest batch_id already merged (the one-row
-        watermark stored as the sentinel (d=-1, bucket=-1) counter),
-        or None if the store is fresh / was only ever updated without
-        batch ids."""
-        if not self.spark.catalog.tableExists(self.table):
-            return None
-        rows = (
-            self.spark.table(self.table)
-            .filter(F.col("d") == -1)
-            .select("cnt")
-            .collect()
+    def __post_init__(self):
+        self.state = MergeStore(
+            self.spark, self.table, "d int, bucket bigint, cnt bigint",
+            keys=["d", "bucket"], merge={"cnt": "sum"},
         )
-        return int(rows[0][0]) if rows else None
+
+    def last_batch_id(self) -> int | None:
+        """The highest batch_id already merged, or None if the store is
+        fresh / was only ever updated without batch ids."""
+        return self.state.last_batch_id()
 
     def update(self, toks: DataFrame, batch_id: int | None = None) -> None:
         """Add-merge a batch's counters into the store. Order- and
@@ -92,34 +90,10 @@ class CMSSketchStore:
         addition itself is NOT idempotent, so replay safety comes
         from the batch_id watermark: pass the sink's micro-batch id
         and a redelivered batch (checkpointed foreachBatch crashing
-        after the table overwrite but before the streaming commit)
-        is recognized as already merged and skipped. Updates without
+        after the state swap but before the streaming commit) is
+        recognized as already merged and skipped. Updates without
         a batch_id keep the old effectively-once caveat."""
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch — its counters are already in
-        new = batch_sketch(toks)
-        if self.spark.catalog.tableExists(self.table):
-            merged = (
-                self.spark.table(self.table)
-                .filter(F.col("d") >= 0)  # keep the wm row out of the sum
-                .unionByName(new)
-                .groupBy("d", "bucket")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        else:
-            merged = new
-        # ≤ d×w rows: stage through a local collect so the overwrite
-        # doesn't read the table it is replacing (store convention).
-        rows = [tuple(r) for r in merged.collect()]
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            rows.append((-1, -1, int(new_wm)))
-        out = self.spark.createDataFrame(rows, "d int, bucket bigint, cnt bigint")
-        out.write.format("parquet").mode("overwrite").saveAsTable(self.table)
-        self.spark.catalog.refreshTable(self.table)
+        self.state.absorb(batch_sketch(toks), batch_id)
 
     def estimate(self, probe_toks: DataFrame) -> DataFrame:
         """(tok, cms_est) point-frequency estimates for a ``tok``
@@ -131,7 +105,7 @@ class CMSSketchStore:
         ).withColumn("d", F.col("d").cast("int")).withColumn(
             "bucket", _bucket()
         )
-        sketch = self.spark.table(self.table)
+        sketch = self.state.rows()
         return (
             # bound: <= d x w counters, fixed by the sketch shape
             probes.join(F.broadcast(sketch), ["d", "bucket"], "left")

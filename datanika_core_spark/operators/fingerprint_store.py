@@ -14,9 +14,11 @@ semantics this store can audit cheaply).
 
 Replay discipline: xor is self-inverting, so a REDELIVERED
 micro-batch doesn't just double-count — it CANCELS its own rows out
-of the fingerprint. The batch-id watermark (sentinel row
-grp='__wm__') therefore guards the merge exactly like the CMS/MG
-counter stores; see streaming/freq.py for the crash-window analysis.
+of the fingerprint. The batch-id watermark of the underlying
+:class:`~datanika_core_spark.operators.merge_store.MergeStore` (a
+table property, not a row) therefore guards the merge exactly like
+the CMS/MG counter stores; see streaming/freq.py for the
+crash-window analysis.
 
 At 100 TB: each micro-batch reduces to |groups| (grp, n, fp) rows
 map-side; the merge touches |groups| stored rows; comparing two
@@ -30,8 +32,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: Sentinel group name carrying the replay watermark (n_rows =
-#: highest merged batch_id, fp = -1).
+from datanika_core_spark.operators.merge_store import MergeStore
+
+#: Group name of the retired in-data watermark row. No row carries it
+#: any more (the batch id is a table property); kept so readers that
+#: still filter it out keep importing.
 WM_GRP = "__wm__"
 
 
@@ -53,63 +58,24 @@ class FingerprintStore:
     spark: SparkSession
     table: str
 
-    def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.table):
-            return None
-        rows = (
-            self.spark.table(self.table)
-            .filter(F.col("grp") == WM_GRP)
-            .select("n_rows")
-            .collect()
+    def __post_init__(self):
+        self.state = MergeStore(
+            self.spark, self.table, "grp string, n_rows bigint, fp bigint",
+            keys=["grp"], merge={"n_rows": "sum", "fp": "bit_xor"},
         )
-        return int(rows[0][0]) if rows else None
+
+    def last_batch_id(self) -> int | None:
+        return self.state.last_batch_id()
 
     def update(self, rows: DataFrame, batch_id: int | None = None) -> None:
         """Fold a batch's (grp, h) rows into the stored fingerprints.
         Commutative and associative across any batch split; NOT
         idempotent (xor self-cancels), so redelivered batch ids are
-        skipped via the watermark.
-
-        Durability: the overwrite is non-atomic (same O(k)-rows
-        collect-then-overwrite convention as the CMS/MG stores), so a
-        crash mid-write can lose the store. Recovery path: the store
-        is a pure function of the source — rebuild by replaying
-        ``batch_fingerprint`` over the full table (one scan), which
-        is exactly what the replica-audit consumer does on a cold
-        start. On a lakehouse provider the overwrite is a single
-        atomic commit and the window disappears."""
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch — already folded in
-        new = batch_fingerprint(rows)
-        if self.spark.catalog.tableExists(self.table):
-            merged = (
-                self.spark.table(self.table)
-                .filter(F.col("grp") != WM_GRP)
-                .unionByName(new)
-                .groupBy("grp")
-                .agg(
-                    F.sum("n_rows").cast("bigint").alias("n_rows"),
-                    F.expr("bit_xor(fp)").cast("bigint").alias("fp"),
-                )
-            )
-        else:
-            merged = new
-        # |groups| rows: stage through a local collect so the
-        # overwrite never reads the table it replaces (store
-        # convention, cf. cms_store.update).
-        out_rows = [tuple(r) for r in merged.collect()]
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            out_rows.append((WM_GRP, int(new_wm), -1))
-        out = self.spark.createDataFrame(
-            out_rows, "grp string, n_rows bigint, fp bigint"
-        )
-        out.write.format("parquet").mode("overwrite").saveAsTable(self.table)
-        self.spark.catalog.refreshTable(self.table)
+        skipped via the watermark. The merged table is written through
+        the staged swap, so a crash leaves either the old or the new
+        fingerprints (and their batch id), never a partial table."""
+        self.state.absorb(batch_fingerprint(rows), batch_id)
 
     def fingerprints(self) -> DataFrame:
-        """(grp, n_rows, fp) — watermark sentinel excluded."""
-        return self.spark.table(self.table).filter(F.col("grp") != WM_GRP)
+        """(grp, n_rows, fp) per fingerprinted group."""
+        return self.state.rows()

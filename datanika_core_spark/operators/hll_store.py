@@ -30,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datanika_core_spark.operators.merge_store import MergeStore
 from datanika_core_spark.workloads.sketches import (
     _HLL_RHO,
     _S_HLL_CORR,
@@ -44,7 +45,7 @@ def batch_registers(
     map-side-combinable groupBy; |groups|×64 rows out."""
     # grp is cast to string here because that IS the persisted
     # schema ('grp string, j int, m_rho int') — a non-string group
-    # column would otherwise fail createDataFrame at merge time; and
+    # would otherwise merge as a different key than the stored one; and
     # null value_col rows are dropped (a NULL hash would emit a
     # spurious (grp, NULL, NULL) register row), mirroring how
     # estimate()'s 0..63 grid ignores missing registers.
@@ -73,37 +74,24 @@ class HLLSketchStore:
     spark: SparkSession
     table: str
 
+    def __post_init__(self):
+        self.state = MergeStore(
+            self.spark, self.table, "grp string, j int, m_rho int",
+            keys=["grp", "j"], merge={"m_rho": "max"},
+        )
+
     def update(self, df: DataFrame, group_col: str, value_col: str) -> None:
         """Max-merge a batch's registers into the store. Replay-safe
         and order-independent (register max is an idempotent
         commutative monoid)."""
-        new_regs = batch_registers(df, group_col, value_col)
-        if self.spark.catalog.tableExists(self.table):
-            merged = (
-                self.spark.table(self.table)
-                .unionByName(new_regs)
-                .groupBy("grp", "j")
-                .agg(F.max("m_rho").alias("m_rho"))
-            )
-        else:
-            merged = new_regs
-        # |groups|×64 rows: stage through a local collect so the
-        # overwrite doesn't read the table it is replacing (same
-        # convention as BloomFilterStore; at extreme group counts
-        # switch to a staged-swap table write instead).
-        rows = merged.collect()
-        out = self.spark.createDataFrame(
-            rows, "grp string, j int, m_rho int"
-        )
-        out.write.format("parquet").mode("overwrite").saveAsTable(self.table)
-        self.spark.catalog.refreshTable(self.table)
+        self.state.absorb(batch_registers(df, group_col, value_col))
 
     def estimate(self) -> DataFrame:
         """Per-group distinct estimates from the stored registers:
         (grp, n_est) with the standard linear-counting small-range
         correction — the same integer-exact accumulation as the
         oracle-checked workload."""
-        regs = self.spark.table(self.table)
+        regs = self.state.rows()
         grid = (
             regs.select("grp").distinct()
             .select("grp",

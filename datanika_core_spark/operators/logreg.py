@@ -51,7 +51,7 @@ def train_logreg(
             F.sum(F.expr(f"{resid} * cast({c} as double)")).alias(f"g{i + 1}")
             for i, c in enumerate(feature_cols)
         ]
-        row = df.agg(*aggs).collect()[0]
+        row = df.agg(*aggs).collect()[0]  # bound: one aggregate row
         grad = [row[f"g{i}"] / n for i in range(d + 1)]
         w = [wi - lr * gi for wi, gi in zip(w, grad)]
     return w

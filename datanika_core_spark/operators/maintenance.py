@@ -41,7 +41,7 @@ def _table_files(spark: SparkSession, table: str) -> list[tuple[str, int]]:
         .select(F.input_file_name().alias("f"))
         .groupBy("f")
         .count()
-        .collect()
+        .collect()  # bound: one row per data file of the table
     )
     import os
     from urllib.parse import unquote, urlparse
@@ -222,7 +222,7 @@ def zorder_table(
                 ).alias(f"b_{c}")
                 for c in columns
             ]
-        ).collect()[0]
+        ).collect()[0]  # bound: one aggregate row
         scale_fix = (1 << bits) // n_buckets  # keep bit-width parity
         for c in columns:
             bl = ", ".join(f"{b!r}d" for b in bnds_row[f"b_{c}"])
@@ -238,7 +238,7 @@ def zorder_table(
         bounds = df.agg(
             *[F.min(c).alias(f"lo_{c}") for c in columns],
             *[F.max(c).alias(f"hi_{c}") for c in columns],
-        ).collect()[0]
+        ).collect()[0]  # bound: one aggregate row
         scale = (1 << bits) - 1
         for c in columns:
             lo, hi = float(bounds[f"lo_{c}"]), float(bounds[f"hi_{c}"])

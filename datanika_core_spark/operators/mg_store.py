@@ -20,12 +20,13 @@ exact counts each run.
 
 The merge is NOT idempotent (sums, like the CMS store), so update()
 carries the same batch-id watermark: a micro-batch redelivered after
-a crash between the table overwrite and the streaming-checkpoint
-commit is recognized and skipped.  The watermark and the undershoot
-ride as sentinel rows (tok = reserved names that cannot collide with
-real whitespace-split tokens because they contain a space).
+a crash between the state swap and the streaming-checkpoint commit
+is recognized and skipped.  The watermark is a table property of the
+:class:`~datanika_core_spark.operators.merge_store.MergeStore`; the
+undershoot rides on the one row whose ``tok`` is NULL (NULL tokens
+are dropped from every batch, so no token row can take its place).
 
-At 100 TB: the stored state is <= k + 2 rows regardless of history;
+At 100 TB: the stored state is <= k + 1 rows regardless of history;
 each batch costs one combiner groupBy of the batch plus a <= 2k-row
 driver-side merge.
 """
@@ -37,20 +38,21 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: sentinel keys — contain a space, which a whitespace-split token
-#: stream can never produce.
-_WM_KEY = "__batch watermark__"
-_US_KEY = "__undershoot mass__"
+from datanika_core_spark.operators.merge_store import MergeStore
+
+_SCHEMA = "tok string, resid bigint"
 
 
-def batch_summary(toks: DataFrame, k: int) -> list[tuple[str, int, int]]:
-    """Offset-optimal k-counter MG summary of one batch's ``tok``
-    column: [(tok, resid)] with <= k entries plus the truncation
-    offset, computed by one combiner groupBy + a top-(k+1) driver
-    collect. Returns (rows, offset)."""
+def batch_summary(
+    toks: DataFrame, k: int
+) -> tuple[list[tuple[str, int]], int]:
+    """Offset-optimal k-counter MG summary of one batch's non-NULL
+    ``tok`` values: [(tok, resid)] with <= k entries plus the
+    truncation offset, computed by one combiner groupBy + a top-(k+1)
+    driver collect. Returns (rows, offset)."""
     from pyspark.sql import Window as _W
 
-    cnt = toks.groupBy("tok").agg(
+    cnt = toks.filter(F.col("tok").isNotNull()).groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
     top = (
@@ -59,7 +61,7 @@ def batch_summary(toks: DataFrame, k: int) -> list[tuple[str, int, int]]:
             F.row_number().over(_W.orderBy(F.col("cnt").desc(), "tok")),
         )
         .filter(F.col("rnk") <= k + 1)
-        .collect()
+        .collect()  # bound: the top k + 1 tokens
     )
     off = next((int(r["cnt"]) for r in top if r["rnk"] == k + 1), 0)
     rows = [
@@ -78,27 +80,28 @@ class MGSketchStore:
     table: str
     k: int = 16
 
-    def _stored(self) -> tuple[dict[str, int], int, int | None]:
-        """(residuals, undershoot, watermark) from the table."""
-        if not self.spark.catalog.tableExists(self.table):
-            return {}, 0, None
+    def __post_init__(self):
+        self.state = MergeStore(self.spark, self.table, _SCHEMA)
+
+    def _stored(self) -> tuple[dict[str, int], int]:
+        """(residuals, undershoot) from the table."""
         resid: dict[str, int] = {}
-        us, wm = 0, None
-        for r in self.spark.table(self.table).collect():
-            if r["tok"] == _WM_KEY:
-                wm = int(r["resid"])
-            elif r["tok"] == _US_KEY:
+        us = 0
+        # bound: k residual rows + the undershoot row
+        for r in self.state.rows().collect():
+            if r["tok"] is None:
                 us = int(r["resid"])
             else:
                 resid[r["tok"]] = int(r["resid"])
-        return resid, us, wm
+        return resid, us
 
     def update(self, toks: DataFrame, batch_id: int | None = None) -> None:
         """Fold one batch's tokens into the store (sum + truncate).
-        Replay-safe via the batch-id watermark, like the CMS store."""
-        resid, us, wm = self._stored()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch
+        Replay-safe via the batch-id watermark, like the CMS store;
+        the fold runs on the driver over <= 2k counters."""
+        if self.state.replayed(batch_id):
+            return
+        resid, us = self._stored()
         rows, off = batch_summary(toks, self.k)
         us += off
         for tok, r in rows:
@@ -110,18 +113,11 @@ class MGSketchStore:
         kept = [
             (tok, r - off2) for tok, r in ordered[: self.k] if r - off2 > 0
         ]
-        out_rows = kept + [(_US_KEY, us)]
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            out_rows.append((_WM_KEY, int(new_wm)))
-        out = self.spark.createDataFrame(out_rows, "tok string, resid bigint")
-        out.write.format("parquet").mode("overwrite").saveAsTable(self.table)
-        self.spark.catalog.refreshTable(self.table)
+        state = self.spark.createDataFrame(kept + [(None, us)], _SCHEMA)
+        self.state.commit(state, batch_id)
 
     def last_batch_id(self) -> int | None:
-        return self._stored()[2]
+        return self.state.last_batch_id()
 
     def heavy_hitters(self) -> DataFrame:
         """(tok, mg_est, max_undercount, rank) — every token whose
@@ -129,7 +125,7 @@ class MGSketchStore:
         mg_est never overestimates."""
         from pyspark.sql import Window as _W
 
-        resid, us, _ = self._stored()
+        resid, us = self._stored()
         rows = sorted(resid.items(), key=lambda kv: (-kv[1], kv[0]))
         out = self.spark.createDataFrame(
             [(tok, r, us) for tok, r in rows],

@@ -87,7 +87,7 @@ def init_codebook(
         _subvectors(
             vecs.orderBy("vec_id").limit(k), dim, m
         )
-        .collect()
+        .collect()  # bound: k seed vectors x m subspaces
     )
     ids = sorted({r["vec_id"] for r in seed_rows})
     rank = {vid: i for i, vid in enumerate(ids)}
@@ -126,7 +126,7 @@ def train_pq(
             )
             .groupBy("sub", "cid", "pos")
             .agg(F.sum("x").alias("xsum"), F.count(F.lit(1)).alias("n"))
-            .collect()
+            .collect()  # bound: m x k x sub_d sums
         )
         new_cb = [
             [list(codebook[s][c]) for c in range(k)] for s in range(m)
@@ -265,6 +265,7 @@ class IVFPQIndexStore:
                 f"IVF-PQ index {self.table!r} has no codebook — call"
                 " train() first"
             )
+        # bound: m x k codewords
         rows = self.spark.table(self.codebook_table).collect()
         cb = [[None] * self.k for _ in range(self.m)]
         for r in rows:

@@ -122,7 +122,7 @@ def skyline_grid(
             *[F.min(d).alias(f"n{i}") for i, d in enumerate(dims, 1)],
             *[F.max(d).alias(f"x{i}") for i, d in enumerate(dims, 1)],
         )
-        .collect()  # ≤ cells_per_dim² rows — bounded driver state
+        .collect()  # bound: ≤ cells_per_dim² rows of driver state
     )
     rng = range(1, nd + 1)
     # step 3: drop cells entirely dominated by another cell's corner

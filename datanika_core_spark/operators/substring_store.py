@@ -42,6 +42,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datanika_core_spark.operators.merge_store import MergeStore
 from datanika_core_spark.operators.minhash import spark_hash_expr
 
 ES_K = 20  # minimum duplicated-substring length, chars
@@ -101,6 +102,12 @@ class ExactSubstringIndexStore:
     table: str
     k: int = ES_K
 
+    def __post_init__(self):
+        self._summary = MergeStore(
+            self.spark, self.summary_table, "h bigint, mn bigint, mx bigint",
+            keys=["h"], merge={"mn": "min", "mx": "max"},
+        )
+
     @property
     def docs_table(self) -> str:
         return f"{self.table}_docs"
@@ -138,7 +145,9 @@ class ExactSubstringIndexStore:
             "parquet"
         ).mode(mode).saveAsTable(self.docs_table)
         if appended:
-            self._merge_summary(
+            # min/max-merge: an abelian idempotent monoid like the HLL
+            # register max, written through the store's staged swap
+            self._summary.absorb(
                 grams.groupBy("h").agg(
                     F.min("doc_id").alias("mn"),
                     F.max("doc_id").alias("mx"),
@@ -146,57 +155,25 @@ class ExactSubstringIndexStore:
             )
         return appended
 
-    def _merge_summary(self, batch_sum: DataFrame) -> None:
-        """Min/max-merge batch gram summaries into ``_hsum`` — an
-        abelian idempotent monoid like the HLL register max, executed
-        as a staged swap (the parquet-warehouse MERGE stand-in: an
-        overwrite cannot read the table it replaces)."""
-        stage = f"{self.summary_table}_stage"
-        if self.spark.catalog.tableExists(self.summary_table):
-            merged = (
-                self.spark.table(self.summary_table)
-                .unionByName(batch_sum)
-                .groupBy("h")
-                .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"))
-            )
-        else:
-            merged = batch_sum
-        merged.write.format("parquet").mode("overwrite").saveAsTable(stage)
-        self.spark.table(stage).write.format("parquet").mode(
-            "overwrite"
-        ).saveAsTable(self.summary_table)
-        self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        self.spark.catalog.refreshTable(self.summary_table)
-
     def rebuild_summary(self) -> None:
         """Recompute ``_hsum`` from the index — the recovery path if
         a crash landed between the index append and the summary swap
         (the index is the source of truth)."""
-        self._merge_summary_from_scratch()
-
-    def _merge_summary_from_scratch(self) -> None:
-        full = (
+        self._summary.commit(
             self.spark.table(self.table)
             .groupBy("h")
             .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
         )
-        stage = f"{self.summary_table}_stage"
-        full.write.format("parquet").mode("overwrite").saveAsTable(stage)
-        self.spark.table(stage).write.format("parquet").mode(
-            "overwrite"
-        ).saveAsTable(self.summary_table)
-        self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        self.spark.catalog.refreshTable(self.summary_table)
 
     def _dup_hits(self, grams: DataFrame) -> DataFrame:
         """Positions of ``grams`` whose gram some OTHER ingested doc
         also holds: equi-join against the summary, (mn, mx) ≠ (d, d).
         Equivalent to the one-shot's min(doc) <> max(doc) test — if
         every occurrence of h lives in doc d then mn = mx = d."""
-        if not self.spark.catalog.tableExists(self.summary_table):
+        if not self._summary.exists():
             # nothing ingested yet (or no doc cleared the k floor)
             return grams.select("doc_id", "n", "pos").limit(0)
-        hsum = self.spark.table(self.summary_table)
+        hsum = self._summary.rows()
         return (
             grams.join(hsum, "h")
             .filter(

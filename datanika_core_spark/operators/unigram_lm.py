@@ -97,6 +97,8 @@ def seed_pieces(
     counts = (
         subs.groupBy("piece")
         .agg(F.sum("cnt").alias("cnt"))
+        # bound: substrings (<= max_piece_len chars) of the word
+        # vocabulary — grows with the vocabulary, not the corpus
         .collect()
     )
     singles = {r.piece: r.cnt for r in counts if len(r.piece) == 1}
@@ -171,7 +173,7 @@ def em_step(
         word_vocab.mapInPandas(count_pieces, _PIECE_COUNT_SCHEMA)
         .groupBy("piece")
         .agg(F.sum("n").alias("n"))
-        .collect()
+        .collect()  # bound: one row per piece of the vocabulary
     )
     counts = {r.piece: r.n for r in counted}
     total = sum(counts.values())

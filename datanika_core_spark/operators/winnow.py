@@ -187,6 +187,7 @@ class WinnowingFingerprintStore:
         # N-batch ingest holds O(1) block sets (flagged itself stays;
         # the returned kept frame reads it)
         unpersist_rdd_ids(self.spark, ids_probe)
+        # bound: <= one micro-batch's doc ids
         rejected = sorted(r.doc_id for r in flagged.collect())
         # bound: <= one micro-batch's doc ids
         kept = batch.join(F.broadcast(flagged), "doc_id", "left_anti")

@@ -183,7 +183,7 @@ class TableWriter:
         try:
             rows = self.spark.sql(
                 f"DESCRIBE TABLE EXTENDED {table}"
-            ).collect()
+            ).collect()  # bound: the table's columns + metadata rows
         except Exception:  # noqa: BLE001 — e.g. temp view
             return ""
         for r in rows:
@@ -265,10 +265,21 @@ class TableWriter:
             self.spark.catalog.dropTempView(view)
         return obs.get["rows"]
 
-    def _swap_in(self, df: DataFrame, table: str) -> None:
+    def _swap_in(
+        self,
+        df: DataFrame,
+        table: str,
+        properties: Mapping[str, str] | None = None,
+    ) -> None:
         """Replace ``table`` with ``df`` via a staging table (df's plan
         reads ``table`` itself, so a direct overwrite would read-write
         conflict).
+
+        ``properties`` become table properties of the stage, set by the
+        same statement that creates it: they commit with the data in
+        the stage's rename, and a stage exists in the catalog only
+        complete. A missing ``table`` skips the aside-rename — the
+        stage simply takes its name.
 
         The swap is NOT atomic on a parquet warehouse (a transactional
         format is the real fix — see ``_merge_into``); it is ordered to
@@ -285,9 +296,13 @@ class TableWriter:
         """
         stage, old = f"{table}__stage", f"{table}__old"
         drop_table(self.spark, stage)
-        df.write.format("parquet").mode("overwrite").saveAsTable(stage)
+        writer = df.writeTo(stage).using("parquet")
+        for key, value in (properties or {}).items():
+            writer = writer.tableProperty(key, value)
+        writer.create()
         drop_table(self.spark, old)
-        self.spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
+        if self.spark.catalog.tableExists(table):
+            self.spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
         self.spark.sql(f"ALTER TABLE {stage} RENAME TO {table}")
         self.spark.sql(f"DROP TABLE IF EXISTS {old}")
 

@@ -67,6 +67,11 @@ _DEFAULTS: Mapping[str, str] = {
     "spark.scheduler.mode": "FAIR",
 }
 
+#: directory holding the package — the Python workers' import root
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
 #: shipped pool definitions for the ModelRunner workers; pools are
 #: auto-created with the same defaults past models-3, the file is the
 #: operator knob for re-weighting model runs on a shared cluster
@@ -84,13 +89,21 @@ def build_spark(
     warehouse_dir: str | None = None,
     extra_conf: Mapping[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults."""
+    """Build (or reuse) a SparkSession with engine defaults.
+
+    The Python workers get the package's parent directory at the front
+    of their ``PYTHONPATH`` (ahead of the inherited value), so Python
+    UDFs import the package whatever the working directory is."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or int(cpus))
+    inherited = os.environ.get("PYTHONPATH")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        [_PACKAGE_PARENT] + ([inherited] if inherited else [])
+    )
     if warehouse_dir:
         conf["spark.sql.warehouse.dir"] = warehouse_dir
     if extra_conf:

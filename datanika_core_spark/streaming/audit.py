@@ -12,11 +12,11 @@ without rescanning history.
 State sizes: Benford is 9 digit counters; SPRT is 5 scalars per
 experiment arm; the KS and Mann-Whitney grids are bounded by the
 VALUE DOMAIN (|types| x |distinct cents|, 2 x |distinct cents|),
-never by stream volume. Every absorb() path carries the same
-batch-id watermark as the CMS/DQ stores (the counters are not
-idempotent), so a micro-batch redelivered after a crash between
-the state overwrite and the streaming-checkpoint commit is applied
-exactly once.
+never by stream volume. Every monitor keeps its state in a
+:class:`~datanika_core_spark.operators.merge_store.MergeStore`, whose
+batch-id watermark (the counters are not idempotent) applies a
+micro-batch redelivered after a crash between the state swap and the
+streaming-checkpoint commit exactly once.
 
 Ordering caveat (SPRT only, documented): the LLR walk is a
 SEQUENTIAL fold, so micro-batches must arrive in event-time order
@@ -38,11 +38,11 @@ rows regardless of stream volume.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datanika_core_spark.operators.merge_store import MergeStore
+from datanika_core_spark.streaming.jobs import StreamStats, drain_files
 from datanika_core_spark.workloads.dataquality import _BENFORD
 from datanika_core_spark.workloads.stats import (
     _SPRT_L0,
@@ -54,12 +54,6 @@ from datanika_core_spark.workloads.stats import (
 )
 
 
-@dataclass
-class AuditStats:
-    batches: int = 0
-    arrived: int = 0
-
-
 # --------------------------------------------------------------------------
 # Benford first-digit monitor — pure additive digit counters.
 # --------------------------------------------------------------------------
@@ -68,31 +62,22 @@ class AuditStats:
 class StreamBenfordMonitor:
     """Persisted streaming first-digit counters over an events feed.
 
-    The stored table is (digit, n_obs) for digits 1..9 plus the
-    digit=-1 watermark row; absorb() add-merges one micro-batch's
-    digit counts (commutative, so out-of-order delivery is fine —
-    only REPLAY needs the watermark)."""
+    The stored table is (digit, n_obs) for digits 1..9; absorb()
+    add-merges one micro-batch's digit counts (commutative, so
+    out-of-order delivery is fine — only REPLAY needs the watermark)."""
 
     def __init__(self, spark: SparkSession, counters_table: str):
         self.spark = spark
         self.counters_table = counters_table
+        self.state = MergeStore(
+            spark, counters_table, "digit bigint, n_obs bigint",
+            keys=["digit"], merge={"n_obs": "sum"},
+        )
 
     def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.counters_table):
-            return None
-        rows = (
-            self.spark.table(self.counters_table)
-            .filter(F.col("digit") == -1)
-            .select("n_obs")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
+        return self.state.last_batch_id()
 
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch
         # identical digit extraction to the batch workload: exact
         # BIGINT cents' decimal string, first character
         delta = (
@@ -108,34 +93,12 @@ class StreamBenfordMonitor:
             .groupBy("digit")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"))
         )
-        if spark.catalog.tableExists(self.counters_table):
-            merged = (
-                spark.table(self.counters_table)
-                .filter(F.col("digit") >= 0)
-                .unionByName(delta)
-                .groupBy("digit")
-                .agg(F.sum("n_obs").cast("bigint").alias("n_obs"))
-            )
-        else:
-            merged = delta
-        rows = [tuple(r) for r in merged.collect()]  # <= 9 rows
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            rows.append((-1, int(new_wm)))
-        out = spark.createDataFrame(rows, "digit bigint, n_obs bigint")
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.counters_table
-        )
-        spark.catalog.refreshTable(self.counters_table)
+        self.state.absorb(delta, batch_id)
 
     def report(self) -> DataFrame:
         """Same shape and math as the batch workload: (digit, n_obs,
         obs_share, benford_share, abs_gap)."""
-        obs = self.spark.table(self.counters_table).filter(
-            F.col("digit") > 0
-        )
+        obs = self.state.rows()
         tot = obs.agg(F.sum("n_obs").cast("bigint").alias("n"))
         benford = F.lit(None).cast("double")
         for d, p in _BENFORD.items():
@@ -163,55 +126,14 @@ def stream_benford_audit(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> AuditStats:
+) -> StreamStats:
     """Absorb all currently-available events files (availableNow)
     into the Benford monitor; query ``monitor.report()`` any time."""
-    from datanika_core_spark.streaming.jobs import read_event_stream
-
-    stats = AuditStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
+    return drain_files(
+        spark, source_path, monitor.absorb, monitor.state, kind="benford",
+        checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(monitor.counters_table):
-            spark.catalog.refreshTable(monitor.counters_table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "benford", monitor.counters_table,
-        has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {monitor.counters_table}"
-        ),
-    )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(monitor.counters_table):
-        spark.catalog.refreshTable(monitor.counters_table)
-    return stats
 
 
 # --------------------------------------------------------------------------
@@ -237,45 +159,25 @@ class StreamSPRTMonitor:
     def __init__(self, spark: SparkSession, state_table: str):
         self.spark = spark
         self.state_table = state_table
+        self.state = MergeStore(
+            spark, state_table,
+            "arm int, n_trials bigint, n_success bigint,"
+            " i_up bigint, i_lo bigint",
+        )
 
     def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.state_table):
-            return None
-        rows = (
-            self.spark.table(self.state_table)
-            .filter(F.col("arm") == -1)
-            .select("n_trials")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
-
-    def _state_map(self) -> dict[int, tuple[int, int, int | None, int | None]]:
-        if not self.spark.catalog.tableExists(self.state_table):
-            return {}
-        return {
-            int(r["arm"]): (
-                int(r["n_trials"]), int(r["n_success"]),
-                None if r["i_up"] is None else int(r["i_up"]),
-                None if r["i_lo"] is None else int(r["i_lo"]),
-            )
-            for r in self.spark.table(self.state_table)
-            .filter(F.col("arm") >= 0).collect()
-        }
+        return self.state.last_batch_id()
 
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
         from pyspark.sql import Window as _W
 
-        spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch
-        state = self._state_map()
-        # stored per-arm offsets as a 2-row broadcast frame
-        off_rows = [
-            (arm, s[0], s[1]) for arm, s in state.items()
-        ] or [(a, 0, 0) for a in (0, 1)]
-        offs = spark.createDataFrame(
-            off_rows, "variant int, n0 bigint, c0 bigint"
+        if self.state.replayed(batch_id):
+            return
+        stored = self.state.rows()
+        offs = stored.select(
+            F.col("arm").alias("variant"),
+            F.col("n_trials").alias("n0"),
+            F.col("n_success").alias("c0"),
         )
         trials = batch.filter(F.col("event_type") == "purchase").select(
             F.expr(
@@ -292,7 +194,7 @@ class StreamSPRTMonitor:
             .orderBy("ts", "event_id")
             .rowsBetween(_W.unboundedPreceding, _W.currentRow)
         )
-        # bound: two variant rows, driver-built
+        # bound: one stored row per arm (two variants)
         walk = trials.join(F.broadcast(offs), "variant", "left").select(
             "variant",
             (F.coalesce(F.col("n0"), F.lit(0)) + F.row_number().over(
@@ -306,53 +208,29 @@ class StreamSPRTMonitor:
             F.col("conv") * F.lit(_SPRT_L1)
             + (F.col("i") - F.col("conv")) * F.lit(_SPRT_L0),
         )
-        agg = {
-            int(r["variant"]): r
-            for r in llr.groupBy("variant").agg(
-                F.max("i").cast("bigint").alias("n"),
-                F.max("conv").cast("bigint").alias("c"),
-                F.min(F.when(F.col("llr") >= _SPRT_UP, F.col("i")))
-                .cast("bigint").alias("b_iup"),
-                F.min(F.when(F.col("llr") <= _SPRT_LO, F.col("i")))
-                .cast("bigint").alias("b_ilo"),
-            ).collect()
-        }
-        arms = sorted(set(state) | set(agg))
-        rows: list[tuple] = []
-        for arm in arms:
-            n0, c0, iup0, ilo0 = state.get(arm, (0, 0, None, None))
-            r = agg.get(arm)
-            if r is None:
-                rows.append((arm, n0, c0, iup0, ilo0))
-                continue
-            rows.append((
-                arm,
-                int(r["n"]),
-                int(r["c"]),
-                iup0 if iup0 is not None else (
-                    None if r["b_iup"] is None else int(r["b_iup"])),
-                ilo0 if ilo0 is not None else (
-                    None if r["b_ilo"] is None else int(r["b_ilo"])),
-            ))
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
+        step = llr.groupBy(F.col("variant").alias("arm")).agg(
+            F.max("i").cast("bigint").alias("n"),
+            F.max("conv").cast("bigint").alias("c"),
+            F.min(F.when(F.col("llr") >= _SPRT_UP, F.col("i")))
+            .cast("bigint").alias("b_iup"),
+            F.min(F.when(F.col("llr") <= _SPRT_LO, F.col("i")))
+            .cast("bigint").alias("b_ilo"),
         )
-        if new_wm is not None:
-            rows.append((-1, int(new_wm), 0, None, None))
-        out = spark.createDataFrame(
-            rows,
-            "arm int, n_trials bigint, n_success bigint,"
-            " i_up bigint, i_lo bigint",
+        # an arm the batch reached continues its walk (totals from the
+        # batch, first crossings kept once set); the others keep theirs
+        nxt = stored.join(step, "arm", "full_outer").select(
+            "arm",
+            F.coalesce("n", "n_trials").alias("n_trials"),
+            F.coalesce("c", "n_success").alias("n_success"),
+            F.coalesce("i_up", "b_iup").alias("i_up"),
+            F.coalesce("i_lo", "b_ilo").alias("i_lo"),
         )
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.state_table
-        )
-        spark.catalog.refreshTable(self.state_table)
+        self.state.commit(nxt, batch_id)
 
     def report(self) -> DataFrame:
         """Same shape and math as the batch workload: (arm, n_trials,
         n_success, final_llr, decision, n_at_decision)."""
-        st = self.spark.table(self.state_table).filter(F.col("arm") >= 0)
+        st = self.state.rows()
         final_llr = (
             F.col("n_success") * F.lit(_SPRT_L1)
             + (F.col("n_trials") - F.col("n_success")) * F.lit(_SPRT_L0)
@@ -388,56 +266,15 @@ def stream_sprt_monitor(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> AuditStats:
+) -> StreamStats:
     """Absorb all currently-available events files (availableNow, in
     listing order — the SPRT walk needs ordered delivery) into the
     monitor; query ``monitor.report()`` any time."""
-    from datanika_core_spark.streaming.jobs import read_event_stream
-
-    stats = AuditStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
+    return drain_files(
+        spark, source_path, monitor.absorb, monitor.state, kind="sprt",
+        checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(monitor.state_table):
-            spark.catalog.refreshTable(monitor.state_table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "sprt", monitor.state_table,
-        has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {monitor.state_table}"
-        ),
-    )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(monitor.state_table):
-        spark.catalog.refreshTable(monitor.state_table)
-    return stats
 
 
 # --------------------------------------------------------------------------
@@ -463,23 +300,16 @@ class StreamKSDriftMonitor:
         self.spark = spark
         self.counters_table = counters_table
         self.mid_day = int(mid_day)
+        self.state = MergeStore(
+            spark, counters_table,
+            "event_type string, p int, c bigint, cnt bigint",
+            keys=["event_type", "p", "c"], merge={"cnt": "sum"},
+        )
 
     def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.counters_table):
-            return None
-        rows = (
-            self.spark.table(self.counters_table)
-            .filter(F.col("p") == -1)
-            .select("cnt")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
+        return self.state.last_batch_id()
 
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch
         delta = (
             batch.select(
                 "event_type",
@@ -492,32 +322,7 @@ class StreamKSDriftMonitor:
             .groupBy("event_type", "p", "c")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        if spark.catalog.tableExists(self.counters_table):
-            merged = (
-                spark.table(self.counters_table)
-                .filter(F.col("p") >= 0)
-                .unionByName(delta)
-                .groupBy("event_type", "p", "c")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        else:
-            merged = delta
-        # bounded by the value domain, not stream volume — stage
-        # through a local collect so the overwrite doesn't read the
-        # table it replaces (store convention)
-        rows = [tuple(r) for r in merged.collect()]
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            rows.append(("__batch watermark__", -1, -1, int(new_wm)))
-        out = spark.createDataFrame(
-            rows, "event_type string, p int, c bigint, cnt bigint"
-        )
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.counters_table
-        )
-        spark.catalog.refreshTable(self.counters_table)
+        self.state.absorb(delta, batch_id)
 
     def report(self) -> DataFrame:
         """Same shape and math as the batch workload: (event_type,
@@ -526,9 +331,7 @@ class StreamKSDriftMonitor:
 
         from datanika_core_spark.workloads.evalmetrics import _KS_CRIT_05
 
-        cnts = self.spark.table(self.counters_table).filter(
-            F.col("p") >= 0
-        )
+        cnts = self.state.rows()
         by_val = cnts.groupBy("event_type", "c").agg(
             F.sum(F.when(F.col("p") == 0, F.col("cnt")).otherwise(0))
             .cast("bigint").alias("na"),
@@ -588,56 +391,15 @@ def stream_ks_drift(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> AuditStats:
+) -> StreamStats:
     """Absorb all currently-available events files (availableNow)
     into the KS drift monitor; counts are commutative, so file order
     is irrelevant."""
-    from datanika_core_spark.streaming.jobs import read_event_stream
-
-    stats = AuditStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
+    return drain_files(
+        spark, source_path, monitor.absorb, monitor.state, kind="ks",
+        checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(monitor.counters_table):
-            spark.catalog.refreshTable(monitor.counters_table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "ks", monitor.counters_table,
-        has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {monitor.counters_table}"
-        ),
-    )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(monitor.counters_table):
-        spark.catalog.refreshTable(monitor.counters_table)
-    return stats
 
 
 # --------------------------------------------------------------------------
@@ -657,23 +419,15 @@ class StreamMannWhitneyMonitor:
     def __init__(self, spark: SparkSession, counters_table: str):
         self.spark = spark
         self.counters_table = counters_table
+        self.state = MergeStore(
+            spark, counters_table, "variant int, c bigint, cnt bigint",
+            keys=["variant", "c"], merge={"cnt": "sum"},
+        )
 
     def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.counters_table):
-            return None
-        rows = (
-            self.spark.table(self.counters_table)
-            .filter(F.col("variant") == -1)
-            .select("cnt")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
+        return self.state.last_batch_id()
 
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch
         delta = (
             batch.filter(F.col("event_type") == "purchase")
             .select(
@@ -687,29 +441,7 @@ class StreamMannWhitneyMonitor:
             .groupBy("variant", "c")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        if spark.catalog.tableExists(self.counters_table):
-            merged = (
-                spark.table(self.counters_table)
-                .filter(F.col("variant") >= 0)
-                .unionByName(delta)
-                .groupBy("variant", "c")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        else:
-            merged = delta
-        rows = [tuple(r) for r in merged.collect()]  # value-domain bound
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            rows.append((-1, -1, int(new_wm)))
-        out = spark.createDataFrame(
-            rows, "variant int, c bigint, cnt bigint"
-        )
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.counters_table
-        )
-        spark.catalog.refreshTable(self.counters_table)
+        self.state.absorb(delta, batch_id)
 
     def report(self) -> DataFrame:
         """Same shape and math as the batch workload: (n_a, n_b,
@@ -718,9 +450,7 @@ class StreamMannWhitneyMonitor:
         batch one, not an approximation."""
         from pyspark.sql import Window as _W
 
-        cnts = self.spark.table(self.counters_table).filter(
-            F.col("variant") >= 0
-        )
+        cnts = self.state.rows()
         by_val = cnts.groupBy("c").agg(
             F.sum(F.when(F.col("variant") == 0, F.col("cnt")).otherwise(0))
             .cast("bigint").alias("na"),
@@ -775,53 +505,12 @@ def stream_mann_whitney(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> AuditStats:
+) -> StreamStats:
     """Absorb all currently-available events files (availableNow)
     into the Mann-Whitney monitor; counts are commutative, so file
     order is irrelevant."""
-    from datanika_core_spark.streaming.jobs import read_event_stream
-
-    stats = AuditStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
+    return drain_files(
+        spark, source_path, monitor.absorb, monitor.state, kind="mw",
+        checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(monitor.counters_table):
-            spark.catalog.refreshTable(monitor.counters_table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "mw", monitor.counters_table,
-        has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {monitor.counters_table}"
-        ),
-    )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(monitor.counters_table):
-        spark.catalog.refreshTable(monitor.counters_table)
-    return stats

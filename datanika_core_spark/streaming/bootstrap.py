@@ -8,9 +8,10 @@ recomputed from the merged moments at any point of the stream and
 EQUALS the batch CI over everything absorbed so far.
 
 State: (priority, r, sw, swx) for the |groups|×R replicate moment
-grid, r = -1 rows for the point-estimate moments (n, Σx), plus the
-'_wm' batch-id watermark row (counter addition is not idempotent —
-same replay discipline as the CMS/MG/DQ/collocation stores).
+grid plus r = -1 rows for the point-estimate moments (n, Σx), in a
+:class:`~datanika_core_spark.operators.merge_store.MergeStore` whose
+batch-id watermark guards replay (counter addition is not idempotent
+— same replay discipline as the CMS/MG/DQ/collocation stores).
 
 Parity: tests/test_stream_bootstrap.py streams orders in two files
 and asserts ``report()`` EQUALS the batch workload over the
@@ -25,13 +26,11 @@ touches the same grid — stream volume never grows the state.
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datanika_core_spark.streaming.jobs import read_event_stream
+from datanika_core_spark.operators.merge_store import MergeStore
+from datanika_core_spark.streaming.jobs import StreamStats, drain_files
 from datanika_core_spark.workloads.stats import (
     _BS_C0,
     _BS_C1,
@@ -43,12 +42,6 @@ from datanika_core_spark.workloads.stats import (
     _BS_R,
     _spark_hash,
 )
-
-
-@dataclass
-class BootstrapStats:
-    batches: int = 0
-    arrived: int = 0
 
 
 def _batch_moments(batch: DataFrame) -> DataFrame:
@@ -103,59 +96,22 @@ class StreamBootstrapMonitor:
     def __init__(self, spark: SparkSession, state_table: str):
         self.spark = spark
         self.state_table = state_table
+        self.state = MergeStore(
+            spark, state_table,
+            "priority string, r int, sw bigint, swx bigint",
+            keys=["priority", "r"], merge={"sw": "sum", "swx": "sum"},
+        )
 
     def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.state_table):
-            return None
-        rows = (
-            self.spark.table(self.state_table)
-            .filter(F.col("priority") == "_wm")
-            .select("sw")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
+        return self.state.last_batch_id()
 
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch — moments already merged
-        delta = _batch_moments(batch)
-        if spark.catalog.tableExists(self.state_table):
-            merged = (
-                spark.table(self.state_table)
-                .filter(F.col("priority") != "_wm")
-                .unionByName(delta)
-                .groupBy("priority", "r")
-                .agg(
-                    F.sum("sw").cast("bigint").alias("sw"),
-                    F.sum("swx").cast("bigint").alias("swx"),
-                )
-            )
-        else:
-            merged = delta
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            wm_row = spark.createDataFrame(
-                [("_wm", -2, int(new_wm), 0)],
-                "priority string, r int, sw bigint, swx bigint",
-            )
-            merged = merged.unionByName(wm_row)
-        out = merged.localCheckpoint(eager=True)
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.state_table
-        )
-        out.unpersist()
-        spark.catalog.refreshTable(self.state_table)
+        self.state.absorb(_batch_moments(batch), batch_id)
 
     def report(self) -> DataFrame:
         """Identical shape + math to bootstrap_ci_poisson over
         everything absorbed so far."""
-        state = self.spark.table(self.state_table).filter(
-            F.col("priority") != "_wm"
-        )
+        state = self.state.rows()
         rep_means = state.filter(F.col("r") >= 0).select(
             "priority", "r",
             (F.col("swx") * 1.0 / F.col("sw")).alias("m"),
@@ -198,51 +154,12 @@ def stream_bootstrap_ci(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> BootstrapStats:
+) -> StreamStats:
     """Absorb all currently-available orders files (availableNow)
     into the replicate moments; query ``monitor.report()`` any time
     after."""
-    stats = BootstrapStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
+    return drain_files(
+        spark, source_path, monitor.absorb, monitor.state, kind="bootstrap",
+        checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(monitor.state_table):
-            spark.catalog.refreshTable(monitor.state_table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "bootstrap", monitor.state_table,
-        has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {monitor.state_table}"
-        ),
-    )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(monitor.state_table):
-        spark.catalog.refreshTable(monitor.state_table)
-    return stats

@@ -7,10 +7,12 @@ stream without rescanning history. This closes the last batch
 workload without a streaming twin in the additive-counter family.
 
 State: (kind, key, n) rows — kind 'u' for unigram counts, 'b' for
-bigram counts, plus the '_wm' batch-id watermark row. Counts are
-commutative monoids, so file-delivery ORDER is irrelevant; only
-REPLAY needs the watermark (counter addition is not idempotent —
-same discipline as the CMS/MG/DQ stores).
+bigram counts — in a
+:class:`~datanika_core_spark.operators.merge_store.MergeStore`.
+Counts are commutative monoids, so file-delivery ORDER is
+irrelevant; only REPLAY needs the store's batch-id watermark
+(counter addition is not idempotent — same discipline as the
+CMS/MG/DQ stores).
 
 Parity: tests/test_stream_colloc.py streams the corpus in two files
 and asserts ``report()`` EQUALS the batch workload over the
@@ -28,22 +30,15 @@ heavy-hitter state is acceptable).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datanika_core_spark.streaming.jobs import read_event_stream
+from datanika_core_spark.operators.merge_store import MergeStore
+from datanika_core_spark.streaming.jobs import StreamStats, drain_files
 from datanika_core_spark.workloads.corpus_quality import (
     _COLL_MIN_SUPPORT,
     _COLL_TOPK,
 )
-
-
-@dataclass
-class CollocStats:
-    batches: int = 0
-    arrived: int = 0
 
 
 def _batch_counts(batch: DataFrame, text_col: str) -> DataFrame:
@@ -85,59 +80,24 @@ class StreamCollocationMonitor:
     def __init__(self, spark: SparkSession, counters_table: str):
         self.spark = spark
         self.counters_table = counters_table
+        self.state = MergeStore(
+            spark, counters_table, "kind string, key string, n bigint",
+            keys=["kind", "key"], merge={"n": "sum"},
+        )
 
     def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.counters_table):
-            return None
-        rows = (
-            self.spark.table(self.counters_table)
-            .filter(F.col("kind") == "_wm")
-            .select("n")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
+        return self.state.last_batch_id()
 
     def absorb(self, batch: DataFrame, batch_id: int | None = None,
                text_col: str = "text") -> None:
-        spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # replayed batch — counters already contain it
-        delta = _batch_counts(batch, text_col)
-        if spark.catalog.tableExists(self.counters_table):
-            merged = (
-                spark.table(self.counters_table)
-                .filter(F.col("kind") != "_wm")
-                .unionByName(delta)
-                .groupBy("kind", "key")
-                .agg(F.sum("n").cast("bigint").alias("n"))
-            )
-        else:
-            merged = delta
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            wm_row = spark.createDataFrame(
-                [("_wm", "", int(new_wm))], "kind string, key string, n bigint"
-            )
-            merged = merged.unionByName(wm_row)
-        # materialize before the overwrite: the merged plan READS the
-        # same table the write replaces (same hazard the DQ monitor
-        # documents)
-        out = merged.localCheckpoint(eager=True)
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.counters_table
-        )
-        out.unpersist()
-        spark.catalog.refreshTable(self.counters_table)
+        self.state.absorb(_batch_counts(batch, text_col), batch_id)
 
     def report(self) -> DataFrame:
         """Identical shape + math to collocation_pmi_bigrams: the
         top-{_COLL_TOPK} bigrams by the exact-integer PMI ratio."""
         from pyspark.sql import Window as _W
 
-        state = self.spark.table(self.counters_table)
+        state = self.state.rows()
         uni = state.filter(F.col("kind") == "u").select(
             F.col("key").alias("tok"), "n"
         )
@@ -192,51 +152,15 @@ def stream_collocations(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> CollocStats:
+) -> StreamStats:
     """Absorb all currently-available document files (availableNow)
     into the collocation counters; query ``monitor.report()`` any
     time after."""
-    stats = CollocStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(monitor.counters_table):
-            spark.catalog.refreshTable(monitor.counters_table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id, text_col=text_col)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "colloc", monitor.counters_table,
-        has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {monitor.counters_table}"
+    return drain_files(
+        spark, source_path,
+        lambda batch_df, batch_id: monitor.absorb(
+            batch_df, batch_id=batch_id, text_col=text_col
         ),
+        monitor.state, kind="colloc", checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(monitor.counters_table):
-        spark.catalog.refreshTable(monitor.counters_table)
-    return stats

@@ -36,13 +36,15 @@ from datanika_core_spark.operators.minhash import (
     band_signatures,
     with_shingles,
 )
-from datanika_core_spark.streaming.jobs import read_event_stream
+from datanika_core_spark.streaming.jobs import (
+    StreamStats,
+    drain,
+    read_event_stream,
+)
 
 
 @dataclass
-class CurateStats:
-    batches: int = 0
-    arrived: int = 0
+class CurateStats(StreamStats):
     dropped_quality: int = 0
     dropped_dup: int = 0
     loaded: int = 0
@@ -110,26 +112,16 @@ def stream_curate(
     """Run the curation stream over all currently-available files
     (availableNow) and return per-stage accounting."""
     stats = CurateStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
+    n_clean_total = 0
 
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        # The previous batch appended through the micro-batch session
-        # clone; this session's cached file indexes for the corpus +
-        # store tables are stale (reads would silently miss the
-        # newest appends — a correctness bug, not a perf issue).
-        for t in (corpus_table, store.table):
-            if spark.catalog.tableExists(t):
-                spark.catalog.refreshTable(t)
-        stats.batches += 1
-        n_arrived = batch_df.count()
-        stats.arrived += n_arrived
+    def _absorb(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal n_clean_total
         clean = _batch_quality_gate(
             batch_df, min_tokens, max_dup_bigram
         ).localCheckpoint(eager=True)  # batch reused by 4 branches
         n_clean = clean.count()
-        stats.dropped_quality += n_arrived - n_clean
+        n_clean_total += n_clean
+        stats.dropped_quality = stats.arrived - n_clean_total
         if n_clean == 0:
             return
 
@@ -219,6 +211,7 @@ def stream_curate(
             verified.select("doc_new").distinct()
             .localCheckpoint(eager=True)
         )
+        # bound: <= one micro-batch's doc ids
         rejected = sorted(r.doc_new for r in rejected_df.collect())
         stats.dropped_dup += len(rejected)
         stats.rejected_ids.extend(rejected)
@@ -237,38 +230,22 @@ def stream_curate(
         kept.write.format("parquet").mode(mode).saveAsTable(corpus_table)
         stats.loaded += store.update(kept)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # every frame the batch checkpoints is written or collected
-        # WITHIN the batch; freeing its blocks at batch end keeps an
-        # N-batch stream pinning O(1) block sets, not O(N) (the
-        # round-5 bench OOM was this leak class at session scope)
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "curate", corpus_table,
+    # the previous batch appended through the micro-batch session
+    # clone, so drain refreshes this session's file listings of the
+    # corpus + store tables each batch (stale ones would silently miss
+    # the newest appends); no reset_state: the store's self-match
+    # rejects re-delivered docs
+    return drain(
+        spark,
+        read_event_stream(
+            spark, source_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        _absorb,
+        kind="curate", state_name=corpus_table,
         has_state=lambda: spark.catalog.tableExists(corpus_table),
-        reset_state=None  # store self-match rejects re-delivered docs,
+        refresh=(corpus_table, store.table), checkpoint_dir=checkpoint_dir,
+        timeout_sec=timeout_sec, stats=stats,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    for t in (corpus_table, store.table):
-        if spark.catalog.tableExists(t):
-            spark.catalog.refreshTable(t)
-    return stats
 
 
 def stream_decontaminate(
@@ -298,6 +275,7 @@ def stream_decontaminate(
 
     if ngram != 8:  # the shared fragment is specialized to 8
         raise ValueError("only 8-gram supported (shared oracle fragment)")
+    # bound: the static benchmark set's distinct shingle hashes
     hashes = sorted(
         r.sh for r in bench_shingles.select("sh").distinct().collect()
     )

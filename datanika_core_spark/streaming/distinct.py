@@ -26,18 +26,14 @@ as the KMV rolling-window workload.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from datanika_core_spark.operators.hll_store import HLLSketchStore
-from datanika_core_spark.streaming.jobs import read_event_stream
-
-
-@dataclass
-class HLLIngestStats:
-    batches: int = 0
-    arrived: int = 0
+from datanika_core_spark.streaming.jobs import (
+    StreamStats,
+    drain,
+    read_event_stream,
+)
 
 
 def stream_hll_ingest(
@@ -49,51 +45,20 @@ def stream_hll_ingest(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> HLLIngestStats:
+) -> StreamStats:
     """Absorb all currently-available event files (availableNow)
     into the store's per-group HLL registers. Returns batch/row
     accounting; query ``store.estimate()`` any time after."""
-    stats = HLLIngestStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
+    # no reset_state: HLL max-merge makes a full replay idempotent
+    return drain(
+        spark,
+        read_event_stream(
+            spark, source_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        lambda batch_df, batch_id: store.update(
+            batch_df, group_col, value_col
+        ),
+        kind="hll", state_name=store.table,
+        has_state=store.state.exists, refresh=(store.table,),
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(store.table):
-            spark.catalog.refreshTable(store.table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        store.update(batch_df, group_col, value_col)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # batch-local blocks are fully consumed in-batch (the store
-        # collect/write happens inside); free them per batch
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "hll", store.table,
-        has_state=lambda: spark.catalog.tableExists(store.table),
-        reset_state=None  # HLL max-merge: replay is idempotent,
-    )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(store.table):
-        spark.catalog.refreshTable(store.table)
-    return stats

@@ -17,12 +17,14 @@ Two constraint classes, two merge disciplines:
   stored keys; new distinct keys append afterwards (batch-stamped
   and materialized before the append — see ``absorb``).
 
-Replay safety: the counters overwrite carries a one-row batch-id
-watermark, so a micro-batch redelivered after a crash anywhere in
-the two-write sequence (keys append, then counters overwrite) is
-applied exactly once — the keys append is idempotent (anti-join vs
-the full stored table) and same-batch leftovers of a crashed partial
-append are excluded from the dup count via the per-row batch stamp.
+Replay safety: the counters live in a
+:class:`~datanika_core_spark.operators.merge_store.MergeStore`, whose
+swap commits the batch id with them, so a micro-batch redelivered
+after a crash anywhere in the two-write sequence (keys append, then
+counters swap) is applied exactly once — the keys append is
+idempotent (anti-join vs the full stored table) and same-batch
+leftovers of a crashed partial append are excluded from the dup
+count via the per-row batch stamp.
 
 Parity: tests/test_stream_dq.py splits orders into two files (the
 second re-delivering some of the first's keys), streams them, and
@@ -37,23 +39,16 @@ Bloom prefilter in front — operators/bloom_store.py).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-@dataclass
-class DQMonitorStats:
-    batches: int = 0
-    arrived: int = 0
-
-
-_COUNTER_SCHEMA = "check_name string, observed bigint"
-
-#: sentinel counter row carrying the last committed micro-batch id —
-#: excluded from report() and from the merge sum.
-_WATERMARK = "_batch_watermark"
+from datanika_core_spark.operators.merge_store import MergeStore
+from datanika_core_spark.operators.writers import drop_table
+from datanika_core_spark.streaming.jobs import (
+    StreamStats,
+    drain,
+    read_event_stream,
+)
 
 
 def _batch_counters(batch: DataFrame) -> DataFrame:
@@ -84,35 +79,34 @@ class StreamDQMonitor:
         self.spark = spark
         self.counters_table = counters_table
         self.keys_table = keys_table
+        self.state = MergeStore(
+            spark, counters_table, "check_name string, observed bigint",
+            keys=["check_name"], merge={"observed": "sum"},
+        )
 
     def last_batch_id(self) -> int | None:
-        """Highest batch_id whose counters are committed (the
-        '_batch_watermark' sentinel row), or None."""
-        if not self.spark.catalog.tableExists(self.counters_table):
-            return None
-        rows = (
-            self.spark.table(self.counters_table)
-            .filter(F.col("check_name") == _WATERMARK)
-            .select("observed")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
+        """Highest batch_id whose counters are committed, or None."""
+        return self.state.last_batch_id()
+
+    def reset(self) -> None:
+        """Drop the counters and the key store."""
+        self.state.reset()
+        drop_table(self.spark, self.keys_table)
 
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
         """Fold one micro-batch into the counters + key store.
 
-        Replay-safe when a batch_id is supplied: the counters
-        overwrite carries a one-row watermark, so a batch redelivered
-        after a crash anywhere in the two-write sequence is applied
-        exactly once. Write order is keys-then-counters: the keys
-        append is idempotent by construction (new keys are the
-        anti-join against the FULL stored table, so a replay appends
-        nothing), and the same-batch leftovers of a crashed partial
-        append are excluded from the dup count via the per-row batch
-        stamp — the watermark commit is the last write."""
+        Replay-safe when a batch_id is supplied: the counters swap
+        commits the batch id, so a batch redelivered after a crash
+        anywhere in the two-write sequence is applied exactly once.
+        Write order is keys-then-counters: the keys append is
+        idempotent by construction (new keys are the anti-join against
+        the FULL stored table, so a replay appends nothing), and the
+        same-batch leftovers of a crashed partial append are excluded
+        from the dup count via the per-row batch stamp — the counters
+        swap is the last write."""
         spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
+        if self.state.replayed(batch_id):
             return  # replayed batch — already committed
         counters = _batch_counters(batch)
         # pk duplicates: internal (count - distinct) + stored-key hits
@@ -144,33 +138,15 @@ class StreamDQMonitor:
         dups = internal.unionByName(stored_hits).agg(
             F.sum("d").cast("bigint").alias("observed")
         ).select(F.lit("pk_unique").alias("check_name"), "observed")
-        delta = counters.unionByName(dups)
-        if spark.catalog.tableExists(self.counters_table):
-            merged = (
-                spark.table(self.counters_table)
-                .filter(F.col("check_name") != _WATERMARK)
-                .unionByName(delta)
-                .groupBy("check_name")
-                .agg(F.sum("observed").cast("bigint").alias("observed"))
-            )
-        else:
-            merged = delta
+        # materialize both legs BEFORE the keys append — each is a lazy
+        # read of keys_table (the dup counters, the anti-join), and
+        # appending to the table a plan reads is a read-while-append
+        # race. The delta is 5 rows, new_keys is batch-sized; the
+        # sink's scoped_blocks frees both checkpoints.
+        delta = counters.unionByName(dups).localCheckpoint(eager=True)
         new_keys = new_keys.withColumn(
             "b", F.lit(batch_id).cast("bigint")
-        )
-        # materialize new_keys BEFORE any table mutation — it is a
-        # lazy anti-join over keys_table, and appending to the table
-        # it reads is a read-while-append race. Batch-sized, and the
-        # sink's scoped_blocks frees the checkpoint blocks.
-        new_keys = new_keys.localCheckpoint(eager=True)
-        # delta leg fully computed BEFORE the keys append (the dup
-        # counters also read keys_table)
-        rows = [tuple(r) for r in merged.collect()]  # O(constraints)
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            rows.append((_WATERMARK, int(new_wm)))
+        ).localCheckpoint(eager=True)
         mode = (
             "append"
             if spark.catalog.tableExists(self.keys_table)
@@ -180,18 +156,12 @@ class StreamDQMonitor:
             self.keys_table
         )
         spark.catalog.refreshTable(self.keys_table)
-        out = spark.createDataFrame(rows, _COUNTER_SCHEMA)
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.counters_table
-        )
-        spark.catalog.refreshTable(self.counters_table)
+        self.state.absorb(delta, batch_id)
 
     def report(self) -> DataFrame:
         """(check_name, observed, passed) — row_count passes when
         > 0, every violation counter passes at 0."""
-        c = self.spark.table(self.counters_table).filter(
-            F.col("check_name") != _WATERMARK
-        )
+        c = self.state.rows()
         passed = F.when(
             F.col("check_name") == "row_count", F.col("observed") > 0
         ).otherwise(F.col("observed") == 0)
@@ -205,56 +175,18 @@ def stream_dq_monitor(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> DQMonitorStats:
+) -> StreamStats:
     """Absorb all currently-available orders files (availableNow)
     into the monitor; query ``monitor.report()`` any time after."""
-    from datanika_core_spark.streaming.jobs import read_event_stream
-
-    stats = DQMonitorStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        for t in (monitor.counters_table, monitor.keys_table):
-            if spark.catalog.tableExists(t):
-                spark.catalog.refreshTable(t)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    def _reset() -> None:
-        for t in (monitor.counters_table, monitor.keys_table):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "dq", monitor.counters_table,
+    return drain(
+        spark,
+        read_event_stream(
+            spark, source_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        monitor.absorb,
+        kind="dq", state_name=monitor.counters_table,
         has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=_reset,
+        reset_state=monitor.reset,
+        refresh=(monitor.counters_table, monitor.keys_table),
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    for t in (monitor.counters_table, monitor.keys_table):
-        if spark.catalog.tableExists(t):
-            spark.catalog.refreshTable(t)
-    return stats

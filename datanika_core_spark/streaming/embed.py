@@ -28,14 +28,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datanika_core_spark.operators.ann_store import IVFIndexStore, _assign_expr
-from datanika_core_spark.streaming.jobs import read_event_stream
+from datanika_core_spark.streaming.jobs import (
+    StreamStats,
+    drain,
+    read_event_stream,
+)
 from datanika_core_spark.workloads.similarity import _s_cos
 
 
 @dataclass
-class EmbedIngestStats:
-    batches: int = 0
-    arrived: int = 0
+class EmbedIngestStats(StreamStats):
     rejected_dup: int = 0
     loaded: int = 0
     rejected_ids: list[int] = field(default_factory=list)
@@ -55,18 +57,8 @@ def stream_embed_ingest(
     earlier-id same-batch) vector in the SAME IVF cluster is >=
     ``threshold``. Returns per-stage accounting."""
     stats = EmbedIngestStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
 
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(store.table):
-            spark.catalog.refreshTable(store.table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
+    def _absorb(batch_df: DataFrame, batch_id: int) -> None:
         vecs = batch_df.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
@@ -110,6 +102,7 @@ def stream_embed_ingest(
         # broadcast anti-join (no collect()-ed isin literals in the
         # plan). The collect is accounting only, micro-batch-bounded.
         dups_df = dups.distinct().localCheckpoint(eager=True)
+        # bound: <= one micro-batch's vec ids
         rejected = sorted(r.new_id for r in dups_df.collect())
         stats.rejected_dup += len(rejected)
         stats.rejected_ids.extend(rejected)
@@ -122,32 +115,16 @@ def stream_embed_ingest(
         )
         stats.loaded += store.update(survivors)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # batch-local checkpoints are fully consumed in-batch; free
-        # them so an N-batch stream pins O(1) block sets, not O(N)
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "embed", store.table,
+    # no reset_state: the vec_id-keyed left-anti append makes a full
+    # replay idempotent
+    return drain(
+        spark,
+        read_event_stream(
+            spark, source_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        _absorb,
+        kind="embed", state_name=store.table,
         has_state=lambda: spark.catalog.tableExists(store.table),
-        reset_state=None  # vec_id left-anti keyed: replay is idempotent,
+        refresh=(store.table,), checkpoint_dir=checkpoint_dir,
+        timeout_sec=timeout_sec, stats=stats,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(store.table):
-        spark.catalog.refreshTable(store.table)
-    return stats

@@ -20,20 +20,12 @@ batch split folds to the same result.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from datanika_core_spark.operators.fingerprint_store import FingerprintStore
-from datanika_core_spark.streaming.jobs import read_event_stream
+from datanika_core_spark.streaming.jobs import StreamStats, drain_files
 from datanika_core_spark.workloads.cdc import _S_FP
-
-
-@dataclass
-class FingerprintIngestStats:
-    batches: int = 0
-    arrived: int = 0
 
 
 def stream_fingerprint_ingest(
@@ -44,54 +36,18 @@ def stream_fingerprint_ingest(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> FingerprintIngestStats:
+) -> StreamStats:
     """Absorb all currently-available order files (availableNow)
     into the store's per-group fingerprints."""
-    stats = FingerprintIngestStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(store.table):
-            spark.catalog.refreshTable(store.table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        rows = batch_df.select(
-            F.col(group_col).cast("string").alias("grp"),
-            F.expr(_S_FP).alias("h"),
-        )
-        store.update(rows, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "fingerprint", store.table,
-        has_state=lambda: store.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {store.table}"
+    return drain_files(
+        spark, source_path,
+        lambda batch_df, batch_id: store.update(
+            batch_df.select(
+                F.col(group_col).cast("string").alias("grp"),
+                F.expr(_S_FP).alias("h"),
+            ),
+            batch_id=batch_id,
         ),
+        store.state, kind="fingerprint", checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(store.table):
-        spark.catalog.refreshTable(store.table)
-    return stats

@@ -9,8 +9,8 @@ Replay safety (the deliberate contrast with the HLL twin): counter
 addition is not idempotent, so a REDELIVERED micro-batch would
 double-count. The sink is checkpointed (availableNow +
 checkpointLocation) AND passes its micro-batch id into the store,
-which persists it as a one-row watermark next to the counters — a
-batch replayed after a crash between the store overwrite and the
+which commits it with the counters as a table property — a batch
+replayed after a crash between the state swap and the
 streaming-checkpoint commit is recognized (batch_id <= watermark)
 and skipped, making the non-idempotent merge replay-safe end to
 end. The HLL/Bloom/MinHash stores don't need any of this because
@@ -29,19 +29,20 @@ store merge touches ≤ d×w stored rows regardless of stream volume.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datanika_core_spark.operators.cms_store import CMSSketchStore
-from datanika_core_spark.streaming.jobs import read_event_stream
+from datanika_core_spark.operators.mg_store import MGSketchStore
+from datanika_core_spark.streaming.jobs import StreamStats, drain_files
 
 
-@dataclass
-class CMSIngestStats:
-    batches: int = 0
-    arrived: int = 0
+def _tokens(batch_df: DataFrame, text_col: str) -> DataFrame:
+    return batch_df.select(
+        F.explode(
+            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+        ).alias("tok")
+    )
 
 
 def stream_cms_ingest(
@@ -52,70 +53,29 @@ def stream_cms_ingest(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> CMSIngestStats:
+) -> StreamStats:
     """Absorb all currently-available document files (availableNow)
     into the store's CMS counters. Returns batch/row accounting;
     query ``store.estimate(probe)`` any time after."""
-    stats = CMSIngestStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(store.table):
-            spark.catalog.refreshTable(store.table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        toks = batch_df.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("tok")
-        )
-        store.update(toks, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "cms", store.table,
-        has_state=lambda: store.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {store.table}"
+    return drain_files(
+        spark, source_path,
+        lambda batch_df, batch_id: store.update(
+            _tokens(batch_df, text_col), batch_id=batch_id
         ),
+        store.state, kind="cms", checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(store.table):
-        spark.catalog.refreshTable(store.table)
-    return stats
 
 
 def stream_mg_ingest(
     spark: SparkSession,
     source_path: str,
-    store,
+    store: MGSketchStore,
     text_col: str = "text",
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> CMSIngestStats:
+) -> StreamStats:
     """Streaming twin of the Misra-Gries store
     (:class:`~datanika_core_spark.operators.mg_store.MGSketchStore`):
     micro-batches of documents tokenize in-batch and fold their
@@ -124,52 +84,12 @@ def stream_mg_ingest(
     the stream. Same replay discipline as the CMS twin: the merge is
     a sum (not idempotent), so the store's batch-id watermark makes
     redelivery exactly-once."""
-    stats = CMSIngestStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(store.table):
-            spark.catalog.refreshTable(store.table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        toks = batch_df.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("tok")
-        ).filter(F.col("tok") != "")
-        store.update(toks, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "mg", store.table,
-        has_state=lambda: store.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {store.table}"
+    return drain_files(
+        spark, source_path,
+        lambda batch_df, batch_id: store.update(
+            _tokens(batch_df, text_col).filter(F.col("tok") != ""),
+            batch_id=batch_id,
         ),
+        store.state, kind="mg", checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(store.table):
-        spark.catalog.refreshTable(store.table)
-    return stats

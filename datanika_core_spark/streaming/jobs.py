@@ -17,21 +17,27 @@ the stream with an ``availableNow`` trigger against the same parquet.
 Scale notes: file-source streaming shards listing+reading across
 executors; windowed state lives in the state store keyed by
 (window, group keys) — size it with watermarks (state is dropped once
-the watermark passes a window's end). foreachBatch ingestion reuses
-TableWriter, so write dispositions (append/merge) behave identically
-in both modes.
+the watermark passes a window's end). Every foreachBatch twin runs
+through :func:`drain`; ingestion reuses TableWriter, so write
+dispositions (append/merge) behave identically in both modes.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from dataclasses import dataclass
+from typing import TYPE_CHECKING, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datanika_core_spark.blocks import scoped_blocks
 from datanika_core_spark.operators.writers import TableWriter
 from datanika_core_spark.session import _read_parquet
+
+if TYPE_CHECKING:  # pragma: no cover
+    from datanika_core_spark.operators.merge_store import MergeStore
 
 
 def read_event_stream(
@@ -251,8 +257,8 @@ def resolve_checkpoint(
          keys pair) must not replay against a stale secondary table.
 
     ``has_state``: nullary callable, True when the twin's persisted
-    state exists (watermark row, or just tableExists for idempotent
-    stores). Pass None to skip reconciliation entirely.
+    state exists (a committed batch id, or just tableExists for
+    idempotent stores). Pass None to skip reconciliation entirely.
 
     The default root is namespaced per OS user and per Spark
     warehouse (``datanika_ck_<user>_<hash>``): two sessions only
@@ -303,6 +309,118 @@ def resolve_checkpoint(
     return loc
 
 
+@dataclass
+class StreamStats:
+    """Accounting of one :func:`drain`: micro-batches seen and rows
+    that arrived in them. Twins with more counters subclass it."""
+
+    batches: int = 0
+    arrived: int = 0
+
+
+def _refresh(spark: SparkSession, tables: Sequence[str]) -> None:
+    for t in tables:
+        if spark.catalog.tableExists(t):
+            spark.catalog.refreshTable(t)
+
+
+def drain(
+    spark: SparkSession,
+    sdf: DataFrame,
+    absorb: Callable[[DataFrame, int], None],
+    *,
+    kind: str,
+    state_name: str,
+    has_state: Callable[[], bool] | None,
+    reset_state: Callable[[], None] | None = None,
+    refresh: Sequence[str] = (),
+    checkpoint_dir: str | None = None,
+    timeout_sec: int = 300,
+    processing_time: str | None = None,
+    stats: StreamStats | None = None,
+) -> StreamStats:
+    """Run ``sdf`` through ``foreachBatch`` into ``absorb`` — the one
+    stream driver of every twin.
+
+    Per micro-batch, inside :func:`scoped_blocks` (every frame a batch
+    checkpoints is written or collected within it, so an N-batch
+    stream pins O(1) block sets): refresh the ``refresh`` tables (the
+    previous batch wrote them through the micro-batch session, so this
+    session's cached file listings are stale), count the batch into
+    ``stats``, and call ``absorb(batch_df, batch_id)`` unless it is
+    empty. The checkpoint comes from :func:`resolve_checkpoint`
+    (``kind``, ``state_name``, ``has_state``, ``reset_state``).
+
+    The trigger is ``availableNow`` — drain what is there, then stop
+    — unless ``processing_time`` (e.g. ``"1 seconds"``) asks for the
+    open-ended deployment trigger: the stream keeps polling and
+    absorbing files as they APPEAR until ``timeout_sec`` elapses, so
+    the call always blocks the full timeout. Checkpoint lineage and
+    state are the same under both triggers: an availableNow restart
+    after a processing-time run is a no-op."""
+    stats = StreamStats() if stats is None else stats
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        with scoped_blocks(spark):
+            _refresh(spark, refresh)
+            stats.batches += 1
+            n = batch_df.count()
+            stats.arrived += n
+            if n:
+                absorb(batch_df, batch_id)
+
+    ckpt_loc = resolve_checkpoint(
+        spark, checkpoint_dir, kind, state_name,
+        has_state=has_state, reset_state=reset_state,
+    )
+    writer = sdf.writeStream.foreachBatch(_sink).option(
+        "checkpointLocation", ckpt_loc
+    )
+    if processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    else:
+        writer = writer.trigger(availableNow=True)
+    q = writer.start()
+    try:
+        q.awaitTermination(timeout_sec)
+    finally:
+        if q.isActive:
+            q.stop()
+    _refresh(spark, refresh)
+    return stats
+
+
+def drain_files(
+    spark: SparkSession,
+    source_path: str,
+    absorb: Callable[[DataFrame, int], None],
+    state: "MergeStore",
+    *,
+    kind: str,
+    checkpoint_dir: str | None = None,
+    max_files_per_trigger: int | None = 1,
+    timeout_sec: int = 300,
+    processing_time: str | None = None,
+) -> StreamStats:
+    """:func:`drain` of a parquet file directory into one
+    :class:`~datanika_core_spark.operators.merge_store.MergeStore`
+    whose folds are not idempotent: the state counts as present once
+    it holds a batch id, and a fresh checkpoint against present state
+    drops it, so the full replay folds every row exactly once."""
+    return drain(
+        spark,
+        read_event_stream(
+            spark, source_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        absorb,
+        kind=kind, state_name=state.table,
+        has_state=lambda: state.last_batch_id() is not None,
+        reset_state=state.reset, refresh=(state.table,),
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        processing_time=processing_time,
+    )
+
+
 def stream_ingest(
     spark: SparkSession,
     source_path: str,
@@ -314,34 +432,24 @@ def stream_ingest(
     processing_time: str | None = None,
 ) -> int:
     """Continuous ingestion: file stream → TableWriter via
-    ``foreachBatch`` — the streaming analogue of the batch ingestion
-    job (append/merge dispositions behave identically; checkpointing
+    :func:`drain` — the streaming analogue of the batch ingestion job
+    (append/merge dispositions behave identically; checkpointing
     replaces the incremental-cursor state table). Processes all
     currently-available files (availableNow) and returns rows loaded.
 
-    ``processing_time`` (e.g. ``"1 seconds"``) switches from the
-    availableNow drain to an OPEN-ENDED micro-batch trigger: the
-    stream keeps polling the directory and ingesting files as they
-    APPEAR, until ``timeout_sec`` elapses — the deployment shape
-    (files arrive forever); availableNow is the test/backfill shape.
-    NOTE the blocking cost: with ``processing_time`` set there is no
-    drained-source early exit — the call ALWAYS blocks for the full
-    ``timeout_sec`` (default 300 s), because an open-ended stream has
-    no "done" condition. Callers polling a test directory should pass
-    a small timeout (the smoke test uses single-digit seconds).
-    Everything else (checkpoint lineage, dispositions, exactly-once
-    replay) is identical, which is the point: the twin's semantics
-    must not depend on which trigger drives it.
+    ``processing_time`` switches to the open-ended trigger (see
+    :func:`drain`): the call then blocks the full ``timeout_sec``
+    (default 300 s), so callers polling a test directory should pass
+    a small timeout.
 
     At scale this is exactly-once into the warehouse: the checkpoint
     records the processed-file log, and merge-on-primary-key makes
     replays idempotent.
     """
     writer = TableWriter(spark)
-    sdf = read_event_stream(spark, source_path)
     loaded = {"n": 0}
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _absorb(batch_df: DataFrame, batch_id: int) -> None:
         res = writer.write(
             batch_df, table, disposition, primary_key=primary_key
         )
@@ -350,27 +458,13 @@ def stream_ingest(
     # no reset_state: a warehouse target is never dropped
     # automatically — merge-on-primary-key is the replay-idempotent
     # disposition (docstring above); append callers own their ckpt
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "ingest", table,
+    drain(
+        spark, read_event_stream(spark, source_path), _absorb,
+        kind="ingest", state_name=table,
         has_state=lambda: spark.catalog.tableExists(table),
+        refresh=(table,), checkpoint_dir=checkpoint_dir,
+        timeout_sec=timeout_sec, processing_time=processing_time,
     )
-    writer_q = sdf.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", ckpt_loc
-    )
-    if processing_time:
-        writer_q = writer_q.trigger(processingTime=processing_time)
-    else:
-        writer_q = writer_q.trigger(availableNow=True)
-    q = writer_q.start()
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(table):
-        # a multi-batch run appends files behind the catalog's cached
-        # listing — readers in this session would see a stale count
-        spark.catalog.refreshTable(table)
     return loaded["n"]
 
 

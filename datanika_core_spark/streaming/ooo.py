@@ -8,39 +8,32 @@ cross-batch ORDER state, not just an additive counter.
 
 Within each micro-batch the lateness of an event is measured against
 max(carry-in high water, running max over the batch's arrival
-order); the new high water persists with the counters. As long as
+order); the new high water persists with the counters, as a third
+column every histogram row carries. As long as
 micro-batch boundaries respect arrival order (file streaming's
 natural order — and what a real collector provides), the folded
 histogram is IDENTICAL to the batch replay over the concatenated
 stream; tests/test_stream_ooo.py asserts exact equality.
 
 Replay discipline: bucket counts are additive (not idempotent) and
-the high-water is a max (idempotent) — the batch-id watermark guards
-the counters exactly like the CMS/MG/fingerprint stores.
+the high-water is a max (idempotent) — the batch-id watermark of the
+:class:`~datanika_core_spark.operators.merge_store.MergeStore` guards
+the counters exactly like the CMS/MG/fingerprint stores. The next
+state (histogram + high water) is folded in Spark and committed
+through the store's staged swap: nothing reaches the driver.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datanika_core_spark.streaming.jobs import read_event_stream
+from datanika_core_spark.operators.merge_store import MergeStore
+from datanika_core_spark.streaming.jobs import StreamStats, drain_files
 from datanika_core_spark.workloads.events import (
     _OOO_CAP_MIN,
     _S_OOO_DELAY,
 )
-
-#: Sentinel bucket ids in the store table.
-HW_ROW = -2   # n_events column carries the event-time high water (us)
-WM_ROW = -1   # n_events column carries the last merged batch_id
-
-
-@dataclass
-class OOOMonitorStats:
-    batches: int = 0
-    arrived: int = 0
 
 
 class StreamOOOMonitor:
@@ -49,34 +42,30 @@ class StreamOOOMonitor:
     def __init__(self, spark: SparkSession, table: str):
         self.spark = spark
         self.table = table
-
-    def _sentinel(self, which: int) -> int | None:
-        if not self.spark.catalog.tableExists(self.table):
-            return None
-        rows = (
-            self.spark.table(self.table)
-            .filter(F.col("bucket_min") == which)
-            .select("n_events")
-            .collect()
+        self.state = MergeStore(
+            spark, table, "bucket_min bigint, n_events bigint,"
+            " high_water bigint",
         )
-        return int(rows[0][0]) if rows else None
 
     def last_batch_id(self) -> int | None:
-        return self._sentinel(WM_ROW)
+        return self.state.last_batch_id()
 
     def high_water(self) -> int | None:
-        return self._sentinel(HW_ROW)
+        """Event-time high water (microseconds) reached so far."""
+        # bound: one aggregate row
+        hw = self.state.rows().agg(F.max("high_water")).collect()[0][0]
+        return None if hw is None else int(hw)
 
     def absorb(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         """Fold one micro-batch (events schema) into the histogram.
         The batch is replayed in (arrival, event_id) order against
         max(carried high water, in-batch running max)."""
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
+        if self.state.replayed(batch_id):
             return  # redelivered batch — counters already folded
         from pyspark.sql import Window as _W
 
-        carry = self.high_water()
+        stored = self.state.rows()
+        carry = stored.agg(F.max("high_water").alias("carry"))
         timed = batch_df.select(
             F.unix_micros(F.col("ts").cast("timestamp")).alias("e"),
             (
@@ -88,13 +77,11 @@ class StreamOOOMonitor:
         w = _W.orderBy("arrival", "event_id").rowsBetween(
             _W.unboundedPreceding, _W.currentRow
         )
-        run = timed.select(
+        # greatest() skips the NULL carry of a fresh store
+        # bound: one aggregate row
+        run = timed.crossJoin(F.broadcast(carry)).select(
             "e",
-            F.greatest(
-                F.max("e").over(w),
-                F.lit(carry if carry is not None else -(1 << 62))
-                .cast("bigint"),
-            ).alias("high_water"),
+            F.greatest(F.max("e").over(w), F.col("carry")).alias("high_water"),
         )
         hist = (
             run.select(
@@ -106,37 +93,25 @@ class StreamOOOMonitor:
             .groupBy("bucket_min")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
         )
-        new_hw_row = run.agg(F.max("high_water").alias("h")).collect()
-        new_hw = int(new_hw_row[0][0]) if new_hw_row[0][0] is not None else carry
-        if self.spark.catalog.tableExists(self.table):
-            merged = (
-                self.spark.table(self.table)
-                .filter(F.col("bucket_min") >= 0)
-                .unionByName(hist)
-                .groupBy("bucket_min")
-                .agg(F.sum("n_events").cast("bigint").alias("n_events"))
-            )
-        else:
-            merged = hist
-        rows = [tuple(r) for r in merged.collect()]
-        if new_hw is not None:
-            rows.append((HW_ROW, int(new_hw)))
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
+        new_hw = run.agg(F.max("high_water").alias("h")).crossJoin(carry)
+        counts = (
+            stored.select("bucket_min", "n_events")
+            .unionByName(hist)
+            .groupBy("bucket_min")
+            .agg(F.sum("n_events").alias("n_events"))
         )
-        if new_wm is not None:
-            rows.append((WM_ROW, int(new_wm)))
-        out = self.spark.createDataFrame(
-            rows, "bucket_min bigint, n_events bigint"
+        self.state.commit(
+            counts.crossJoin(  # bound: one row
+                F.broadcast(new_hw.select(
+                    F.greatest("h", "carry").alias("high_water")
+                ))
+            ),
+            batch_id,
         )
-        out.write.format("parquet").mode("overwrite").saveAsTable(self.table)
-        self.spark.catalog.refreshTable(self.table)
 
     def histogram(self) -> DataFrame:
-        return (
-            self.spark.table(self.table)
-            .filter(F.col("bucket_min") >= 0)
-            .orderBy("bucket_min")
+        return self.state.rows().select("bucket_min", "n_events").orderBy(
+            "bucket_min"
         )
 
 
@@ -147,50 +122,11 @@ def stream_ooo_monitor(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
-) -> OOOMonitorStats:
+) -> StreamStats:
     """Absorb all currently-available event files (availableNow)
     into the monitor's lateness histogram."""
-    stats = OOOMonitorStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
+    return drain_files(
+        spark, source_path, monitor.absorb, monitor.state, kind="ooo",
+        checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
     )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(monitor.table):
-            spark.catalog.refreshTable(monitor.table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "ooo", monitor.table,
-        has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {monitor.table}"
-        ),
-    )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(monitor.table):
-        spark.catalog.refreshTable(monitor.table)
-    return stats

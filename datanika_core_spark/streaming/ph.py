@@ -22,36 +22,20 @@ workload runs. Consequences:
 - state bounded by |types| x |days| — the day grid, not stream
   volume.
 
-Replay discipline: counters are additive (not idempotent), so a
-batch-id WATERMARK row guards redelivery — the CMS/MG/fingerprint
-store convention.
+Replay discipline: counters are additive (not idempotent), so the
+batch-id watermark of the
+:class:`~datanika_core_spark.operators.merge_store.MergeStore` (a
+table property, so every grid row — epoch day -1 included — is data)
+guards redelivery — the CMS/MG/fingerprint store convention.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: watermark sentinel row: BOTH keys must match — day == _WM_DAY AND
-#: event_type == _WM_TYPE — so a real event dated 1969-12-31
-#: (epoch day -1) can never be read as the watermark, and negative
-#: epoch days flow through the grid instead of being dropped
-_WM_DAY = -1
-_WM_TYPE = "__batch watermark__"
-
-_GRID_SCHEMA = "event_type string, day bigint, cents bigint, cnt bigint"
-
-
-def _is_wm():
-    return (F.col("day") == _WM_DAY) & (F.col("event_type") == _WM_TYPE)
-
-
-@dataclass
-class PHStats:
-    batches: int = 0
-    arrived: int = 0
+from datanika_core_spark.operators.merge_store import MergeStore
+from datanika_core_spark.streaming.jobs import StreamStats, drain_files
 
 
 class StreamPageHinkleyMonitor:
@@ -61,23 +45,16 @@ class StreamPageHinkleyMonitor:
     def __init__(self, spark: SparkSession, counters_table: str):
         self.spark = spark
         self.counters_table = counters_table
+        self.state = MergeStore(
+            spark, counters_table,
+            "event_type string, day bigint, cents bigint, cnt bigint",
+            keys=["event_type", "day"], merge={"cents": "sum", "cnt": "sum"},
+        )
 
     def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.counters_table):
-            return None
-        rows = (
-            self.spark.table(self.counters_table)
-            .filter(_is_wm())
-            .select("cnt")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
+        return self.state.last_batch_id()
 
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # redelivered batch — counters already folded
         delta = (
             batch.select(
                 "event_type",
@@ -91,57 +68,23 @@ class StreamPageHinkleyMonitor:
                 F.count(F.lit(1)).cast("bigint").alias("cnt"),
             )
         )
-        if spark.catalog.tableExists(self.counters_table):
-            merged = (
-                spark.table(self.counters_table)
-                .filter(~_is_wm())
-                .unionByName(delta)
-                .groupBy("event_type", "day")
-                .agg(
-                    F.sum("cents").cast("bigint").alias("cents"),
-                    F.sum("cnt").cast("bigint").alias("cnt"),
-                )
-            )
-        else:
-            merged = delta
-        # bounded by |types| x |days| — stage through a local collect
-        # so the overwrite doesn't read the table it replaces (store
-        # convention)
-        rows = [tuple(r) for r in merged.collect()]
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            rows.append((_WM_TYPE, _WM_DAY, -1, int(new_wm)))
-        out = spark.createDataFrame(rows, _GRID_SCHEMA)
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.counters_table
-        )
-        spark.catalog.refreshTable(self.counters_table)
+        self.state.absorb(delta, batch_id)
 
     def _daily(self) -> DataFrame:
         """The stored grid with the calendar day rebuilt; the report
         helpers only need `day` ordered + castable to DATE, matching
         the batch side's date_trunc('day') exactly. Before the first
-        absorb (no counters table yet) this is the EMPTY grid with
-        the same schema, so the report helpers return empty,
-        correctly-typed results instead of raising."""
-        if not self.spark.catalog.tableExists(self.counters_table):
-            stored = self.spark.createDataFrame([], _GRID_SCHEMA)
-        else:
-            stored = self.spark.table(self.counters_table)
-        return (
-            stored
-            .filter(~_is_wm())
-            .select(
-                "event_type",
-                F.date_add(
-                    F.lit("1970-01-01").cast("date"),
-                    F.col("day").cast("int"),
-                ).alias("day"),
-                "cents",
-                "cnt",
-            )
+        absorb this is the EMPTY grid with the same schema, so the
+        report helpers return empty, correctly-typed results instead
+        of raising."""
+        return self.state.rows().select(
+            "event_type",
+            F.date_add(
+                F.lit("1970-01-01").cast("date"),
+                F.col("day").cast("int"),
+            ).alias("day"),
+            "cents",
+            "cnt",
         )
 
     def report(self) -> DataFrame:
@@ -186,68 +129,21 @@ def stream_page_hinkley(
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 300,
     processing_time: str | None = None,
-) -> PHStats:
+) -> StreamStats:
     """Absorb all currently-available events files (availableNow)
     into the PH monitor; query ``monitor.report()`` any time.
 
     ``processing_time`` (e.g. ``"1 seconds"``) switches to the
-    open-ended deployment trigger: the stream keeps polling and
-    absorbing files as they APPEAR until ``timeout_sec`` elapses —
-    there is no drained-source early exit, so the call ALWAYS blocks
-    the full timeout (pass a small one when polling a test dir). The
-    point of offering both on the SAME checkpoint: the monitor's
-    cross-batch state (day counters, carried batch ids) must not
-    depend on which trigger drove it — an availableNow restart after
-    a processing-time run is a no-op (test-pinned, the stateful
-    extension of the r10 stream_ingest trigger smoke)."""
-    from datanika_core_spark.streaming.jobs import read_event_stream
-
-    stats = PHStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
+    open-ended deployment trigger (see
+    :func:`~datanika_core_spark.streaming.jobs.drain`): the call
+    then ALWAYS blocks the full timeout (pass a small one when
+    polling a test dir). The monitor's cross-batch state (day
+    counters, carried batch ids) does not depend on which trigger
+    drove it — an availableNow restart after a processing-time run
+    is a no-op (test-pinned)."""
+    return drain_files(
+        spark, source_path, monitor.absorb, monitor.state, kind="stream_ph",
+        checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger, timeout_sec=timeout_sec,
+        processing_time=processing_time,
     )
-
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        if spark.catalog.tableExists(monitor.counters_table):
-            spark.catalog.refreshTable(monitor.counters_table)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
-        monitor.absorb(batch_df, batch_id=batch_id)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
-    # deterministic default checkpoint + state/lineage reconciliation
-    # (the shared twin policy — see resolve_checkpoint's docstring;
-    # counters are additive, so a fresh checkpoint forces a rebuild)
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "stream_ph", monitor.counters_table,
-        has_state=lambda: monitor.last_batch_id() is not None,
-        reset_state=lambda: spark.sql(
-            f"DROP TABLE IF EXISTS {monitor.counters_table}"
-        ),
-    )
-    writer = sdf.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", ckpt_loc
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(monitor.counters_table):
-        spark.catalog.refreshTable(monitor.counters_table)
-    return stats

@@ -20,34 +20,21 @@ recomputes wins / n_ij / the MM iteration through the SAME
 - state ∝ |orders| x |brands-per-order| — an index-store like the
   substring/minhash stores (grows with corpus, not with replay).
 
-Replay discipline: quantities are additive (not idempotent), so a
-batch-id WATERMARK row guards redelivery — the CMS/MG/PH store
-convention.
+Replay discipline: quantities are additive (not idempotent), so the
+batch-id watermark of the
+:class:`~datanika_core_spark.operators.merge_store.MergeStore`
+guards redelivery — the CMS/MG/PH store convention. The grid is
+corpus-sized, and the store's staged swap writes it without a driver
+collect.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: watermark sentinel: BOTH keys must match, so a real order key -1
-#: can never shadow it
-_WM_OK = -1
-_WM_B = "__batch watermark__"
-
-_GRID_SCHEMA = "ok bigint, b string, q double"
-
-
-def _is_wm():
-    return (F.col("ok") == _WM_OK) & (F.col("b") == _WM_B)
-
-
-@dataclass
-class PreferenceStats:
-    batches: int = 0
-    arrived: int = 0
+from datanika_core_spark.operators.merge_store import MergeStore
+from datanika_core_spark.streaming.jobs import StreamStats, drain
 
 
 class StreamPreferenceStore:
@@ -63,19 +50,15 @@ class StreamPreferenceStore:
         self.spark = spark
         self.grid_table = grid_table
         #: static enrichment dimension (p_partkey, p_brand) —
-        #: broadcast-joined into every batch
+        #: joined into every batch
         self.part_dim = part_dim.select("p_partkey", "p_brand")
+        self.state = MergeStore(
+            spark, grid_table, "ok bigint, b string, q double",
+            keys=["ok", "b"], merge={"q": "sum"},
+        )
 
     def last_batch_id(self) -> int | None:
-        if not self.spark.catalog.tableExists(self.grid_table):
-            return None
-        rows = (
-            self.spark.table(self.grid_table)
-            .filter(_is_wm())
-            .select("q")
-            .collect()
-        )
-        return int(rows[0][0]) if rows else None
+        return self.state.last_batch_id()
 
     def absorb(
         self, batch: DataFrame, batch_id: int | None = None
@@ -83,10 +66,6 @@ class StreamPreferenceStore:
         """Fold a micro-batch of line items (l_orderkey, l_partkey,
         l_quantity) into the quantity grid. Additive, so redelivery
         is guarded by the watermark."""
-        spark = self.spark
-        wm = self.last_batch_id()
-        if batch_id is not None and wm is not None and batch_id <= wm:
-            return  # redelivered batch — grid already folded
         delta = (
             batch.join(
                 self.part_dim,
@@ -98,42 +77,7 @@ class StreamPreferenceStore:
             )
             .agg(F.sum("l_quantity").cast("double").alias("q"))
         )
-        if spark.catalog.tableExists(self.grid_table):
-            merged = (
-                spark.table(self.grid_table)
-                .filter(~_is_wm())
-                .unionByName(delta)
-                .groupBy("ok", "b")
-                .agg(F.sum("q").alias("q"))
-            )
-        else:
-            merged = delta
-        # stage through a temp location so the overwrite doesn't read
-        # the table it replaces (store convention); the grid is
-        # corpus-sized, so NO driver collect here — unlike the PH
-        # counter grid this one grows with orders
-        stage = f"{self.grid_table}_stage"
-        merged.write.format("parquet").mode("overwrite").saveAsTable(
-            stage
-        )
-        out = spark.table(stage)
-        new_wm = max(
-            (x for x in (wm, batch_id) if x is not None), default=None
-        )
-        if new_wm is not None:
-            wm_row = spark.createDataFrame(
-                [(_WM_OK, _WM_B, float(new_wm))], _GRID_SCHEMA
-            )
-            out = out.unionByName(wm_row)
-        out.write.format("parquet").mode("overwrite").saveAsTable(
-            self.grid_table
-        )
-        spark.catalog.refreshTable(self.grid_table)
-
-    def _grid(self) -> DataFrame:
-        if not self.spark.catalog.tableExists(self.grid_table):
-            return self.spark.createDataFrame([], _GRID_SCHEMA)
-        return self.spark.table(self.grid_table).filter(~_is_wm())
+        self.state.absorb(delta, batch_id)
 
     def report(self) -> DataFrame:
         """Same columns and math as the batch workload: (brand,
@@ -143,7 +87,7 @@ class StreamPreferenceStore:
             bt_strengths,
         )
 
-        return bt_strengths(self.spark, self._grid())
+        return bt_strengths(self.spark, self.state.rows())
 
 
 def stream_preferences(
@@ -153,44 +97,20 @@ def stream_preferences(
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = 1,
     timeout_sec: int = 120,
-) -> PreferenceStats:
+) -> StreamStats:
     """Drain all currently-available line-item parquet files
     (availableNow) into the preference store; query
     ``store.report()`` any time."""
-    from datanika_core_spark.streaming.jobs import resolve_checkpoint
-
-    stats = PreferenceStats()
-
-    schema = (
+    reader = spark.readStream.schema(
         "l_orderkey bigint, l_partkey bigint, l_quantity double"
     )
-    reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option(
             "maxFilesPerTrigger", max_files_per_trigger
         )
-    sdf = reader.parquet(source_path)
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        n = batch.count()
-        stats.batches += 1
-        stats.arrived += n
-        if n:
-            store.absorb(batch, batch_id=batch_id)
-
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "preference", store.grid_table,
-        has_state=lambda: spark.catalog.tableExists(store.grid_table),
+    return drain(
+        spark, reader.parquet(source_path), store.absorb,
+        kind="preference", state_name=store.grid_table,
+        has_state=store.state.exists, refresh=(store.grid_table,),
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    return stats

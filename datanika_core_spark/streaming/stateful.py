@@ -269,7 +269,7 @@ class SeenRecentlyDedupProcessor(StatefulProcessor):
         pdf = (
             pd.concat(chunks, ignore_index=True)
             .sort_values(self.order_col, kind="mergesort")
-            .head(1)  # first occurrence only, deterministic order
+            .head(1)  # bound: one row — first occurrence, deterministic order
         )
         self._seen.update((1,))
         yield pdf

@@ -67,15 +67,21 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: must exceed the join window or same-batch pairs can be evicted
-_DEFAULT_WATERMARK = "150 minutes"
+from datanika_core_spark.streaming.jobs import (
+    StreamStats,
+    drain,
+    read_event_stream,
+)
+
+#: default event-time watermark delay of both sides; must exceed the
+#: join window or same-batch pairs can be evicted
+_DEFAULT_DELAY = "150 minutes"
 _WINDOW_HOURS = 2
 _USER_CAP = 60
 
 
 @dataclass
-class JoinStats:
-    batches: int = 0
+class JoinStats(StreamStats):
     pairs: int = 0
     #: (batch ordinal, unmatched-null rows in that batch) — the outer
     #: twin's eviction-timing evidence
@@ -93,11 +99,6 @@ def _run_purchase_context(
     max_files_per_trigger: int | None,
     timeout_sec: int,
 ) -> JoinStats:
-    from datanika_core_spark.streaming.jobs import (
-        read_event_stream,
-        resolve_checkpoint,
-    )
-
     sdf = read_event_stream(
         spark, source_path, max_files_per_trigger=max_files_per_trigger
     )
@@ -146,8 +147,7 @@ def _run_purchase_context(
         else ["purchase_id", "ctx_id"]
     )
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        stats.batches += 1
+    def _absorb(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df
         if spark.catalog.tableExists(result_table):
             # idempotent append: drop rows a redelivered batch
@@ -186,31 +186,20 @@ def _run_purchase_context(
     # must clear the checkpoint or the input is skipped forever);
     # the null-safe left-anti pair sink makes full replay idempotent,
     # so no reset_state is needed in the other direction
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, kind, result_table,
+    return drain(
+        spark, pairs, _absorb,
+        kind=kind, state_name=result_table,
         has_state=lambda: spark.catalog.tableExists(result_table),
+        refresh=(result_table,), checkpoint_dir=checkpoint_dir,
+        timeout_sec=timeout_sec, stats=stats,
     )
-    q = (
-        pairs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if spark.catalog.tableExists(result_table):
-        spark.catalog.refreshTable(result_table)
-    return stats
 
 
 def stream_purchase_context(
     spark: SparkSession,
     source_path: str,
     result_table: str,
-    watermark: str = _DEFAULT_WATERMARK,
+    watermark: str = _DEFAULT_DELAY,
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = None,
     timeout_sec: int = 300,
@@ -228,7 +217,7 @@ def stream_purchase_context_outer(
     spark: SparkSession,
     source_path: str,
     result_table: str,
-    watermark: str = _DEFAULT_WATERMARK,
+    watermark: str = _DEFAULT_DELAY,
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = None,
     timeout_sec: int = 300,
@@ -249,7 +238,7 @@ def stream_purchase_context_semi(
     spark: SparkSession,
     source_path: str,
     result_table: str,
-    watermark: str = _DEFAULT_WATERMARK,
+    watermark: str = _DEFAULT_DELAY,
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = None,
     timeout_sec: int = 300,

@@ -48,15 +48,14 @@ from datanika_core_spark.operators.substring_store import (
     ExactSubstringIndexStore,
 )
 from datanika_core_spark.streaming.jobs import (
+    StreamStats,
+    drain,
     read_event_stream,
-    resolve_checkpoint,
 )
 
 
 @dataclass
-class SubstringStreamStats:
-    batches: int = 0
-    arrived: int = 0
+class SubstringStreamStats(StreamStats):
     gram_rows_indexed: int = 0
     #: report rows landed (one per newly indexed doc, zero-span
     #: docs included — see module docstring for why)
@@ -80,20 +79,8 @@ def stream_exact_substring(
 
     _observed = TableWriter._observed
     stats = SubstringStreamStats()
-    sdf = read_event_stream(
-        spark, source_path, max_files_per_trigger=max_files_per_trigger
-    )
 
-    def _sink_body(batch_df: DataFrame, batch_id: int) -> None:
-        for tbl in (store.table, store.docs_table, store.summary_table,
-                    result_table):
-            if spark.catalog.tableExists(tbl):
-                spark.catalog.refreshTable(tbl)
-        stats.batches += 1
-        n = batch_df.count()
-        stats.arrived += n
-        if n == 0:
-            return
+    def _absorb(batch_df: DataFrame, batch_id: int) -> None:
         docs = batch_df.select("doc_id", "text")
         stats.gram_rows_indexed += store.update(docs)
         # the probe set: indexable batch docs without a landed report
@@ -104,7 +91,7 @@ def stream_exact_substring(
             landed = spark.table(result_table).select("doc_id")
             todo = todo.join(landed, "doc_id", "left_anti")
         todo = todo.localCheckpoint(eager=True)  # feeds probe + join
-        if not todo.head(1):
+        if not todo.head(1):  # bound: one row
             return
         per_doc = (
             store.probe(todo)
@@ -131,37 +118,23 @@ def stream_exact_substring(
         report.write.format("parquet").mode(mode).saveAsTable(result_table)
         stats.report_rows += obs.get["rows"]
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        from datanika_core_spark.blocks import scoped_blocks
-
-        with scoped_blocks(spark):
-            _sink_body(batch_df, batch_id)
-
     # State is COHERENT only when index AND report both exist: a
     # dropped report table (or dropped store) with surviving commits
     # must clear the checkpoint so the full input replays — the
     # store's doc anti-join and the report's doc_id dedup make that
     # replay exact, so reset_state stays None (idempotent-store arm).
-    ckpt_loc = resolve_checkpoint(
-        spark, checkpoint_dir, "stream_substring", result_table,
+    return drain(
+        spark,
+        read_event_stream(
+            spark, source_path, max_files_per_trigger=max_files_per_trigger
+        ),
+        _absorb,
+        kind="stream_substring", state_name=result_table,
         has_state=lambda: (
             spark.catalog.tableExists(store.docs_table)
             and spark.catalog.tableExists(result_table)
         ),
+        refresh=(store.table, store.docs_table, store.summary_table,
+                 result_table),
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec, stats=stats,
     )
-    q = (
-        sdf.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt_loc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    for tbl in (store.table, store.docs_table, store.summary_table,
-                result_table):
-        if spark.catalog.tableExists(tbl):
-            spark.catalog.refreshTable(tbl)
-    return stats

@@ -2177,7 +2177,13 @@ def dedup_exact_substring_incremental(
     per gram, no posting lists, the stored positions never rescanned;
     the summary merge is the parquet stand-in for MERGE INTO (bucket
     both sides by h to co-locate at 100 TB). Driver state: 5 ints per
-    batch."""
+    batch.
+
+    The store's tables carry a per-call unique prefix and are dropped
+    before returning, so concurrent builds (threads of one session,
+    or sessions sharing a warehouse) never touch each other's index."""
+    import uuid
+
     from datanika_core_spark.operators.substring_store import (
         ExactSubstringIndexStore,
     )
@@ -2190,23 +2196,25 @@ def dedup_exact_substring_incremental(
         .otherwise(F.lit(2))
     )
     corpus = corpus.withColumn("batch", batch_col)
-    tbl = "wl_es_index"
-    for suffix in ("", "_docs", "_hsum", "_hsum_stage"):
-        drop_table(spark, f"{tbl}{suffix}")
+    tbl = f"wl_es_index_{uuid.uuid4().hex[:12]}"
     store = ExactSubstringIndexStore(spark, tbl, _ES_K)
     out_rows = []
-    for b in (0, 1, 2):
-        bdf = corpus.filter(F.col("batch") == b).select("doc_id", "text")
-        store.update(bdf)
-        n_docs = bdf.filter(F.length("text") >= _ES_K).count()
-        r = store.probe(bdf).agg(
-            F.count_distinct("doc_id").alias("nd"),
-            F.count(F.lit(1)).alias("ns"),
-            F.sum(F.col("hi") - F.col("lo") + 1).alias("cov"),
-        ).first()
-        out_rows.append(
-            (b, n_docs, int(r["nd"]), int(r["ns"]), int(r["cov"] or 0))
-        )
+    try:
+        for b in (0, 1, 2):
+            bdf = corpus.filter(F.col("batch") == b).select("doc_id", "text")
+            store.update(bdf)
+            n_docs = bdf.filter(F.length("text") >= _ES_K).count()
+            r = store.probe(bdf).agg(
+                F.count_distinct("doc_id").alias("nd"),
+                F.count(F.lit(1)).alias("ns"),
+                F.sum(F.col("hi") - F.col("lo") + 1).alias("cov"),
+            ).first()
+            out_rows.append(
+                (b, n_docs, int(r["nd"]), int(r["ns"]), int(r["cov"] or 0))
+            )
+    finally:
+        for suffix in ("", "_docs", "_hsum", "_hsum__stage", "_hsum__old"):
+            drop_table(spark, f"{tbl}{suffix}")
     return spark.createDataFrame(
         out_rows,
         "batch bigint, n_docs bigint, n_dup_docs bigint,"

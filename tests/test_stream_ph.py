@@ -207,8 +207,8 @@ def test_ph_report_before_first_absorb_is_empty(spark):
 def test_ph_pre1970_day_survives_watermark(spark):
     """An event dated 1969-12-31 lands on epoch day -1 — the old
     day-only watermark filter read its count as the batch id and
-    dropped it from every report. The sentinel now matches on BOTH
-    (day, event_type), so the negative-day row is real data."""
+    dropped it from every report. The batch id is now a table
+    property, so the negative-day row is real data."""
     import datetime as dt
 
     spark.sql("DROP TABLE IF EXISTS ph_mon7")
@@ -229,7 +229,9 @@ def test_ph_pre1970_day_survives_watermark(spark):
         for r in spark.table("ph_mon7").collect()
     }
     assert grid[("purchase", -1)] == (250, 1)
-    assert grid[("__batch watermark__", -1)] == (-1, 5)
+    # the batch id is a table property: no data row carries it
+    assert mon.last_batch_id() == 5
+    assert {et for et, _ in grid} == {"purchase"}
     rep = mon.report().collect()
     assert len(rep) == 1 and rep[0]["n_days"] == 2
     # replay of the same batch id stays a no-op

@@ -111,3 +111,28 @@ def test_full_readout_matches_oneshot_sf0001(spark, store):
             )
         )
     assert _spanset(store.spans()) == _spanset(_exact_dup_spans(corpus))
+
+
+def test_incremental_workload_builds_do_not_share_tables(spark):
+    """Two concurrent builds of the incremental workload on one session
+    each equal a lone build, and none leaves an index table behind."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from datanika_core_spark.workloads.text_dedup import (
+        dedup_exact_substring_incremental,
+    )
+
+    def build():
+        return sorted(
+            tuple(r) for r in dedup_exact_substring_incremental(spark, SF)
+            .collect()
+        )
+
+    lone = build()
+    with ThreadPoolExecutor(2) as pool:
+        both = [f.result() for f in [pool.submit(build) for _ in range(2)]]
+    assert both == [lone, lone]
+    assert [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("wl_es_index")
+    ] == []
