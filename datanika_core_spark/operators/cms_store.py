@@ -79,11 +79,6 @@ class CMSSketchStore:
             keys=["d", "bucket"], merge={"cnt": "sum"},
         )
 
-    def last_batch_id(self) -> int | None:
-        """The highest batch_id already merged, or None if the store is
-        fresh / was only ever updated without batch ids."""
-        return self.state.last_batch_id()
-
     def update(self, toks: DataFrame, batch_id: int | None = None) -> None:
         """Add-merge a batch's counters into the store. Order- and
         partitioning-independent (addition commutes); counter

@@ -34,12 +34,6 @@ from pyspark.sql import functions as F
 
 from datanika_core_spark.operators.merge_store import MergeStore
 
-#: Group name of the retired in-data watermark row. No row carries it
-#: any more (the batch id is a table property); kept so readers that
-#: still filter it out keep importing.
-WM_GRP = "__wm__"
-
-
 def batch_fingerprint(rows: DataFrame) -> DataFrame:
     """(grp, n_rows, fp) of one batch: ``rows`` must carry a ``grp``
     string column and an ``h`` BIGINT row-content hash (the shared
@@ -63,9 +57,6 @@ class FingerprintStore:
             self.spark, self.table, "grp string, n_rows bigint, fp bigint",
             keys=["grp"], merge={"n_rows": "sum", "fp": "bit_xor"},
         )
-
-    def last_batch_id(self) -> int | None:
-        return self.state.last_batch_id()
 
     def update(self, rows: DataFrame, batch_id: int | None = None) -> None:
         """Fold a batch's (grp, h) rows into the stored fingerprints.

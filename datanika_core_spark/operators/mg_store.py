@@ -116,9 +116,6 @@ class MGSketchStore:
         state = self.spark.createDataFrame(kept + [(None, us)], _SCHEMA)
         self.state.commit(state, batch_id)
 
-    def last_batch_id(self) -> int | None:
-        return self.state.last_batch_id()
-
     def heavy_hitters(self) -> DataFrame:
         """(tok, mg_est, max_undercount, rank) — every token whose
         true frequency exceeds max_undercount is guaranteed listed;

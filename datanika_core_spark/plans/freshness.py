@@ -46,7 +46,7 @@ def check_freshness(
 ) -> FreshnessResult:
     row = spark.table(table).agg(
         F.max(loaded_at_field).alias("m")
-    ).collect()[0]
+    ).collect()[0]  # bound: one aggregate row
     max_loaded = row["m"]
     if max_loaded is None:
         return FreshnessResult(table, None, None, "error")

@@ -133,5 +133,5 @@ class TestResult:
 def run_test(spark: SparkSession, table: str, column: str, test: str,
              params: Mapping[str, Any] | None = None) -> TestResult:
     sql = violation_sql(table, column, test, params)
-    n = spark.sql(sql).collect()[0]["violations"]
+    n = spark.sql(sql).collect()[0]["violations"]  # bound: one count row
     return TestResult(table, column, test, int(n))

@@ -32,6 +32,6 @@ def preview(spark: SparkSession, sql: str, limit: int = PREVIEW_LIMIT):
     cols = df.columns
     rows = [
         ["" if v is None else str(v) for v in row]
-        for row in df.collect()
+        for row in df.collect()  # bound: inject_limit caps the rows
     ]
     return cols, rows

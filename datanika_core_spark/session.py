@@ -239,12 +239,12 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 def bounded_collect(df: DataFrame, max_rows: int, what: str) -> list:
-    """``df.collect()`` for a frame the caller bounds by ``max_rows``
+    """Collect ``df``, a frame the caller bounds by ``max_rows``
     (a readout grid, a vocabulary). Collects ``limit(max_rows + 1)``,
     so a frame past its bound costs at most ``max_rows + 1`` rows on
     the driver and raises :class:`DriverCollectTooLarge` instead of
     an OOM."""
-    rows = df.limit(max_rows + 1).collect()
+    rows = df.limit(max_rows + 1).collect()  # bound: max_rows + 1
     if len(rows) > max_rows:
         raise DriverCollectTooLarge(
             f"{what}: more than {max_rows} rows reached a driver collect"

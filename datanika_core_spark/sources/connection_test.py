@@ -114,6 +114,7 @@ def test_connection(
     )
     sql = _PROBE_SQL.get(conn_type, "SELECT 1 AS one")
     try:
+        # bound: the probe selects one row
         src.query(sql).collect()  # forces a real driver connect+fetch
         return True, "Connected successfully"
     except Exception:  # noqa: BLE001 — reference masks the cause

@@ -58,6 +58,7 @@ from typing import Iterator, Mapping
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
 from datanika_core_spark.errors import UnsupportedOperation, ValidationError
+from datanika_core_spark.session import bounded_collect
 from datanika_core_spark.sources.base import TableBatch
 
 #: connection type → (jdbc subprotocol, default port)
@@ -72,6 +73,9 @@ JDBC_TYPES: Mapping[str, tuple[str, int | None]] = {
     # engine extension used for live integration tests.
     "derby": ("derby", None),
 }
+
+#: most table names one full-database listing brings to the driver
+MAX_LISTED_TABLES = 100_000
 
 #: catalog query returning one column of user table names, per dialect
 #: (the full-database mode's table enumeration; the reference gets this
@@ -198,7 +202,10 @@ class JdbcSource:
         sql = TABLE_LIST_SQL[self.conn_type].format(
             schema=source_schema or self.config.get("schema", "APP")
         )
-        return sorted(r[0] for r in self.query(sql).collect())
+        rows = bounded_collect(
+            self.query(sql), MAX_LISTED_TABLES, f"{self.conn_type} table list"
+        )
+        return sorted(r[0] for r in rows)
 
 
 @dataclass

@@ -7,86 +7,33 @@ micro-batch can fold into a persisted state table; the 95% CI is
 recomputed from the merged moments at any point of the stream and
 EQUALS the batch CI over everything absorbed so far.
 
-State: (priority, r, sw, swx) for the |groups|×R replicate moment
-grid plus r = -1 rows for the point-estimate moments (n, Σx), in a
+One kernel: ``absorb`` folds the batch workload's ``_bootstrap_grid``
+— (priority, r, sw, swx) for the |groups|×R replicate grid plus the
+unit-weight r = -1 point rows — into a
 :class:`~datanika_core_spark.operators.merge_store.MergeStore` whose
-batch-id watermark guards replay (counter addition is not idempotent
-— same replay discipline as the CMS/MG/DQ/collocation stores).
+batch-id watermark guards replay (counter addition is not
+idempotent); ``report()`` is the batch ``_bootstrap_report`` over the
+stored grid.
 
 Parity: tests/test_stream_bootstrap.py streams orders in two files
 and asserts ``report()`` EQUALS the batch workload over the
-concatenated table — exact equality, because every CI input is an
-integer moment that adds across any batch split and the CI itself is
-rank selection on exact BIGINT ratios.
+concatenated table.
 
-At 100 TB: each micro-batch contributes one map-side ×R explode
-collapsed by the combiner to |groups|×R rows; the state merge
+At 100 TB: each micro-batch contributes one map-side ×(R+1) explode
+collapsed by the combiner to |groups|×(R+1) rows; the state merge
 touches the same grid — stream volume never grows the state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from datanika_core_spark.operators.merge_store import MergeStore
 from datanika_core_spark.streaming.jobs import StreamStats, drain_files
 from datanika_core_spark.workloads.stats import (
-    _BS_C0,
-    _BS_C1,
-    _BS_C2,
-    _BS_C3,
-    _BS_DENOM,
-    _BS_HI_RANK,
-    _BS_LO_RANK,
-    _BS_R,
-    _spark_hash,
+    _bootstrap_grid,
+    _bootstrap_report,
 )
-
-
-def _batch_moments(batch: DataFrame) -> DataFrame:
-    """(priority, r, sw, swx) replicate moments + r = -1 point rows
-    for one micro-batch — weight derivation identical to the batch
-    workload."""
-    reps = batch.select(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderkey"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        F.explode(F.expr(f"sequence(0, {_BS_R - 1})")).alias("r"),
-    ).select(
-        "priority", "r", "cents",
-        (
-            F.expr(
-                _spark_hash(
-                    "concat('bs-', cast(o_orderkey as string), '-',"
-                    " cast(r as string))"
-                )
-            )
-            / F.lit(_BS_DENOM)
-        ).alias("u"),
-    )
-    weighted = reps.select(
-        "priority", "r", "cents",
-        F.when(F.col("u") < float(_BS_C0), 0)
-        .when(F.col("u") < float(_BS_C1), 1)
-        .when(F.col("u") < float(_BS_C2), 2)
-        .when(F.col("u") < float(_BS_C3), 3)
-        .otherwise(4)
-        .alias("w"),
-    )
-    rep = weighted.groupBy("priority", "r").agg(
-        F.sum("w").cast("bigint").alias("sw"),
-        F.sum(F.col("w") * F.col("cents")).cast("bigint").alias("swx"),
-    )
-    point = batch.groupBy(
-        F.col("o_orderpriority").alias("priority")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("sw"),
-        F.sum(
-            F.round(F.col("o_totalprice") * 100).cast("bigint")
-        ).cast("bigint").alias("swx"),
-    ).select("priority", F.lit(-1).alias("r"), "sw", "swx")
-    return rep.unionByName(point)
 
 
 class StreamBootstrapMonitor:
@@ -102,49 +49,12 @@ class StreamBootstrapMonitor:
             keys=["priority", "r"], merge={"sw": "sum", "swx": "sum"},
         )
 
-    def last_batch_id(self) -> int | None:
-        return self.state.last_batch_id()
-
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        self.state.absorb(_batch_moments(batch), batch_id)
+        self.state.absorb(_bootstrap_grid(batch), batch_id)
 
     def report(self) -> DataFrame:
-        """Identical shape + math to bootstrap_ci_poisson over
-        everything absorbed so far."""
-        state = self.state.rows()
-        rep_means = state.filter(F.col("r") >= 0).select(
-            "priority", "r",
-            (F.col("swx") * 1.0 / F.col("sw")).alias("m"),
-        )
-        wp = Window.partitionBy("priority").orderBy("m", "r")
-        ranked = rep_means.select(
-            "priority", "m", F.row_number().over(wp).alias("rn")
-        )
-        ci = ranked.groupBy("priority").agg(
-            F.max(
-                F.when(F.col("rn") == _BS_LO_RANK, F.col("m"))
-            ).alias("lo"),
-            F.max(
-                F.when(F.col("rn") == _BS_HI_RANK, F.col("m"))
-            ).alias("hi"),
-        )
-        pt = state.filter(F.col("r") == -1).select(
-            "priority", F.col("sw").alias("n"), F.col("swx").alias("s")
-        )
-        return (
-            pt.join(ci, "priority")
-            .select(
-                "priority",
-                F.col("n").alias("n_orders"),
-                F.round(F.col("s") * 1.0 / F.col("n") / 100.0, 4)
-                .alias("mean_value"),
-                F.round(F.col("lo") / 100.0, 4).alias("ci_lo"),
-                F.round(F.col("hi") / 100.0, 4).alias("ci_hi"),
-                F.round((F.col("hi") - F.col("lo")) / 100.0, 4)
-                .alias("ci_width"),
-            )
-            .orderBy("priority")
-        )
+        """bootstrap_ci_poisson over everything absorbed so far."""
+        return _bootstrap_report(self.state.rows())
 
 
 def stream_bootstrap_ci(

@@ -84,10 +84,6 @@ class StreamDQMonitor:
             keys=["check_name"], merge={"observed": "sum"},
         )
 
-    def last_batch_id(self) -> int | None:
-        """Highest batch_id whose counters are committed, or None."""
-        return self.state.last_batch_id()
-
     def reset(self) -> None:
         """Drop the counters and the key store."""
         self.state.reset()
@@ -185,7 +181,7 @@ def stream_dq_monitor(
         ),
         monitor.absorb,
         kind="dq", state_name=monitor.counters_table,
-        has_state=lambda: monitor.last_batch_id() is not None,
+        has_state=lambda: monitor.state.last_batch_id() is not None,
         reset_state=monitor.reset,
         refresh=(monitor.counters_table, monitor.keys_table),
         checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,

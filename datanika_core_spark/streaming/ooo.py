@@ -47,9 +47,6 @@ class StreamOOOMonitor:
             " high_water bigint",
         )
 
-    def last_batch_id(self) -> int | None:
-        return self.state.last_batch_id()
-
     def high_water(self) -> int | None:
         """Event-time high water (microseconds) reached so far."""
         # bound: one aggregate row

@@ -51,9 +51,6 @@ class StreamPageHinkleyMonitor:
             keys=["event_type", "day"], merge={"cents": "sum", "cnt": "sum"},
         )
 
-    def last_batch_id(self) -> int | None:
-        return self.state.last_batch_id()
-
     def absorb(self, batch: DataFrame, batch_id: int | None = None) -> None:
         delta = (
             batch.select(

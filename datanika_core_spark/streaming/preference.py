@@ -57,9 +57,6 @@ class StreamPreferenceStore:
             keys=["ok", "b"], merge={"q": "sum"},
         )
 
-    def last_batch_id(self) -> int | None:
-        return self.state.last_batch_id()
-
     def absorb(
         self, batch: DataFrame, batch_id: int | None = None
     ) -> None:

@@ -757,7 +757,7 @@ def attribution_shapley_coalitions(
     grows the lattice 2ⁿ but never touches the fact scan again; at
     10+ channels you'd sample permutations instead — the lattice
     form here is exact."""
-    grid_rows = _shapley_grid(spark, sf_dir).collect()  # ≤16 rows
+    grid_rows = _shapley_grid(spark, sf_dir).collect()  # bound: ≤16 rows
     n_by_mask = {int(r["m"]): int(r["n"]) for r in grid_rows}
     c_by_mask = {int(r["m"]): int(r["c"]) for r in grid_rows}
     nu = sum(n_by_mask.values())

@@ -938,7 +938,7 @@ def abc_part_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint")
         ).alias("rev_c")
     )
-    total = per_part.agg(F.sum("rev_c")).first()[0]
+    total = per_part.agg(F.sum("rev_c")).first()[0]  # bound: one aggregate row
     wcum = W.orderBy(F.col("rev_c").desc(), F.col("l_partkey")).rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
@@ -1368,11 +1368,12 @@ def join_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     nl, dok = li.agg(
         F.count(F.lit(1)).cast("bigint"),
         F.countDistinct("l_orderkey").cast("bigint"),
-    ).collect()[0]
+    ).collect()[0]  # bound: one aggregate row
     no, dck = o.agg(
         F.count(F.lit(1)).cast("bigint"),
         F.countDistinct("o_custkey").cast("bigint"),
-    ).collect()[0]
+    ).collect()[0]  # bound: one aggregate row
+    # bound: one aggregate row
     nc = c.agg(F.count(F.lit(1)).cast("bigint")).collect()[0][0]
     nl, dok, no, dck, nc = map(int, (nl, dok, no, dck, nc))
     e_lo = nl * no // max(dok, no)

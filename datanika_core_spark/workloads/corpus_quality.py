@@ -994,11 +994,16 @@ def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode a token array once) and two equi-joins of the bigram
     frame against the unigram counts; the top-k is over the
     support-filtered survivors."""
-    from pyspark.sql import Window as _W
+    return _colloc_report(_colloc_grid(t(spark, sf_dir, "documents")))
 
-    docs = t(spark, sf_dir, "documents")
+
+def _colloc_grid(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(kind, key, n): unigram (kind 'u') and adjacent-bigram (kind
+    'b') counts of the documents' tokens — additive across any split
+    of the documents, so the streaming twin (streaming/colloc.py)
+    folds it per micro-batch."""
     toklists = docs.select(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks")
+        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("toks")
     )
     uni = (
         toklists.select(F.explode("toks").alias("tok"))
@@ -1020,6 +1025,22 @@ def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(~F.col("bg").startswith(" ") & ~F.col("bg").endswith(" "))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).cast("bigint").alias("nxy"))
+    )
+    return uni.select(F.lit("u").alias("kind"), F.col("tok").alias("key"),
+                      "n").unionByName(
+        bg.select(F.lit("b").alias("kind"), F.col("bg").alias("key"),
+                  F.col("nxy").alias("n"))
+    )
+
+
+def _colloc_report(grid: DataFrame) -> DataFrame:
+    """The top-k PMI ranking from a (kind, key, n) grid — shared by
+    the batch workload and the streaming twin."""
+    uni = grid.filter(F.col("kind") == "u").select(
+        F.col("key").alias("tok"), "n"
+    )
+    bg = grid.filter(F.col("kind") == "b").select(
+        F.col("key").alias("bg"), F.col("n").alias("nxy")
     )
     tots = uni.agg(F.sum("n").cast("bigint").alias("nn")).crossJoin(
         bg.agg(F.sum("nxy").cast("bigint").alias("bb"))
@@ -1045,7 +1066,7 @@ def collocation_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = scored.withColumn(
         "rank",
         F.row_number().over(
-            _W.orderBy(F.col("ratio").desc(), "bg")
+            Window.orderBy(F.col("ratio").desc(), "bg")
         ).cast("bigint"),
     )
     return (

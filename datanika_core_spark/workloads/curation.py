@@ -1052,7 +1052,7 @@ def select_max_coverage_greedy(
             )
         top = gains.orderBy(
             F.col("gain").desc(), "doc_id"
-        ).limit(1).collect()[0]
+        ).limit(1).collect()[0]  # bound: limit(1)
         cum += int(top["gain"])
         picks.append((rank, int(top["doc_id"]), int(top["gain"]), cum))
         new_cov = ds.filter(F.col("doc_id") == int(top["doc_id"])) \
@@ -1414,8 +1414,8 @@ def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt_b = tok.filter(F.col("lang") == _DSIR_TARGET_LANG).groupBy("b").agg(
         F.count(F.lit(1)).cast("bigint").alias("ct")
     )
-    nr = raw_b.agg(F.sum("cr")).first()[0]
-    nt = tgt_b.agg(F.sum("ct")).first()[0] or 0
+    nr = raw_b.agg(F.sum("cr")).first()[0]  # bound: one aggregate row
+    nt = tgt_b.agg(F.sum("ct")).first()[0] or 0  # bound: one aggregate row
     lr = (
         raw_b.join(tgt_b, "b", "left")
         .select(

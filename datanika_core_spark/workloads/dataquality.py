@@ -336,16 +336,27 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy — the audit costs one scan regardless of table size,
     and composes per-partition (digit counts are additive, so the
     streaming twin is the DQ-monitor counter shape)."""
-    ev = t(spark, sf_dir, "events").filter(F.col("value") > 0)
-    dig = ev.select(
+    return _benford_report(_benford_grid(t(spark, sf_dir, "events")))
+
+
+def _benford_grid(events: DataFrame) -> DataFrame:
+    """(digit, n_obs) first-digit counts of the positive event values
+    — additive across any split of the rows, so the streaming twin
+    (streaming/audit.py) folds it per micro-batch."""
+    dig = events.filter(F.col("value") > 0).select(
         F.substring(
             F.round(F.col("value") * 100).cast("bigint").cast("string"),
             1, 1,
         ).cast("bigint").alias("digit")
     ).filter(F.col("digit") > 0)
-    obs = dig.groupBy("digit").agg(
+    return dig.groupBy("digit").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_obs")
     )
+
+
+def _benford_report(obs: DataFrame) -> DataFrame:
+    """The audit readout from a (digit, n_obs) grid — shared by the
+    batch workload and the streaming twin."""
     tot = obs.agg(F.sum("n_obs").cast("bigint").alias("n"))
     benford = F.lit(None).cast("double")
     for d, p in _BENFORD.items():

@@ -233,7 +233,7 @@ def _nc_centroids(spark: SparkSession, sf_dir: str) -> dict[int, list[float]]:
         .select("label", F.posexplode("v").alias("pos", "x"))
         .groupBy("label", "pos")
         .agg(F.round(F.avg("x"), _NC_ROUND).alias("m"))
-        .collect()
+        .collect()  # bound: |labels| x dim rows
     )
     cents: dict[int, dict[int, float]] = {}
     for r in rows:
@@ -482,6 +482,7 @@ def eval_auc_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arithmetic is integer counts and dyadic halves → bit-identical
     across engines before the 6-dp rounding.""".replace("{n}", str(_HB))
     labeled = _labeled(spark, sf_dir)
+    # bound: one aggregate row
     lo, hi = labeled.agg(F.min("z"), F.max("z")).first()
     binned = labeled.select(
         F.least(
@@ -744,30 +745,46 @@ def drift_ks_two_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     one windowed prefix sum over that (partitioned per type), one
     max — the same two-phase shape as the CUSUM and SPRT walks. The
     span probe (min/max day) is a metadata-cheap scalar scan."""
-    from pyspark.sql import Window as _W
+    return _ks_report(_ks_grid(t(spark, sf_dir, "events")))
 
-    ev = t(spark, sf_dir, "events").select(
+
+def _ks_grid(events: DataFrame, mid_day: int | None = None) -> DataFrame:
+    """(event_type, c, na, nb): per type and value in cents, the
+    counts before (na) and from (nb) epoch day ``mid_day`` — by
+    default the midpoint day of the frame's own span. With a fixed
+    ``mid_day`` the grid adds across any split of the rows, so the
+    streaming twin (streaming/audit.py) folds it per micro-batch."""
+    ev = events.select(
         "event_type",
         F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("d"),
         F.round(F.col("value") * 100).cast("bigint").alias("c"),
     )
-    span = ev.agg(
-        F.expr("(min(d) + max(d) + 1) div 2").alias("mid")
-    )
-    tagged = ev.crossJoin(span).select(
+    if mid_day is None:
+        ev = ev.crossJoin(
+            ev.agg(F.expr("(min(d) + max(d) + 1) div 2").alias("mid"))
+        )
+        mid = F.col("mid")
+    else:
+        mid = F.lit(mid_day)
+    tagged = ev.select(
         "event_type", "c",
-        F.when(F.col("d") < F.col("mid"), 0).otherwise(1).alias("p"),
+        F.when(F.col("d") < mid, 0).otherwise(1).alias("p"),
     )
-    by_val = tagged.groupBy("event_type", "c").agg(
+    return tagged.groupBy("event_type", "c").agg(
         F.sum(F.when(F.col("p") == 0, 1).otherwise(0))
         .cast("bigint").alias("na"),
         F.sum(F.when(F.col("p") == 1, 1).otherwise(0))
         .cast("bigint").alias("nb"),
     )
+
+
+def _ks_report(by_val: DataFrame) -> DataFrame:
+    """The drift readout from an (event_type, c, na, nb) grid —
+    shared by the batch workload and the streaming twin."""
     w = (
-        _W.partitionBy("event_type")
+        Window.partitionBy("event_type")
         .orderBy("c")
-        .rowsBetween(_W.unboundedPreceding, _W.currentRow)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = by_val.select(
         "event_type",

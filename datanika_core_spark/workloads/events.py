@@ -2223,6 +2223,7 @@ def survival_logrank_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ELSE CAST(0.0 AS DOUBLE) END AS v",
     )
     nu = {
+        # bound: 2 rows (pmod 2 groups)
         int(r["grp"]): int(r["n_users"]) for r in totals.collect()
     }
     agg = terms.agg(

@@ -349,7 +349,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL edge list gated on an eagerly-computed pair bound (an extra
     lineitem scan per call) — disappears along with its OOM ceiling.
     Measured at sf0.1 (3-rep medians, noop sink): 8.6 s → 5.3 s;
-    the eager `.first()` gate is gone so plan-only consumers no
+    the eager first-row gate is gone so plan-only consumers no
     longer execute a scan. Exactness pinned by the unchanged DuckDB
     oracle (wedge-based) and tests/test_triangle_methods.py.
 
@@ -2125,7 +2125,16 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == F.expr("(n + 1) div 4"))
         .select(F.greatest(F.expr("(d * 4) div 5"), F.lit(1)).alias("k"))
     )
-    k = int(kk.first()["k"])
+    schema = (
+        "round bigint, n_nodes bigint, n_edges bigint,"
+        " k bigint, converged bigint"
+    )
+    k_row = kk.first()  # bound: the filter keeps one rank
+    if k_row is None:
+        # < 3 graph nodes: rank (n+1) div 4 selects nothing — the
+        # oracle's kk CTE is empty, so its cross join returns no rows
+        return spark.createDataFrame([], schema)
+    k = int(k_row["k"])
     counts = [(0, d0.count(), e.count())]
     prev_nodes = counts[0][1]
     converged = 0
@@ -2145,9 +2154,7 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         if r < _KC_ROUNDS:
             prev_nodes = n_nodes
     out = spark.createDataFrame(
-        [(r, n, m, k, converged) for (r, n, m) in counts],
-        "round bigint, n_nodes bigint, n_edges bigint,"
-        " k bigint, converged bigint",
+        [(r, n, m, k, converged) for (r, n, m) in counts], schema
     )
     return out.orderBy("round")
 
@@ -2293,7 +2300,7 @@ def graph_coreness_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n"),
         )
         .filter(F.col("rn") == F.expr("(n + 1) div 4"))
-        .first()
+        .first()  # bound: the filter keeps one rank
     )
     if q1_row is None:
         # < 3 graph nodes: rank (n+1) div 4 selects nothing — the
@@ -2893,6 +2900,7 @@ def graph_ktruss_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup_of = _edge_support
 
     def n_tri(sup: DataFrame) -> int:
+        # bound: one aggregate row
         r = sup.agg(F.expr("sum(s) div 3").alias("t")).first()["t"]
         return int(r or 0)
 
@@ -2903,6 +2911,7 @@ def graph_ktruss_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # s_min from the round-0 support histogram (0-support edges
     # included via m0 minus the support rows), resolved driver-side
     hist = {int(r["s"]): int(r["c"]) for r in
+            # bound: one row per edge support value <= max degree
             sup.groupBy("s").agg(F.count(F.lit(1)).alias("c")).collect()}
     hist[0] = hist.get(0, 0) + (m0 - sum(hist.values()))
     target, cum, q1 = (m0 + 1) // 4, 0, 0

@@ -543,7 +543,7 @@ def pack_ffd_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(F.sum("n_chars").cast("bigint").alias("sz"))
-        .collect()
+        .collect()  # bound: one row per source
     )
     items = sorted(sizes, key=lambda r: (-r["sz"], r["source"]))
     if len(items) > _FFD_MAX_ITEMS:

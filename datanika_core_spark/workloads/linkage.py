@@ -849,7 +849,7 @@ def linkage_blocking_quality(
     p2_cand = (
         p2d.join(p2c, "blk")
         .agg(F.sum(F.col("n_d") * F.col("n_c")).alias("cand"))
-        .first()["cand"]
+        .first()["cand"]  # bound: one aggregate row
     )
     p2_cov = truth.filter(
         F.substring("dname", 1, 2) == F.substring("cname", 1, 2)

@@ -135,6 +135,7 @@ def model_incremental_merge_events(spark: SparkSession, sf_dir: str) -> DataFram
     (dbt_project.py:170-175). Final state == one batch over the full
     source, which is the oracle."""
     ev = t(spark, sf_dir, "events")
+    # bound: one aggregate row
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
     cutoff = (lo + (hi - lo) / 2).isoformat(sep=" ")
 

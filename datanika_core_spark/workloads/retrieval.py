@@ -304,6 +304,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_lex") <= _RRF_DEPTH)
     )
     vecs = _vectors(spark, sf_dir)
+    # bound: one vec_id
     qv = [float(x) for x in vecs.filter(F.col("vec_id") == 0).first().v]
     q_lit = "array(" + ", ".join(repr(x) + "d" for x in qv) + ")"
     cos = (

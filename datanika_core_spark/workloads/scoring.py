@@ -444,6 +444,7 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("c_corpus").desc(), "tok")
         .limit(_KL_VOCAB)
     )
+    # bound: one aggregate row
     corpus_n = vocab.agg(F.sum("c_corpus").alias("n")).collect()[0]["n"]
     src = (
         toks.join(vocab.select("tok"), "tok")

@@ -152,6 +152,7 @@ def semdedup_embedding_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     cents = {
         int(r.vec_id): list(r.v)
+        # bound: vec_id < _SD_K
         for r in vecs.filter(F.col("vec_id") < _SD_K).collect()
     }
     assigned = _sd_assign(vecs, cents)

@@ -171,6 +171,7 @@ def knn_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = _vectors(spark, sf_dir)
     qrows = sorted(
+        # bound: vec_id < _KNN_NQ
         vecs.filter(F.col("vec_id") < _KNN_NQ).select("vec_id", "v").collect(),
         key=lambda r: r.vec_id,
     )  # driver-side materialization of the BROADCAST side only (10 rows)
@@ -606,7 +607,7 @@ def _km_recompute(assigned: DataFrame) -> dict[int, list[float]]:
         assigned.select("cid", F.posexplode("v").alias("pos", "x"))
         .groupBy("cid", "pos")
         .agg(F.round(F.avg("x"), _KM_ROUND).alias("m"))
-        .collect()
+        .collect()  # bound: _KM_K x dim rows
     )
     cents: dict[int, dict[int, float]] = {}
     for r in rows:
@@ -668,6 +669,7 @@ def kmeans_lloyd_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     cents = {
         int(r.vec_id): list(r.v)
+        # bound: vec_id < _KM_K
         for r in vecs.filter(F.col("vec_id") < _KM_K).collect()
     }
     for _ in range(2):
@@ -2401,6 +2403,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     the textbook one-pass covariance sketch."""
     import math
 
+    # bound: _DIM gram rows
     gram_rows = _pca_gram_frame(spark, sf_dir).collect()
     G = {int(r["i"]): [int(r[f"g{j}"]) for j in range(_DIM)]
          for r in gram_rows}
@@ -2562,6 +2565,7 @@ def pca_top2_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     of an embedding store at 100 TB."""
     import math
 
+    # bound: _DIM gram rows
     gram_rows = _pca_gram_frame(spark, sf_dir).collect()
     G = {int(r["i"]): [int(r[f"g{j}"]) for j in range(_DIM)]
          for r in gram_rows}
@@ -2708,7 +2712,7 @@ def coreset_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datanika_core_spark.blocks import RollingCheckpoint
 
     roll = RollingCheckpoint(spark)
-    first = vecs.orderBy("vec_id").limit(1).collect()[0]
+    first = vecs.orderBy("vec_id").limit(1).collect()[0]  # bound: limit(1)
     centers = [(0, int(first["vec_id"]), 0)]
     c_arr = [int(x) for x in first["q"]]
 
@@ -2726,6 +2730,7 @@ def coreset_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     mind = roll(mind)
     for rank in range(1, _KC_K):
         nxt = (
+            # bound: limit(1)
             mind.orderBy(F.col("d").desc(), "vec_id").limit(1).collect()
         )[0]
         centers.append((rank, int(nxt["vec_id"]), int(nxt["d"])))
@@ -2735,6 +2740,7 @@ def coreset_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least(F.col("d"), F.expr(dist_expr(c_arr))).alias("d"),
         )
         mind = roll(mind)
+    # bound: one aggregate row
     radius = int(mind.agg(F.max("d")).collect()[0][0])
     roll.release()
     out = spark.createDataFrame(
@@ -3480,6 +3486,7 @@ def cluster_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     cents = {
         int(r.vec_id): list(r.v)
+        # bound: vec_id < _KM_K
         for r in vecs.filter(F.col("vec_id") < _KM_K).collect()
     }
     for _ in range(2):

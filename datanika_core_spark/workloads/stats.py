@@ -21,7 +21,7 @@ Determinism conventions (cross-engine hash parity):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datanika_core_spark.operators.minhash import (
@@ -152,7 +152,7 @@ def chi2_lang_source_independence(
     )
     lt = obs.groupBy("lang").agg(F.sum("o").alias("row_tot"))
     st = obs.groupBy("source").agg(F.sum("o").alias("col_tot"))
-    total = obs.agg(F.sum("o")).first()[0]
+    total = obs.agg(F.sum("o")).first()[0]  # bound: one aggregate row
     n_langs = lt.count()
     n_sources = st.count()
     cells = (
@@ -237,7 +237,7 @@ def mi_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lt = obs.groupBy("lang").agg(F.sum("o").alias("row_tot"))
     st = obs.groupBy("source").agg(F.sum("o").alias("col_tot"))
-    total = obs.agg(F.sum("o")).first()[0]
+    total = obs.agg(F.sum("o")).first()[0]  # bound: one aggregate row
     pmi = F.log(
         F.col("o") * F.lit(float(total))
         / (F.col("row_tot") * F.col("col_tot"))
@@ -357,7 +357,7 @@ def psi_event_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "percentile(v, array(0.1, 0.2, 0.3, 0.4, 0.5,"
             " 0.6, 0.7, 0.8, 0.9))"
         )
-    ).first()[0]]
+    ).first()[0]]  # bound: one aggregate row
     bs = F.array(*[F.lit(float(b)) for b in qs])
 
     def binned(df: DataFrame) -> DataFrame:
@@ -374,8 +374,8 @@ def psi_event_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans total: the decile sketch + one per half)
     b1 = binned(h1).cache()
     b2 = binned(h2).cache()
-    n1 = b1.agg(F.sum("c")).first()[0]
-    n2 = b2.agg(F.sum("c")).first()[0]
+    n1 = b1.agg(F.sum("c")).first()[0]  # bound: one aggregate row
+    n2 = b2.agg(F.sum("c")).first()[0]  # bound: one aggregate row
     bins = spark.range(0, 10).select(F.col("id").cast("int").alias("bin"))
     terms = (
         bins.join(b1, "bin", "left")
@@ -596,7 +596,7 @@ def corr_spearman_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xlo, xhi, ylo, yhi = base.agg(
         F.min("x"), F.max("x"), F.min("y"), F.max("y")
-    ).first()
+    ).first()  # bound: one aggregate row
 
     def bin_col(c, lo, hi):
         return F.least(
@@ -983,10 +983,22 @@ def abtest_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-day offset exactly like the two-phase global prefix sum);
     the decision extraction is a conditional-min aggregate, one
     combiner pass."""
-    from pyspark.sql import Window as _W
+    trials = _sprt_trials(t(spark, sf_dir, "events"))
+    w = Window.partitionBy("variant").orderBy("ts", "event_id")
+    walk = trials.select(
+        "variant",
+        F.row_number().over(w).alias("i"),
+        F.sum("s").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ).cast("bigint").alias("conv"),
+    )
+    return _sprt_report(_sprt_crossings(walk))
 
-    ev = t(spark, sf_dir, "events")
-    trials = ev.filter(F.col("event_type") == "purchase").select(
+
+def _sprt_trials(events: DataFrame) -> DataFrame:
+    """(variant, ts, event_id, s) purchase trials: the md5 A/B arm
+    and s = 1 for a converting purchase."""
+    return events.filter(F.col("event_type") == "purchase").select(
         F.expr(
             "pmod("
             + _spark_hash("concat('ab-', cast(user_id as string))")
@@ -996,32 +1008,35 @@ def abtest_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.when(F.col("value") > _SPRT_VALUE, 1).otherwise(0).alias("s"),
     )
-    w = (
-        _W.partitionBy("variant")
-        .orderBy("ts", "event_id")
-        .rowsBetween(_W.unboundedPreceding, _W.currentRow)
-    )
-    walk = trials.select(
-        "variant",
-        F.row_number().over(
-            _W.partitionBy("variant").orderBy("ts", "event_id")
-        ).alias("i"),
-        F.sum("s").over(w).cast("bigint").alias("conv"),
-    )
-    llr = walk.withColumn(
-        "llr",
-        F.col("conv") * F.lit(_SPRT_L1)
-        + (F.col("i") - F.col("conv")) * F.lit(_SPRT_L0),
-    )
-    agg = llr.groupBy("variant").agg(
+
+
+def _sprt_llr(n: str, conv: str) -> Column:
+    """LLR after ``n`` trials of which ``conv`` converted:
+    conv·L1 + (n − conv)·L0 — integers times two Python literals."""
+    return (F.col(conv) * F.lit(_SPRT_L1)
+            + (F.col(n) - F.col(conv)) * F.lit(_SPRT_L0))
+
+
+def _sprt_crossings(walk: DataFrame) -> DataFrame:
+    """(variant, n_trials, n_success, i_up, i_lo) of a (variant, i,
+    conv) walk: per arm the trial and conversion totals and the first
+    trial index whose LLR crossed each bound (null until crossed)."""
+    llr = walk.withColumn("llr", _sprt_llr("i", "conv"))
+    return llr.groupBy("variant").agg(
         F.max("i").cast("bigint").alias("n_trials"),
         F.max("conv").cast("bigint").alias("n_success"),
         F.min(F.when(F.col("llr") >= _SPRT_UP, F.col("i")))
         .cast("bigint").alias("i_up"),
         F.min(F.when(F.col("llr") <= _SPRT_LO, F.col("i")))
         .cast("bigint").alias("i_lo"),
-        F.max_by("llr", "i").alias("final_llr"),
     )
+
+
+def _sprt_report(arms: DataFrame) -> DataFrame:
+    """The per-arm decision from ``_sprt_crossings`` rows — shared by
+    the batch workload and the streaming twin (streaming/audit.py).
+    The final LLR is the LLR of the two totals: the walk's last
+    step."""
     decision = (
         F.when(F.col("i_up").isNull() & F.col("i_lo").isNull(),
                F.lit("continue"))
@@ -1032,11 +1047,11 @@ def abtest_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit("accept_h0"))
     )
-    return agg.select(
+    return arms.select(
         F.col("variant").alias("arm"),
         "n_trials",
         "n_success",
-        F.round("final_llr", 6).alias("final_llr"),
+        F.round(_sprt_llr("n_trials", "n_success"), 6).alias("final_llr"),
         decision.alias("decision"),
         F.least(
             F.coalesce(F.col("i_up"), F.col("i_lo")),
@@ -1218,10 +1233,14 @@ def abtest_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over that (value-ordered — at 100 TB range-partition by the
     value key), one scalar aggregate. Arms need not fit anywhere;
     nothing is per-row after the first groupBy."""
-    from pyspark.sql import Window as _W
+    return _mw_report(_mw_grid(t(spark, sf_dir, "events")))
 
-    ev = t(spark, sf_dir, "events")
-    trials = ev.filter(F.col("event_type") == "purchase").select(
+
+def _mw_grid(events: DataFrame) -> DataFrame:
+    """(c, na, cnt): per purchase value in cents, the arm-A count and
+    the total count — additive across any split of the rows, so the
+    streaming twin (streaming/audit.py) folds it per micro-batch."""
+    trials = events.filter(F.col("event_type") == "purchase").select(
         F.expr(
             "pmod("
             + _spark_hash("concat('ab-', cast(user_id as string))")
@@ -1229,12 +1248,18 @@ def abtest_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("variant"),
         F.round(F.col("value") * 100).cast("bigint").alias("c"),
     )
-    by_val = trials.groupBy("c").agg(
+    return trials.groupBy("c").agg(
         F.sum(F.when(F.col("variant") == 0, 1).otherwise(0))
         .cast("bigint").alias("na"),
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
     )
-    w = _W.orderBy("c").rowsBetween(_W.unboundedPreceding, -1)
+
+
+def _mw_report(by_val: DataFrame) -> DataFrame:
+    """The rank-sum test from a (c, na, cnt) grid — ranks recomputed
+    from the grid, shared by the batch workload and the streaming
+    twin."""
+    w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, -1)
     ranked = by_val.select(
         "na", "cnt",
         F.coalesce(F.sum("cnt").over(w), F.lit(0))
@@ -1637,56 +1662,72 @@ def bootstrap_ci_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes, no per-replicate shuffles: one map-side ×R explode (rows
     never leave their partition before the combiner), one shuffle to
     the |groups|×R grid, then order statistics on 64 rows per group.
-    R scales compute linearly but the shuffle stays grid-sized."""
-    ords = t(spark, sf_dir, "orders")
-    reps = ords.select(
+    R scales compute linearly but the shuffle stays grid-sized. The
+    point estimate rides in the same grid as replicate r = -1."""
+    return _bootstrap_report(_bootstrap_grid(t(spark, sf_dir, "orders")))
+
+
+def _bootstrap_grid(orders: DataFrame) -> DataFrame:
+    """(priority, r, sw, swx): per priority and replicate the Poisson
+    weight total Σw and weighted cents Σw·x. Replicate r = -1 weighs
+    every order 1, so its (sw, swx) is the point estimate's (n, Σx).
+    Every column adds across any split of the rows, so the streaming
+    twin (streaming/bootstrap.py) folds it per micro-batch."""
+    reps = orders.select(
         F.col("o_orderpriority").alias("priority"),
         F.col("o_orderkey"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        F.explode(F.expr(f"sequence(0, {_BS_R - 1})")).alias("r"),
+        F.explode(F.expr(f"sequence(-1, {_BS_R - 1})")).alias("r"),
     ).select(
         "priority", "r", "cents",
-        (
+        F.when(
+            F.col("r") >= 0,
             F.expr(
                 _spark_hash(
                     "concat('bs-', cast(o_orderkey as string), '-',"
                     " cast(r as string))"
                 )
             )
-            / F.lit(_BS_DENOM)
+            / F.lit(_BS_DENOM),
         ).alias("u"),
     )
     weighted = reps.select(
         "priority", "r", "cents",
-        F.when(F.col("u") < float(_BS_C0), 0)
+        F.when(F.col("r") < 0, 1)
+        .when(F.col("u") < float(_BS_C0), 0)
         .when(F.col("u") < float(_BS_C1), 1)
         .when(F.col("u") < float(_BS_C2), 2)
         .when(F.col("u") < float(_BS_C3), 3)
         .otherwise(4)
         .alias("w"),
     )
-    rep_means = weighted.groupBy("priority", "r").agg(
-        (F.sum(F.col("w") * F.col("cents")) * 1.0 / F.sum("w")).alias("m")
+    return weighted.groupBy("priority", "r").agg(
+        F.sum("w").cast("bigint").alias("sw"),
+        F.sum(F.col("w") * F.col("cents")).cast("bigint").alias("swx"),
     )
-    wp = Window.partitionBy("priority").orderBy("m", "r")
-    ranked = rep_means.select(
-        "priority", "m", F.row_number().over(wp).alias("rn")
+
+
+def _bootstrap_report(grid: DataFrame) -> DataFrame:
+    """The CI readout from a ``_bootstrap_grid`` — shared by the batch
+    workload and the streaming twin. One window over the grid ranks
+    the replicate means (r = -1 sorts after them); one aggregate
+    picks the two CI ranks and the point row."""
+    point = F.col("r") < 0
+    # a null priority has no CI row in the oracle's equi-join
+    m = grid.filter(F.col("priority").isNotNull()).select(
+        "priority", "r", "sw", "swx",
+        (F.col("swx") * 1.0 / F.col("sw")).alias("m"),
     )
+    wp = Window.partitionBy("priority").orderBy(point, "m", "r")
+    ranked = m.withColumn("rn", F.row_number().over(wp))
     ci = ranked.groupBy("priority").agg(
+        F.max(F.when(point, F.col("sw"))).alias("n"),
+        F.max(F.when(point, F.col("swx"))).alias("s"),
         F.max(F.when(F.col("rn") == _BS_LO_RANK, F.col("m"))).alias("lo"),
         F.max(F.when(F.col("rn") == _BS_HI_RANK, F.col("m"))).alias("hi"),
     )
-    pt = ords.groupBy(
-        F.col("o_orderpriority").alias("priority")
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(
-            F.round(F.col("o_totalprice") * 100).cast("bigint")
-        ).alias("s"),
-    )
     return (
-        pt.join(ci, "priority")
-        .select(
+        ci.select(
             "priority",
             F.col("n").alias("n_orders"),
             F.round(F.col("s") * 1.0 / F.col("n") / 100.0, 4)
@@ -3437,7 +3478,7 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lt = obs.groupBy("lang").agg(F.sum("o").alias("row_tot"))
     st = obs.groupBy("source").agg(F.sum("o").alias("col_tot"))
-    total = obs.agg(F.sum("o")).first()[0]
+    total = obs.agg(F.sum("o")).first()[0]  # bound: one aggregate row
     min_dim = min(lt.count(), st.count()) - 1
     cells = (
         lt.crossJoin(F.broadcast(st))  # bound: <= |source| rows

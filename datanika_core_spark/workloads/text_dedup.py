@@ -2208,7 +2208,7 @@ def dedup_exact_substring_incremental(
                 F.count_distinct("doc_id").alias("nd"),
                 F.count(F.lit(1)).alias("ns"),
                 F.sum(F.col("hi") - F.col("lo") + 1).alias("cov"),
-            ).first()
+            ).first()  # bound: one aggregate row
             out_rows.append(
                 (b, n_docs, int(r["nd"]), int(r["ns"]), int(r["cov"] or 0))
             )

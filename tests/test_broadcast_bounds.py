@@ -1,5 +1,5 @@
-"""Every static broadcast hint and every driver action in the state
-stores and streaming twins carries a written bound.
+"""Every static broadcast hint and every driver action in the package
+carries a written bound.
 
 Catalyst and AQE pick join strategies from size estimates; a hint
 overrides them, and a hint on a frame that grows with the data is a
@@ -8,9 +8,10 @@ on its own line or within the two lines above, naming why the hinted
 side cannot grow with the data (a fixed key domain, a sample rate, a
 top-k) or which plan changes without it. A driver action
 (``collect``/``first``/``take``/``head``/``toPandas``) pulls a frame
-into driver memory, so in ``streaming/`` and ``operators/`` it goes
-through ``session.bounded_collect`` or carries the same comment. No
-Spark session needed."""
+into driver memory, so it goes through ``session.bounded_collect``
+(where the size follows the data) or carries the same comment (a
+single-row aggregate, a limit, a fixed key domain). No Spark session
+needed."""
 
 from __future__ import annotations
 
@@ -45,8 +46,6 @@ def test_every_broadcast_hint_has_a_bound_comment():
 
 
 def test_every_state_driver_action_has_a_bound():
-    paths = [
-        p for sub in ("streaming", "operators")
-        for p in (PKG / sub).rglob("*.py")
-    ]
-    assert _unbounded(paths, _DRIVER_ACTION, "bounded_collect") == []
+    assert _unbounded(
+        PKG.rglob("*.py"), _DRIVER_ACTION, "bounded_collect"
+    ) == []

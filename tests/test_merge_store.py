@@ -8,10 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from datanika_core_spark.operators.fingerprint_store import (
-    WM_GRP,
-    FingerprintStore,
-)
+from datanika_core_spark.operators.fingerprint_store import FingerprintStore
 from datanika_core_spark.operators.merge_store import MergeStore
 
 SCHEMA = "k string, n bigint, fp bigint"
@@ -144,15 +141,15 @@ def test_row_keyed_like_a_retired_sentinel_is_data(spark):
     spark.sql("DROP TABLE IF EXISTS ms_fp_sentinel")
     fps = FingerprintStore(spark, "ms_fp_sentinel")
     rows = spark.createDataFrame(
-        [(WM_GRP, 11), (WM_GRP, 12), ("O", 13)], "grp string, h bigint"
+        [("__wm__", 11), ("__wm__", 12), ("O", 13)], "grp string, h bigint"
     )
     fps.update(rows, batch_id=0)
     fps.update(rows.filter(F.col("grp") == "O"), batch_id=1)
     got = {
         r["grp"]: (r["n_rows"], r["fp"]) for r in fps.fingerprints().collect()
     }
-    assert got == {WM_GRP: (2, 11 ^ 12), "O": (2, 0)}
-    assert fps.last_batch_id() == 1
+    assert got == {"__wm__": (2, 11 ^ 12), "O": (2, 0)}
+    assert fps.state.last_batch_id() == 1
 
 
 def test_unknown_merge_function_is_rejected(spark):

@@ -70,7 +70,7 @@ def test_mg_replay_is_skipped(spark):
     snap = sorted(tuple(r) for r in st.heavy_hitters().collect())
     st.update(_toks(docs), batch_id=0)  # redelivery — no-op
     assert sorted(tuple(r) for r in st.heavy_hitters().collect()) == snap
-    assert st.last_batch_id() == 0
+    assert st.state.last_batch_id() == 0
 
 
 def test_stream_mg_ingest(spark, tmp_path):

@@ -266,28 +266,45 @@ def test_lorenz_gini_hand_case(spark, tmp_path):
         assert r["gini"] == 0.25
 
 
-def test_coreness_ladder_degenerate_two_nodes(spark, tmp_path):
-    """< 3 graph nodes: the Q1 rank (n+1) div 4 selects nothing, so
-    every rung reports (NULL k, 0, 0, converged) — engine and oracle
-    must agree on the degenerate shape instead of the engine
-    crashing on the missing Q1 row."""
+def _two_node_graph(spark, tmp_path, name):
+    """(engine frame, oracle rows) of workload ``name`` over the
+    lineitem table (1,10),(1,20): one co-purchase edge, 2 nodes."""
+    import duckdb
+
     li = spark.createDataFrame(
         [(1, 10), (1, 20)], "l_orderkey long, l_partkey long"
     )
     _write(li, str(tmp_path), "lineitem")
-    wl = load_all()["graph_coreness_ladder"]
-    got = wl.fn(spark, str(tmp_path)).collect()
-    assert len(got) == 5
-    for r in got:
-        assert (r["k"], r["n_nodes"], r["n_edges"], r["converged"]) == (
-            None, 0, 0, 1
-        )
-    import duckdb
-
+    wl = load_all()[name]
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW lineitem AS SELECT * FROM "
         f"'{tmp_path}/lineitem.parquet/*.parquet'"
     )
-    oracle = con.execute(wl.oracle).fetchall()
+    return wl.fn(spark, str(tmp_path)), con.execute(wl.oracle).fetchall()
+
+
+def test_coreness_ladder_degenerate_two_nodes(spark, tmp_path):
+    """< 3 graph nodes: the Q1 rank (n+1) div 4 selects nothing, so
+    every rung reports (NULL k, 0, 0, converged) — engine and oracle
+    must agree on the degenerate shape instead of the engine
+    crashing on the missing Q1 row."""
+    df, oracle = _two_node_graph(spark, tmp_path, "graph_coreness_ladder")
+    got = df.collect()
+    assert len(got) == 5
+    for r in got:
+        assert (r["k"], r["n_nodes"], r["n_edges"], r["converged"]) == (
+            None, 0, 0, 1
+        )
     assert [tuple(r[1:]) for r in oracle] == [(None, 0, 0, 1)] * 5
+
+
+def test_kcore_degenerate_two_nodes(spark, tmp_path):
+    """< 3 graph nodes: the Q1 rank selects nothing, so the oracle's
+    K row is missing and its cross join yields 0 rows — the engine
+    must return the same empty typed frame instead of crashing on the
+    missing K row."""
+    df, oracle = _two_node_graph(spark, tmp_path, "graph_kcore_bounded")
+    assert df.columns == ["round", "n_nodes", "n_edges", "k", "converged"]
+    assert df.collect() == []
+    assert oracle == []

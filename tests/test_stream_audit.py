@@ -91,7 +91,7 @@ def test_stream_sprt_matches_batch(spark, tmp_path):
     # replay: same batch_id again is a no-op (walk state unchanged)
     mon.absorb(ev, batch_id=1)
     assert _rows(mon.report()) == got
-    assert mon.last_batch_id() == 1
+    assert mon.state.last_batch_id() == 1
     assert persistent_rdd_ids(spark) == set()
 
 

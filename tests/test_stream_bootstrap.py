@@ -78,4 +78,4 @@ def test_replayed_batch_is_skipped(spark):
         spark.table("t_bs_replay").orderBy("priority", "r")
     )
     assert before == after
-    assert mon.last_batch_id() == 0
+    assert mon.state.last_batch_id() == 0

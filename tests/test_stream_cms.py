@@ -116,10 +116,10 @@ def test_replayed_batch_id_is_skipped(spark):
     after_b1 = _counters(spark, "t_cms_replay")
     st.update(b1, batch_id=0)  # redelivery — must be a no-op
     assert _counters(spark, "t_cms_replay") == after_b1
-    assert st.last_batch_id() == 0
+    assert st.state.last_batch_id() == 0
     st.update(b2, batch_id=1)
     st.update(b2, batch_id=1)  # and again at the next batch
-    assert st.last_batch_id() == 1
+    assert st.state.last_batch_id() == 1
     whole = _store(spark, "t_cms_replay_whole")
     whole.update(_toks(docs))
     assert (

@@ -86,4 +86,4 @@ def test_replayed_batch_is_skipped(spark):
     mon.absorb(b1, batch_id=0)  # redelivery — must be a no-op
     after = _rows(spark.table("t_colloc_replay").orderBy("kind", "key"))
     assert before == after
-    assert mon.last_batch_id() == 0
+    assert mon.state.last_batch_id() == 0

@@ -110,7 +110,7 @@ def test_dq_absorb_replay_is_exactly_once(spark):
         r["check_name"]: r["observed"] for r in mon.report().collect()
     } == snap
     assert spark.table("dq_rp_keys").count() == nkeys
-    assert mon.last_batch_id() == 0
+    assert mon.state.last_batch_id() == 0
 
     # partial-crash window: keys of batch 1 landed but the counters
     # overwrite did not (watermark still 0) — the replay must count
@@ -127,6 +127,6 @@ def test_dq_absorb_replay_is_exactly_once(spark):
         whole.count() - whole.select("o_orderkey").distinct().count()
     )
     assert got["row_count"] == whole.count()
-    assert mon.last_batch_id() == 1
+    assert mon.state.last_batch_id() == 1
     # report() never leaks the sentinel
     assert "_batch_watermark" not in got

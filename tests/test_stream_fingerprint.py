@@ -108,9 +108,9 @@ def test_replayed_batch_id_is_skipped(spark):
     after_b1 = _fps(spark, "t_fp_replay")
     st.update(b1, batch_id=0)  # redelivery — must be a no-op
     assert _fps(spark, "t_fp_replay") == after_b1
-    assert st.last_batch_id() == 0
+    assert st.state.last_batch_id() == 0
     st.update(b2, batch_id=1)
-    assert st.last_batch_id() == 1
+    assert st.state.last_batch_id() == 1
     whole = _store(spark, "t_fp_replay_whole")
     whole.update(_rows(orders))
     assert _fps(spark, "t_fp_replay") == _fps(spark, "t_fp_replay_whole")
@@ -125,8 +125,6 @@ def test_incremental_retraction(spark):
     victim = orders.orderBy("o_orderkey").limit(7)
     # fold the victims' hashes back in with n_rows = -1 each
     retract = _rows(victim).withColumn("n", F.lit(-1))
-    from datanika_core_spark.operators.fingerprint_store import WM_GRP
-
     merged = (
         st.fingerprints()
         .unionByName(
@@ -152,4 +150,4 @@ def test_incremental_retraction(spark):
     # groups that lost all rows keep a (0, 0) tombstone in `got`
     got = {g: v for g, v in got.items() if v[0] > 0}
     assert got == want
-    assert WM_GRP not in got
+    assert "__wm__" not in got

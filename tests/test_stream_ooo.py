@@ -114,4 +114,4 @@ def test_replayed_batch_id_is_skipped(spark):
     }
     assert after == before
     assert mon.high_water() == hw
-    assert mon.last_batch_id() == 0
+    assert mon.state.last_batch_id() == 0

@@ -194,7 +194,7 @@ def test_ph_report_before_first_absorb_is_empty(spark):
     the first absorb — no AnalysisException on the missing table."""
     spark.sql("DROP TABLE IF EXISTS ph_mon_unused")
     mon = StreamPageHinkleyMonitor(spark, "ph_mon_unused")
-    assert mon.last_batch_id() is None
+    assert mon.state.last_batch_id() is None
     ph = mon.report()
     assert ph.count() == 0
     assert ph.columns == [
@@ -223,14 +223,14 @@ def test_ph_pre1970_day_survives_watermark(spark):
         " value double, props string",
     )
     mon.absorb(batch, batch_id=5)
-    assert mon.last_batch_id() == 5
+    assert mon.state.last_batch_id() == 5
     grid = {
         (r["event_type"], r["day"]): (r["cents"], r["cnt"])
         for r in spark.table("ph_mon7").collect()
     }
     assert grid[("purchase", -1)] == (250, 1)
     # the batch id is a table property: no data row carries it
-    assert mon.last_batch_id() == 5
+    assert mon.state.last_batch_id() == 5
     assert {et for et, _ in grid} == {"purchase"}
     rep = mon.report().collect()
     assert len(rep) == 1 and rep[0]["n_days"] == 2

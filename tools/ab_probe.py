@@ -8,8 +8,9 @@ Usage:
 
 Timing uses the noop sink (guide §1.4) so the computation is timed,
 not the output write; jobs are labelled (guide §1.5). Plans are
-tools/plan_audit.py's plan_text: the AQE-off static plan (runtime AQE
-can only improve on it).
+tools/plan_audit.py's plan_text (the AQE-off static plan; runtime AQE
+can only improve on it) passed through its normalise_plan, so dumps of
+two checkouts diff clean unless the plans differ.
 """
 
 from __future__ import annotations
@@ -49,7 +50,7 @@ def main() -> None:
     from datanika_core_spark.blocks import release_blocks
     from datanika_core_spark.session import build_spark
     from datanika_core_spark.workloads import load_all
-    from tools.plan_audit import aqe_off, plan_text
+    from tools.plan_audit import aqe_off, normalise_plan, plan_text
 
     spark = build_spark(app_name="ab_probe")
     registry = load_all()
@@ -63,7 +64,7 @@ def main() -> None:
         for n in names:
             with aqe_off(spark):
                 text = plan_text(registry[n].fn(spark, sf_dir))
-            (out / f"{n}_{suffix}.txt").write_text(text)
+            (out / f"{n}_{suffix}.txt").write_text(normalise_plan(text))
             release_blocks(spark)
             print(f"wrote {out / f'{n}_{suffix}.txt'}")
 

@@ -86,22 +86,58 @@ def nodes(root):
 
 
 @contextlib.contextmanager
-def aqe_off(spark):
-    key = "spark.sql.adaptive.enabled"
+def _conf(spark, key: str, value: str):
     old = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    spark.conf.set(key, value)
     try:
         yield
     finally:
         spark.conf.set(key, old)
 
 
+def aqe_off(spark):
+    return _conf(spark, "spark.sql.adaptive.enabled", "false")
+
+
 def plan_text(df) -> str:
-    """``df.explain("formatted")`` captured with AQE off."""
+    """``df.explain("formatted")`` captured with AQE off and scan
+    metadata (``DataFilters``, ``PushedFilters``, ``Location``)
+    printed in full instead of cut at the default 100 characters."""
     buf = io.StringIO()
-    with aqe_off(df.sparkSession), contextlib.redirect_stdout(buf):
+    spark = df.sparkSession
+    with aqe_off(spark), \
+            _conf(spark, "spark.sql.maxMetadataStringLength", "100000"), \
+            contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+#: build-specific tokens of a plan string and what they normalise to:
+#: expression ids, Connect plan ids, subexpression-elimination and
+#: lambda variable counters, JVM object hashes of folded literals, and
+#: observe()'s random metric name
+_PLAN_NOISE = (
+    (re.compile(r"#\d+L?"), ""),
+    (re.compile(r"@[0-9a-f]+\b"), "@N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+    (re.compile(r"\bx_\d+\b"), "x_N"),
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}"
+                r"-[0-9a-f]{12}"), "<uuid>"),
+)
+
+_CHECKOUT = str(Path(__file__).resolve().parent.parent)
+
+
+def normalise_plan(text: str) -> str:
+    """``text`` with every token that differs between two builds of
+    the same plan replaced (see ``_PLAN_NOISE``) and the checkout
+    path shown as ``<checkout>``, so plans of two checkouts diff
+    clean unless the plans differ."""
+    text = text.replace(_CHECKOUT, "<checkout>")
+    for pattern, repl in _PLAN_NOISE:
+        text = pattern.sub(repl, text)
+    return text
 
 
 def _cached_plan(node) -> str:
